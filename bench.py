@@ -16,7 +16,9 @@ import pathlib
 import re
 import shutil
 import sys
+import tempfile
 import time
+import traceback
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
@@ -72,6 +74,67 @@ HEADLINE = [
     "q_graph_copurchase_incr",  # monoid-merged incremental edge maintenance (r7)
     "q_tpch_q9",            # 5-way snowflake profit rollup: broadcast dims + ONE fact-fact shuffle (r9)
 ]
+
+
+def measure(errors: list[str], name: str, fn):
+    """Run one sub-measurement of the artifact. A failure comes back as the
+    block ``{"error": ...}`` (the rest of the artifact still emits) and is
+    appended to ``errors``, which the compact line carries."""
+    try:
+        return fn()
+    except Exception as e:  # noqa: BLE001 — artifact must still emit
+        traceback.print_exc(file=sys.stderr)
+        msg = f"{type(e).__name__}: {e}"
+        errors.append(f"{name}: {' '.join(msg.split())[:240]}")
+        return {"error": msg}
+
+
+def compact_line(
+    total: float,
+    sf: float,
+    timings: dict[str, float],
+    *,
+    raw: dict,
+    calibration: dict,
+    incr_fold: dict,
+    ingest_sec: float | None,
+    streaming: dict,
+    errors: list[str],
+) -> str:
+    """The compact final line: suite totals, every headline timing, the
+    streaming headline numbers and ``errors`` (empty unless a
+    sub-measurement failed), with minimal separators."""
+    compact: dict = {
+        "metric": "headline_suite_wall_seconds",
+        "value": total,
+        "unit": "sec",
+        "sf": sf,
+        "queries": timings,
+        "errors": errors,
+    }
+    if "value" in raw:
+        compact["raw_total_sec"] = raw["value"]
+    if "error" not in calibration:
+        compact["calibration"] = calibration
+    if "fold_sec" in incr_fold:
+        compact["incr_fold_sec"] = incr_fold["fold_sec"]
+    if ingest_sec is not None:
+        compact["ingest_sec"] = ingest_sec
+    if "value" in streaming:
+        compact["stream_wire_mb_s"] = streaming["value"]
+        compact["stream_events_s"] = streaming.get("events_per_sec")
+        mt = streaming.get("multi_topic")
+        if isinstance(mt, dict) and "value" in mt:
+            compact["multi_topic_mb_s"] = mt["value"]
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > 1900:  # never let the summary itself overflow the tail
+        compact["queries"] = {
+            k: v
+            for k, v in sorted(timings.items(), key=lambda kv: -kv[1])[:30]
+        }
+        compact["queries_truncated_to_top30_by_time"] = True
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
@@ -157,7 +220,7 @@ def main() -> None:
         cpu = _med(
             lambda: noop(
                 spark.range(100_000_000, numPartitions=64).selectExpr(
-                    "sum(xxhash64(id)) AS s"
+                    "bit_xor(xxhash64(id)) AS s"
                 )
             )
         )
@@ -182,10 +245,9 @@ def main() -> None:
             "total_sec": round(cpu + shuf + scan, 3),
         }
 
-    try:
-        calibration: dict | None = _calibration()
-    except Exception as e:  # noqa: BLE001 — anchor must never fail the bench
-        calibration = {"error": f"{type(e).__name__}: {e}"}
+    # every failed sub-measurement lands here and in the compact line
+    errors: list[str] = []
+    calibration = measure(errors, "calibration", _calibration)
 
     def timed_suite(data_dir: str) -> dict[str, float]:
         """best-of-3: per-query min over three timed rounds. The plan's
@@ -220,64 +282,49 @@ def main() -> None:
     # pass is kept as the SECONDARY pass for cross-round continuity: at
     # the r9->r10 switch, compare r10's "raw_secondary" against r9's
     # "primary" (both raw single-row-group) — SCALE.md §r10.
-    ingest_sec: float | None = None
-    ingest_error: str | None = None
-    cache = None
-    try:
-        import tempfile
-
+    def _ingest() -> tuple[str, float]:
         from cdc_worker_spark.sources.layout import ingest_sized
 
         cache = tempfile.mkdtemp(prefix="bench_ingest_")
         t0 = time.perf_counter()
-        ingest_sized(spark, sf_dir, cache)
-        ingest_sec = round(time.perf_counter() - t0, 3)
-    except Exception as e:  # noqa: BLE001 — artifact must still emit
-        ingest_error = f"{type(e).__name__}: {e}"
-        if cache is not None:  # don't leak a half-populated ingest dir
+        try:
+            ingest_sized(spark, sf_dir, cache)
+        except BaseException:  # don't leak a half-populated ingest dir
             shutil.rmtree(cache, ignore_errors=True)
-        cache = None
+            raise
+        return cache, round(time.perf_counter() - t0, 3)
 
-    if cache is not None:
+    ingest = measure(errors, "ingest", _ingest)
+    if isinstance(ingest, tuple):
+        cache, ingest_sec = ingest
         timings = timed_suite(cache)
         primary_layout = "engine sized-file ingest (ingest_sec excluded)"
     else:  # ingest failed: fall back loudly, never silently
+        cache, ingest_sec = None, None
         timings = timed_suite(sf_dir)
-        primary_layout = f"RAW FALLBACK — ingest failed: {ingest_error}"
+        primary_layout = f"RAW FALLBACK — ingest failed: {ingest['error']}"
 
     # secondary pass: raw driver fixtures, for r1-r9 continuity
-    raw: dict | None
-    try:
+    def _raw() -> dict:
         t2 = timed_suite(sf_dir) if cache is not None else dict(timings)
-        raw = {"value": round(sum(t2.values()), 3), "queries": t2}
-    except Exception as e:  # noqa: BLE001
-        raw = {"error": f"{type(e).__name__}: {e}"}
-    if cache is not None:
-        import shutil
+        return {"value": round(sum(t2.values()), 3), "queries": t2}
 
+    raw = measure(errors, "raw_secondary", _raw)
+    if cache is not None:
         shutil.rmtree(cache, ignore_errors=True)
 
     # streaming throughput rides along in the same artifact so the wire-MB/s
     # number (vs the reference's ~4 MB/s/worker envelope) is regression-
     # tracked per round, not just measured ad hoc. Failure is reported, not
     # fatal: the query timings are the primary contract.
-    streaming: dict | None
-    try:
-        from scripts.bench_streaming import run_bench as _stream_bench
+    from scripts import bench_streaming
 
-        streaming = _stream_bench(spark)
-    except Exception as e:  # noqa: BLE001 — artifact must still emit
-        streaming = {"error": f"{type(e).__name__}: {e}"}
+    streaming = measure(errors, "streaming", lambda: bench_streaming.run_bench(spark))
     # multi-topic scale-out evidence (VERDICT r05 next #3): aggregate MB/s
     # of the multiplexed pipeline over 6 concurrent topics
-    try:
-        from scripts.bench_streaming import multi_topic_bench as _mt_bench
-
-        if isinstance(streaming, dict):
-            streaming["multi_topic"] = _mt_bench(spark)
-    except Exception as e:  # noqa: BLE001 — artifact must still emit
-        if isinstance(streaming, dict):
-            streaming["multi_topic"] = {"error": f"{type(e).__name__}: {e}"}
+    streaming["multi_topic"] = measure(
+        errors, "multi_topic", lambda: bench_streaming.multi_topic_bench(spark)
+    )
 
     # r13 (ADVICE r12 medium): q_graph_copurchase_incr proves the monoid-merge
     # EQUIVALENCE (single-pass conditional-count form, hash-matched against
@@ -289,11 +336,7 @@ def main() -> None:
     # layout holds — its one-time cost reported separately, untimed work
     # happens fresh in THIS invocation, nothing persists across runs), then
     # the fold itself runs to a noop sink, best-of-3.
-    incr_fold: dict | None
-    base_dir = None
-    try:
-        import tempfile as _tf
-
+    def _incr_fold(base_dir: str) -> dict:
         from pyspark.sql import functions as F
 
         from cdc_worker_spark.operators.graph import copurchase_pair_counts
@@ -306,7 +349,6 @@ def main() -> None:
 
         li = load_table(spark, sf_dir, "lineitem")
         is_delta = F.pmod(F.col("l_orderkey"), F.lit(DELTA_MOD)) == DELTA_REM
-        base_dir = _tf.mkdtemp(prefix="bench_incr_base_")
         spark.sparkContext.setJobDescription("incr_fold: base-counts setup")
         t0 = time.perf_counter()
         copurchase_pair_counts(li.filter(~is_delta)).write.mode(
@@ -326,12 +368,11 @@ def main() -> None:
             if fold_sec is None or el < fold_sec:
                 fold_sec = el
         spark.sparkContext.setJobDescription(None)
-        incr_fold = {"fold_sec": fold_sec, "base_build_sec": base_build_sec}
-    except Exception as e:  # noqa: BLE001 — artifact must still emit
-        incr_fold = {"error": f"{type(e).__name__}: {e}"}
-    finally:
-        if base_dir is not None:
-            shutil.rmtree(base_dir, ignore_errors=True)
+        return {"fold_sec": fold_sec, "base_build_sec": base_build_sec}
+
+    base_dir = tempfile.mkdtemp(prefix="bench_incr_base_")
+    incr_fold = measure(errors, "incr_fold", lambda: _incr_fold(base_dir))
+    shutil.rmtree(base_dir, ignore_errors=True)
 
     total = round(sum(timings.values()), 3)
     print(
@@ -348,6 +389,7 @@ def main() -> None:
                 "raw_secondary": raw,
                 "streaming": streaming,
                 "incr_fold": incr_fold,
+                "errors": errors,
                 "notes": "best-of-3; ivf centroid training excluded "
                 "(memoized at warmup — build-once/probe-many by design); "
                 "r10+: PRIMARY pass runs on the engine's sized-file "
@@ -374,12 +416,11 @@ def main() -> None:
             },
             "raw_secondary": dict(
                 raw, layout="raw driver fixtures (single row group)"
-            )
-            if isinstance(raw, dict)
-            else raw,
+            ),
         },
         "streaming": streaming,
         "incr_fold": incr_fold,
+        "errors": errors,
         "notes": "best-of-3 per query; compare per-query times ONLY within "
         "the same pass label across rounds. r10 pass relabeling (VERDICT "
         "r09 next #6): 'primary' is now the sized-file ingested layout — "
@@ -414,35 +455,10 @@ def main() -> None:
     # "parsed": null). Emit a COMPACT summary as the FINAL line so the
     # official per-round record parses: suite totals + every headline
     # timing + the streaming headline numbers, minimal separators.
-    compact: dict = {
-        "metric": "headline_suite_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "queries": timings,
-    }
-    if isinstance(raw, dict) and "value" in raw:
-        compact["raw_total_sec"] = raw["value"]
-    if isinstance(calibration, dict) and "error" not in calibration:
-        compact["calibration"] = calibration
-    if isinstance(incr_fold, dict) and "fold_sec" in incr_fold:
-        compact["incr_fold_sec"] = incr_fold["fold_sec"]
-    if ingest_sec is not None:
-        compact["ingest_sec"] = ingest_sec
-    if isinstance(streaming, dict) and "value" in streaming:
-        compact["stream_wire_mb_s"] = streaming["value"]
-        compact["stream_events_s"] = streaming.get("events_per_sec")
-        mt = streaming.get("multi_topic")
-        if isinstance(mt, dict) and "value" in mt:
-            compact["multi_topic_mb_s"] = mt["value"]
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # never let the summary itself overflow the tail
-        compact["queries"] = {
-            k: v
-            for k, v in sorted(timings.items(), key=lambda kv: -kv[1])[:30]
-        }
-        compact["queries_truncated_to_top30_by_time"] = True
-        line = json.dumps(compact, separators=(",", ":"))
+    line = compact_line(
+        total, sf, timings, raw=raw, calibration=calibration, incr_fold=incr_fold,
+        ingest_sec=ingest_sec, streaming=streaming, errors=errors,
+    )
     print(line)
     spark.stop()
 

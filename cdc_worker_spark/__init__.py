@@ -14,8 +14,8 @@ latest-wins upsert. This package re-expresses that surface Spark-first:
                    similarity search, text analysis, multimodal)
 - ``plans``      : the query registry wiring every operator to its declared
                    query name and DuckDB oracle SQL (driver contract)
-- ``streaming``  : Structured Streaming pipeline (watermarked dedup,
-                   foreachBatch latest-wins merge, DLQ, checkpoint restart)
+- ``streaming``  : Structured Streaming pipeline (foreachBatch latest-wins
+                   merge, DLQ, checkpoint restart)
 """
 
 __version__ = "0.1.0"

@@ -1,5 +1,5 @@
 """Structured Streaming pipeline (SURVEY §7 M3): file-source CDC stream ->
-decode/enrich -> watermarked dedup -> foreachBatch latest-wins merge + DLQ.
+decode/enrich -> foreachBatch latest-wins merge + DLQ, with no state operator.
 
 Reference mapping:
 - A1-A4 source presets  : ``startingOffsets``/checkpoint restore; here a file
@@ -8,17 +8,18 @@ Reference mapping:
 - A5 flow control       : ``maxFilesPerTrigger`` (declarative backpressure vs
   the reference's 100-event fetch batches, client.js:49).
 - D1/D2 upsert/delete   : latest-wins MERGE per record key in foreachBatch.
-- D4 dedup              : dropDuplicatesWithinWatermark on replay_id.
-- D7/O5 ordered apply   : within-batch ordering by (commit_ts, replay_id)
-  window before the merge — sort within key, not global.
+- D4 dedup              : no state operator — the merge is idempotent in
+  (commit_ts, replay_id); dead letters dedup on replay_id.
+- D7/O5 ordered apply   : per-key ordering by (commit_ts, replay_id) in the
+  merge's window — sort within key, not global.
 - C4/D10 DLQ            : corrupt payloads appended to a failures table;
   the stream continues.
 
 State storage: a key-hash-BUCKETED manifest-versioned parquet table (an
 explicit, dependency-free stand-in for a Delta/Iceberg MERGE target — the
 production swap-in is ``MERGE INTO state USING batch ON key``). Each merge
-rewrites ONLY the buckets touched by the batch — per-batch cost is
-O(touched buckets), not O(|state|) — and DELETEs are retained as tombstone
+rewrites ONLY the buckets touched by the batch (a batch over many keys
+touches them all: ROADMAP D8), and DELETEs are retained as tombstone
 rows (filtered out of the live view, garbage-collected past the retention
 horizon) so a late out-of-order pre-delete event cannot resurrect a deleted
 record.
@@ -78,8 +79,9 @@ class LatestWinsState:
     maps each bucket to the version directory holding its latest data, so a
     merge that touches 1 bucket writes 1 bucket and repoints 1 manifest
     entry; untouched buckets keep serving their old files (the same
-    copy-on-write shape as a Delta/Iceberg transaction log). Stored rows
-    INCLUDE DELETE tombstones; :meth:`read` is the live view.
+    copy-on-write shape as a Delta/Iceberg transaction log; a batch over many
+    keys touches them all: ROADMAP D8). Stored rows INCLUDE DELETE
+    tombstones; :meth:`read` is the live view.
     """
 
     path: str
@@ -204,9 +206,9 @@ class LatestWinsState:
         return removed
 
     def write_buckets(self, df: DataFrame, touched: list[int]) -> None:
-        """Commit ``df`` (rows of exactly the ``touched`` buckets) as a new
-        version: write those bucket partitions, repoint their manifest
-        entries, leave every other bucket untouched."""
+        """Commit ``df`` (rows of exactly the ``touched`` buckets, with their
+        ``_bucket`` column) as a new version: write those bucket partitions,
+        repoint their manifest entries, leave every other bucket untouched."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             # layout mismatch mid-commit means bucket_col()/read_full already
@@ -219,8 +221,7 @@ class LatestWinsState:
             )
         v = manifest["version"] + 1
         (
-            df.withColumn("_bucket", self.bucket_col())
-            .write.mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(os.path.join(self.path, f"v{v}"))
         )
@@ -239,15 +240,6 @@ class LatestWinsState:
         self._write_manifest(manifest)
 
 
-def _latest_per_key(df: DataFrame) -> DataFrame:
-    """D7 ordered apply collapsed to its effect: the latest row per record key
-    by (commit_ts, replay_id) — sort within key, never a global sort."""
-    w = Window.partitionBy("entity", "record_id").orderBy(
-        F.col("commit_ts").desc(), F.col("replay_id").desc()
-    )
-    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-
-
 def merge_latest_wins(
     state: LatestWinsState,
     batch_df: DataFrame,
@@ -259,13 +251,15 @@ def merge_latest_wins(
     cannot change the outcome (latest-wins is monotone in (commit_ts,
     replay_id)) — including for deleted keys, because the DELETE row stays in
     the store as a tombstone carrying its (commit_ts, replay_id). A late
-    out-of-order pre-delete UPDATE (legitimate within the watermark; dedup
-    only catches exact replay-id redelivery) loses to the tombstone instead
-    of resurrecting the record.
+    out-of-order pre-delete UPDATE loses to the tombstone instead of
+    resurrecting the record. Rows tied on (commit_ts, replay_id) but not on
+    content resolve by a row hash, whatever the batch split or arrival order.
 
-    Incremental: only the key-hash buckets present in the batch are read,
-    merged, and rewritten — O(touched buckets) per trigger, not O(|state|)
-    (reference semantics are per-record upsert, design doc:670-676).
+    One exchange: the batch and the touched buckets' stored rows are hash-
+    partitioned on ``_bucket``, which already satisfies the per-key window,
+    so each task ranks and writes whole buckets (one file per bucket). Only
+    touched buckets are rewritten, but a batch over many keys touches them
+    all, so cost still grows with |state| (ROADMAP D8).
 
     Tombstone GC: tombstones older than ``tombstone_retention_hours`` behind
     the batch's max event time are dropped (deterministic event-time horizon
@@ -274,23 +268,24 @@ def merge_latest_wins(
     """
     spark = batch_df.sparkSession
     state.sync_layout()  # stored layout wins BEFORE any bucket hashing
-    batch_latest = _latest_per_key(batch_df).withColumn(
-        "_bucket", state.bucket_col()
-    )
     # one tiny driver-side agg: which buckets does this batch touch, and the
     # batch's max event time (the GC horizon anchor) — <= n_buckets values
-    stats = batch_latest.agg(
-        F.collect_set("_bucket").alias("buckets"), F.max("commit_ts").alias("max_ts")
+    stats = batch_df.agg(
+        F.collect_set(state.bucket_col()).alias("buckets"),
+        F.max("commit_ts").alias("max_ts"),
     ).collect()[0]
     touched = sorted(stats.buckets or [])
     if not touched:
         return
-    batch_latest = batch_latest.drop("_bucket")
     existing = state.read_full(spark, buckets=touched)
+    rows = batch_df if existing is None else batch_df.unionByName(existing)
+    w = Window.partitionBy("_bucket", "entity", "record_id").orderBy(
+        F.desc("commit_ts"), F.desc("replay_id"), F.xxhash64(*batch_df.columns).desc()
+    )
     merged = (
-        batch_latest
-        if existing is None
-        else _latest_per_key(existing.unionByName(batch_latest))
+        rows.withColumn("_bucket", state.bucket_col())
+        .repartition(state.n_buckets, "_bucket")
+        .withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
     )
     if tombstone_retention_hours is not None and stats.max_ts is not None:
         horizon = F.lit(stats.max_ts) - F.expr(
@@ -358,7 +353,6 @@ def run_cdc_pipeline(
     state_dir: str,
     dlq_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
     max_files_per_trigger: int | None = 1,
     available_now: bool = True,
     start_after_replay_id: int | None = None,
@@ -368,10 +362,11 @@ def run_cdc_pipeline(
     the backlog then stops; drop it for a continuous trigger).
 
     Flow: stream -> decode (one native projection) -> [A3 offset filter] ->
-    DLQ split -> watermark + dropDuplicatesWithinWatermark on replay_id (D4)
-    -> foreachBatch merge (D1). ``codec`` selects the payload wire format
-    (json | avro | avro_py — the reference's actual Avro wire, A8); every
-    stage downstream of the decode is codec-identical.
+    foreachBatch: DLQ split, deduplicated on replay_id (D4) + latest-wins
+    merge (D1), which absorbs redelivery without a state operator. ``codec``
+    selects the payload wire format (json | avro | avro_py — the reference's
+    actual Avro wire, A8); every stage downstream of the decode is codec-
+    identical.
     """
     decoded = decode_envelope(
         read_event_stream(spark, input_dir, max_files_per_trigger, codec=codec),
@@ -401,10 +396,16 @@ def run_cdc_pipeline(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            # C4/D10: corrupt events to the dead-letter table, stream continues
+            # C4/D10: corrupt events to the dead-letter table, stream goes
+            # on; one row per replay id, also when the batch is replayed
+            # after a kill between this append and the checkpoint commit
+            # (a NULL id matches no earlier row: at most one per batch)
+            dead = batch_df.filter("is_corrupt").dropDuplicates(["replay_id"])
+            if os.path.isdir(dlq_dir):
+                seen = spark.read.schema("replay_id DECIMAL(20,0)").parquet(dlq_dir)
+                dead = dead.join(seen, "replay_id", "left_anti")
             (
-                batch_df.filter("is_corrupt")
-                .select(
+                dead.select(
                     "replay_id",
                     F.col("schema_id"),
                     F.col("raw_payload"),
@@ -421,11 +422,8 @@ def run_cdc_pipeline(
         finally:
             batch_df.unpersist()
 
-    stream = (
-        decoded.withWatermark("commit_ts", watermark)
-        .dropDuplicatesWithinWatermark(["replay_id"])
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    stream = decoded.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
     )
     if available_now:
         stream = stream.trigger(availableNow=True)

@@ -23,8 +23,8 @@ Design (the same shapes the rest of the streaming layer uses):
   (asserted in tests/test_streaming_scd2.py).
 
 Ordering: events are assumed watermark-ordered across batches per entity
-(the pipeline's dedup/watermark stage upstream guarantees this); within a
-batch any order is fine — the collapse sorts by (ts_ms, event_id).
+(the feeding stream must guarantee this); within a batch any order is fine
+— the collapse sorts by (ts_ms, event_id).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Streaming throughput bench: wire-form envelopes through the FULL pipeline
-(decode projection -> watermark dedup -> incremental bucketed latest-wins
-merge + DLQ) under availableNow, reporting events/s and wire MB/s.
+(decode projection -> one-shuffle incremental bucketed latest-wins merge +
+DLQ, no stream-state dedup) under availableNow, reporting events/s and wire MB/s.
 
 The reference's only published number is ~4 MB/s sustained CDC per worker
 (design doc:158); this measures the Spark engine's single-box equivalent on

@@ -95,9 +95,8 @@ def test_stateful_counters_under_rocksdb(spark, rocksdb, stream, tmp_path):
 
 
 def test_streaming_dedup_under_rocksdb(spark, rocksdb, tmp_path):
-    """dropDuplicatesWithinWatermark's dedup state (the D4 replay guard in
-    run_cdc_pipeline) behaves identically on RocksDB: an exact replay of
-    replay_id 1 in a later batch is dropped."""
+    """dropDuplicatesWithinWatermark's dedup state behaves identically on
+    RocksDB: an exact replay of replay_id 1 in a later batch is dropped."""
     write_batch_file(
         str(tmp_path / "in"), "b1.jsonl",
         [make_envelope(1, record_id="A", commit_ts=T0 + 1 * MIN),

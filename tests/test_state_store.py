@@ -1,15 +1,16 @@
 """LatestWinsState tests: DELETE tombstones (a late out-of-order pre-delete
-event must not resurrect a deleted key — dropDuplicatesWithinWatermark only
-catches exact replay-id redelivery, so the state store itself must keep the
-delete's (commit_ts, replay_id) to win the comparison), event-time tombstone
-GC, and incremental bucketed merge (a batch touching 1 bucket rewrites 1
-bucket, not the whole store — reference semantics are per-record upsert,
-design doc:670-676)."""
+event must not resurrect a deleted key — it is not a replay-id redelivery,
+so the state store itself must keep the delete's (commit_ts, replay_id) to
+win the comparison), event-time tombstone GC, incremental bucketed merge (a
+batch touching 1 bucket rewrites 1 bucket, not the whole store — reference
+semantics are per-record upsert, design doc:670-676), and the merge's plan
+shape (one shuffle, one file per rewritten bucket)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 from decimal import Decimal
 
 from pyspark.sql import functions as F
@@ -108,6 +109,56 @@ def test_incremental_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(got) == 40
     assert got["K3"].payload == "new" and int(got["K3"].replay_id) == 1000
     assert got["K7"].payload == "v7"  # untouched bucket rows intact
+
+
+def test_merge_plans_one_shuffle_and_writes_one_file_per_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """The batch and the touched buckets' stored rows meet in ONE shuffle
+    (hash on ``_bucket`` satisfies the per-key window), so each task writes
+    whole buckets: one parquet file per rewritten bucket directory. The
+    merge's tiny touched-bucket stats aggregate is a separate query and is
+    not counted."""
+    root = str(tmp_path / "state")
+    state = LatestWinsState(root, n_buckets=8)
+    merge_latest_wins(
+        state, batch(spark, [(i, i, f"K{i}", "CREATE", f"v{i}") for i in range(40)])
+    )
+
+    plans = []
+    write = LatestWinsState.write_buckets
+
+    def capture(self, df, touched):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        write(self, df, touched)
+
+    monkeypatch.setattr(LatestWinsState, "write_buckets", capture)
+    # without coalescing, a shuffle keyed on anything finer than _bucket
+    # would spread one bucket over several tasks and so several files
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        merge_latest_wins(
+            state,
+            batch(spark, [(1000 + i, 100 + i, f"K{i}", "UPDATE", "u") for i in range(0, 40, 3)]),
+        )
+    finally:
+        spark.conf.set(coalesce, prev)
+
+    assert len(plans) == 1
+    # ShuffleExchangeExec prints as "Exchange"; BroadcastExchange is not a shuffle
+    shuffles = re.findall(r"(?<![A-Za-z])Exchange (\w+\([^)]*\))", plans[0])
+    assert len(shuffles) == 1, plans[0]
+    assert re.fullmatch(r"hashpartitioning\(_bucket#\d+L?, 8\)", shuffles[0]), shuffles
+    v = state._manifest()["version"]
+    bucket_dirs = [d for d in os.listdir(os.path.join(root, f"v{v}")) if d.startswith("_bucket=")]
+    assert len(bucket_dirs) > 1
+    for d in bucket_dirs:
+        files = os.listdir(os.path.join(root, f"v{v}", d))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, (d, files)
+    got = live(spark, state)
+    assert len(got) == 40 and got["K3"].payload == "u" and got["K4"].payload == "v4"
 
 
 def test_touched_bucket_merge_is_latest_wins_within_bucket(spark, tmp_path):

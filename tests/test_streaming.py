@@ -11,7 +11,6 @@ import os
 import pytest
 
 from cdc_worker_spark.streaming import LatestWinsState, run_cdc_pipeline
-from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 
 from tests.test_cdc_event_model import make_envelope
 
@@ -113,10 +112,10 @@ def test_checkpoint_restart_resumes_without_loss_or_dup(spark, dirs):
 
 
 def test_late_predelete_does_not_resurrect(spark, dirs):
-    """A late out-of-order UPDATE that pre-dates an applied DELETE (legal
-    within the watermark; not an exact-replay-id redelivery) must NOT bring
-    the record back — the DELETE tombstone keeps its (commit_ts, replay_id)
-    and wins the latest-per-key comparison."""
+    """A late out-of-order UPDATE that pre-dates an applied DELETE (not an
+    exact-replay-id redelivery) must NOT bring the record back — the DELETE
+    tombstone keeps its (commit_ts, replay_id) and wins the latest-per-key
+    comparison."""
     t0 = 1696444513000
     write_batch_file(dirs["input"], "b1.jsonl", [
         make_envelope(100, record_id="A", change_type="CREATE", commit_ts=t0),
@@ -130,39 +129,6 @@ def test_late_predelete_does_not_resurrect(spark, dirs):
     ])
     run_drain(spark, dirs)
     assert read_state(spark, dirs) == {}
-
-
-def test_dedup_within_watermark(spark, tmp_path):
-    """D4: dropDuplicatesWithinWatermark on replay_id removes redeliveries
-    before they reach the sink (observed via an in-batch collector)."""
-    input_dir = str(tmp_path / "in")
-    t0 = 1696444513000
-    write_batch_file(
-        input_dir, "b1.jsonl",
-        [
-            make_envelope(300, record_id="A", commit_ts=t0),
-            make_envelope(300, record_id="A", commit_ts=t0),  # duplicate in-batch
-            make_envelope(301, record_id="B", commit_ts=t0 + 1),
-        ],
-    )
-    from cdc_worker_spark.streaming.pipeline import read_event_stream
-
-    seen: list[int] = []
-
-    def collect_batch(df, _bid):
-        seen.extend(int(r.replay_id) for r in df.select("replay_id").collect())
-
-    q = (
-        decode_envelope(read_event_stream(spark, input_dir, max_files_per_trigger=None))
-        .withWatermark("commit_ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["replay_id"])
-        .writeStream.foreachBatch(collect_batch)
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(seen) == [300, 301]
 
 
 def test_ordered_apply_within_batch(spark, dirs):
@@ -260,3 +226,75 @@ def test_avro_wire_pipeline_end_to_end(spark, dirs):
     dlq = spark.read.parquet(dirs["dlq"]).collect()
     assert len(dlq) == 1 and int(dlq[0].replay_id) == 104
     assert "avro_py decode failed" in dlq[0].error
+
+
+def dlq_ids(spark, dirs):
+    return sorted(int(r.replay_id) for r in spark.read.parquet(dirs["dlq"]).collect())
+
+
+def test_corrupt_redelivered_in_later_batch_dead_letters_once(spark, dirs):
+    """A corrupt payload redelivered in a later batch (and twice within that
+    batch) leaves exactly one DLQ row: dead letters dedup on replay_id
+    against the batch and the existing DLQ."""
+    t0 = 1696444513000
+    write_batch_file(dirs["input"], "b1.jsonl", [
+        make_envelope(600, record_id="A", commit_ts=t0),
+        make_envelope(601, corrupt=True),
+    ])
+    write_batch_file(dirs["input"], "b2.jsonl", [
+        make_envelope(601, corrupt=True),
+        make_envelope(601, corrupt=True),
+        make_envelope(602, record_id="B", commit_ts=t0 + 1),
+    ])
+    run_drain(spark, dirs)
+    assert set(read_state(spark, dirs)) == {"A", "B"}
+    assert dlq_ids(spark, dirs) == [601]
+
+
+def test_replayed_batch_after_restart_no_duplicate_dlq(spark, dirs):
+    """A kill between the DLQ append and the checkpoint commit replays the
+    batch on restart (simulated by deleting its commit file): the replay
+    re-runs the merge but appends no dead letter twice and leaves the live
+    state unchanged."""
+    t0 = 1696444513000
+    write_batch_file(dirs["input"], "b1.jsonl", [
+        make_envelope(700, record_id="A", change_type="CREATE", commit_ts=t0),
+        make_envelope(701, record_id="A", change_type="UPDATE", commit_ts=t0 + 1,
+                      city="Lima"),
+        make_envelope(702, record_id="B", change_type="CREATE", commit_ts=t0 + 2),
+        make_envelope(703, corrupt=True),
+    ])
+    run_drain(spark, dirs)
+    before = read_state(spark, dirs)
+    version = LatestWinsState(dirs["state"])._manifest()["version"]
+
+    commits = os.path.join(dirs["chk"], "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    run_drain(spark, dirs)
+
+    assert LatestWinsState(dirs["state"])._manifest()["version"] == version + 1
+    assert read_state(spark, dirs) == before
+    assert int(before["A"].replay_id) == 701
+    assert dlq_ids(spark, dirs) == [703]
+
+
+def test_same_replay_id_different_content_is_deterministic(spark, tmp_path):
+    """Two events sharing (commit_ts, replay_id) but differing in content
+    resolve by the merge's row-hash tiebreak: the same live row whether they
+    arrive in one batch or in two, in either arrival order."""
+    t0 = 1696444513000
+    x = make_envelope(800, record_id="A", commit_ts=t0, city="Xi'an")
+    y = make_envelope(800, record_id="A", commit_ts=t0, city="York")
+    winners = set()
+    for run, batches in enumerate(([[x, y]], [[y, x]], [[x], [y]], [[y], [x]])):
+        d = {k: str(tmp_path / str(run) / k) for k in ("input", "state", "dlq", "chk")}
+        for i, events in enumerate(batches):
+            write_batch_file(d["input"], f"b{i}.jsonl", events)
+        run_drain(spark, d)
+        state = read_state(spark, d)
+        assert set(state) == {"A"} and int(state["A"].replay_id) == 800
+        winners.add(state["A"].event.BillingAddress.City)
+    assert len(winners) == 1 and winners <= {"Xi'an", "York"}

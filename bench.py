@@ -15,6 +15,7 @@ import os
 import pathlib
 import re
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -59,7 +60,7 @@ HEADLINE = [
     "q_cdc_scd2",           # 3-window gaps-and-islands, one exchange (r5)
     "q_basket_pairs",       # co-partitioned basket self-join (r5)
     "q_multimodal_decode_jpeg",  # Arrow-batched transform-coding decode (r5)
-    "q_graph_pagerank",     # 10-iteration broadcast-state power method (r5)
+    "q_graph_pagerank",     # 10-iteration N-scaled power method (r5)
     "q_graph_pagerank_directed",  # dangling-mass PageRank on a sink-heavy graph (r6)
     "q_tpch_q8",            # 8-table snowflake, conditional-sum market share (r6)
     "q_tpch_q18",           # single-shuffle large-volume-customer agg (r6)
@@ -87,6 +88,26 @@ def measure(errors: list[str], name: str, fn):
         msg = f"{type(e).__name__}: {e}"
         errors.append(f"{name}: {' '.join(msg.split())[:240]}")
         return {"error": msg}
+
+
+def round_stamp(here: str) -> str | None:
+    """Stamp of the per-round full artifact ``BENCH_full_<stamp>.json``:
+    ``r<NN>`` from ``SPARK_GRAFT_ROUND`` (``14`` or ``r14``), else
+    ``g<short sha>`` of the checkout's git HEAD, else None (no stamped
+    copy). Never inferred from the ``BENCH_r*.json`` files present: a
+    second run after a round's tail record exists (an 8-core scaling run,
+    say) would stamp itself as the next round."""
+    m = re.fullmatch(r"r?(\d+)", os.environ.get("SPARK_GRAFT_ROUND", "").strip())
+    if m:
+        return f"r{int(m.group(1)):02d}"
+    try:
+        sha = subprocess.run(
+            ["git", "-C", here, "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, check=True, timeout=10,
+        ).stdout.strip()
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return f"g{sha}" if sha else None
 
 
 def compact_line(
@@ -432,22 +453,14 @@ def main() -> None:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "BENCH_full_latest.json"), "w") as f:
             json.dump(full_art, f, indent=2)
-        # per-round stamp (VERDICT r08 missing #5): the driver writes
-        # BENCH_r{N}.json AFTER the round, so the round in progress is
-        # max(existing N) + 1 — committed as BENCH_full_r{N}.json so
-        # SURVEY's per-query delta citations point at a tracked file.
-        import re as _re
-
-        rounds = [
-            int(m.group(1))
-            for fn in os.listdir(here)
-            if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 1
-        with open(
-            os.path.join(here, f"BENCH_full_r{rnd:02d}.json"), "w"
-        ) as f:
-            json.dump(full_art, f, indent=2)
+        # per-round copy, committed so per-query delta citations point
+        # at a tracked file
+        stamp = round_stamp(here)
+        if stamp is not None:
+            with open(
+                os.path.join(here, f"BENCH_full_{stamp}.json"), "w"
+            ) as f:
+                json.dump(full_art, f, indent=2)
     except OSError:
         pass  # a read-only checkout must not fail the bench
     # the driver records only the last ~2000 chars of output and parses the

@@ -106,7 +106,8 @@ def basket_pair_array(
     unsigned bits — TPC-H partkeys reach 2e7 at sf100 and 2e8 at sf1000,
     both far under 2^32 — and since r13 the domain is ENFORCED in the
     expression itself (assert_true: an out-of-domain key fails the task
-    with a named error instead of silently corrupting the pair)."""
+    with a named error instead of silently corrupting the pair). A NULL
+    key yields no pair, as in the struct form."""
     c = F.col(parts) if isinstance(parts, str) else parts
     pred = (lambda x, y: x != y) if directed else (lambda x, y: x < y)
     if packed:
@@ -116,6 +117,8 @@ def basket_pair_array(
         # guard holds (so the packed value flows unchanged) and fails the
         # task with this message when it does not; in-domain plans/results
         # are bit-identical, the guard is two codegen comparisons per pair.
+        # A NULL key passes the guard (assert_true would raise on the NULL
+        # comparison) and its NULL pair is dropped by the filter below.
         def pair(x: Column, y: Column) -> Column:  # noqa: E731
             xl, yl = x.cast("long"), y.cast("long")
             in_dom = (
@@ -123,7 +126,7 @@ def basket_pair_array(
                 & (yl >= 0) & (yl < F.lit(1 << 32))
             )
             guard = F.assert_true(
-                in_dom,
+                in_dom | x.isNull() | y.isNull(),
                 F.lit(
                     "basket_pair_array(packed=True): item key outside"
                     " [0, 2^32) would corrupt the packed pair"

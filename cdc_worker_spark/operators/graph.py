@@ -143,66 +143,80 @@ _PR_DAMPING = 0.85
 _PR_ITERS = 10
 
 
-def pagerank(edges: DataFrame, damping: float = _PR_DAMPING, iters: int = _PR_ITERS) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list (src, dst) —
-    Brin & Page 1998, power iteration form.
-
-    Scale design: the edge derivation runs ONCE and is checkpointed for
-    reuse every iteration (deriving anything from the un-checkpointed
-    frames would re-run edge generation inside every iteration). Each
-    iteration is one src-keyed equi join + one dst-keyed sum — the
-    standard distributed power-iteration shape, and the whole 10-step
-    chain pipelines as ONE Spark action (a broadcast-the-ranks variant
-    was measured SLOWER at every tested scale: 10 sequential broadcast
-    collects = 10 driver round-trips, ~0.5 s each, vs chained exchanges
-    of an O(nodes) rank table). Ranks checkpoint every 5 rounds so the
-    plan stays O(1) like :func:`cc_star`; at web scale the edge table is
-    bucketed by src so only rank state moves per iteration
-    (:func:`pagerank_bucketed` is that layout, written). Dangling nodes
-    are absent by construction for symmetric graphs; for general graphs
-    callers add the dangling mass term. Fixed iteration count (not
-    convergence) keeps the result engine-reproducible.
-
-    r12 optimization (guide §2.3/§2.4 + §1.2): the iteration-invariant
-    contribution table (src, dst, deg) is built in ONE src-keyed pass — a
-    window count over src replaces the former groupBy + join-back, which
-    cost a second edge-scale exchange plus a join — and the three eager
-    parquet checkpoints (edges, deg, contrib_edges: each a write job + a
-    read-back) collapse into one :func:`lazy_spill_checkpoint` that
-    materializes inside the consuming action. Measured at sf0.1 (best-of-4
-    interleaved): 6.3 s -> 5.2 s, ranks bit-equal at 9dp. The window's
-    per-src buffering spills via ExternalAppendOnlyUnsafeRowArray, so a
-    hot src degrades to disk, never OOM."""
+def _with_out_degree(edges: DataFrame) -> DataFrame:
+    """(src, dst, deg): every edge carries its src's out-degree, from ONE
+    src-keyed window pass (no groupBy + join-back)."""
     from pyspark.sql import Window
 
-    contrib_edges = lazy_spill_checkpoint(
-        edges.withColumn(
-            "deg", F.count("*").over(Window.partitionBy("src")).cast("double")
-        )
+    return edges.withColumn(
+        "deg", F.count("*").over(Window.partitionBy("src")).cast("double")
     )
-    # one row per src; first() is exact here (deg is constant within src)
-    deg = contrib_edges.groupBy("src").agg(F.first("deg").alias("deg"))
-    n_nodes = deg.agg(F.count("*").cast("double").alias("n"))
-    ranks = (
-        deg.crossJoin(F.broadcast(n_nodes))
-        .select(F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("rank"))
+
+
+def _power_iterate(
+    contrib_edges: DataFrame, checkpoint, damping: float, iters: int
+) -> DataFrame:
+    """The N-scaled power iteration over a (src, dst, deg) contribution
+    table, shared by both edge layouts: ``r' = (1-d) + d·Σ r(src)/deg(src)``
+    from a uniform start rank of 1.0. Step 1 is folded (with r = 1 it is
+    one dst-keyed sum of 1/deg: no join, no start-rank table), and
+    ``checkpoint`` truncates the rank lineage every 5 steps."""
+    if iters < 1:
+        raise ValueError(f"pagerank needs iters >= 1, got {iters}")
+    ranks = contrib_edges.groupBy(F.col("dst").alias("node")).agg(
+        (1.0 - damping + damping * F.sum(1.0 / F.col("deg"))).alias("rank")
     )
-    for i in range(iters):
+    for i in range(1, iters):
         ranks = (
             contrib_edges.join(ranks, contrib_edges["src"] == ranks["node"])
             .groupBy(F.col("dst").alias("_dst"))
             .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            .crossJoin(F.broadcast(n_nodes))
             .select(
                 F.col("_dst").alias("node"),
-                (
-                    (1.0 - damping) / F.col("n") + damping * F.col("contrib")
-                ).alias("rank"),
+                (1.0 - damping + damping * F.col("contrib")).alias("rank"),
             )
         )
         if (i + 1) % 5 == 0:
-            ranks = lazy_spill_checkpoint(ranks, tag="pr-ranks")
+            ranks = checkpoint(ranks)
     return ranks
+
+
+def pagerank(edges: DataFrame, damping: float = _PR_DAMPING, iters: int = _PR_ITERS) -> DataFrame:
+    """Fixed-iteration PageRank over a directed edge list (src, dst) —
+    Brin & Page 1998, power iteration form.
+
+    Returns (node, rank) with N-SCALED ranks: each node starts at 1.0 and
+    each step computes ``r' = (1-d) + d·Σ r(src)/deg(src)``, so the ranks
+    sum to N (mean 1). Callers that want probabilities divide by the node
+    count. Nothing in the loop needs N, so there is no node-count stage,
+    no broadcast and no per-iteration cross join; and with a uniform start
+    the first step folds into one dst-keyed sum of 1/deg over the
+    contribution table (see :func:`_power_iterate`). Measured in
+    q_graph_pagerank at sf0.01: 28 -> 21 Spark jobs.
+
+    Scale design: the contribution table (src, dst, deg) is built ONCE in
+    a src-keyed window pass and goes through one
+    :func:`lazy_spill_checkpoint` that materializes inside the consuming
+    action, so every iteration reuses it instead of re-running the edge
+    derivation. Each later iteration is one src-keyed equi join + one
+    dst-keyed sum, and the whole chain pipelines as ONE Spark action (a
+    broadcast-the-ranks variant was measured SLOWER: 10 sequential
+    broadcast collects = 10 driver round-trips). Ranks checkpoint every 5
+    rounds so the plan stays O(1) like :func:`cc_star`; at web scale the
+    edge table is bucketed by src so only rank state moves per iteration
+    (:func:`pagerank_bucketed`). The window's per-src buffering spills via
+    ExternalAppendOnlyUnsafeRowArray, so a hot src degrades to disk, never
+    OOM. Only nodes with an in-edge get a rank, and rank leaks through
+    nodes without out-edges; neither happens on a symmetric graph, and
+    general graphs need :func:`pagerank_general`. Fixed iteration count
+    (not convergence) keeps the result engine-reproducible."""
+    contrib_edges = lazy_spill_checkpoint(_with_out_degree(edges))
+    return _power_iterate(
+        contrib_edges,
+        lambda r: lazy_spill_checkpoint(r, tag="pr-ranks"),
+        damping,
+        iters,
+    )
 
 
 def pagerank_general(
@@ -235,13 +249,7 @@ def pagerank_general(
     materializes exactly once inside the one timed action. Measured at
     sf0.1: 5.20 s -> 4.76 s best-of-4 interleaved (and the cold first run
     16.7 s -> 6.8 s), ranks bit-equal at 9dp."""
-    from pyspark.sql import Window
-
-    contrib_edges = lazy_spill_checkpoint(
-        edges.withColumn(
-            "deg", F.count("*").over(Window.partitionBy("src")).cast("double")
-        )
-    )
+    contrib_edges = lazy_spill_checkpoint(_with_out_degree(edges))
     deg = contrib_edges.groupBy("src").agg(F.first("deg").alias("deg"))
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -305,7 +313,9 @@ def pagerank_bucketed(
 ) -> DataFrame:
     """:func:`pagerank` against a MATERIALIZED src-bucketed edge layout —
     the written form of the docstring promise "at web scale the edge table
-    is bucketed by src so only rank state moves" (VERDICT r05 next #4).
+    is bucketed by src so only rank state moves". Same N-scaled contract
+    and the same iteration loop (:func:`_power_iterate`) as
+    :func:`pagerank`, so the two are bit-equal on the same edges.
 
     The iteration-invariant contribution table (src, dst, deg) is written
     ONCE via ``bucketBy(n_buckets, src)`` + ``sortBy(src)``; every
@@ -328,34 +338,13 @@ def pagerank_bucketed(
 
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    deg = edges.groupBy("src").agg(F.count("*").cast("double").alias("deg"))
-    write_bucketed(
-        edges.join(deg, "src"), table_name, "src", n_buckets, path=path
+    write_bucketed(_with_out_degree(edges), table_name, "src", n_buckets, path=path)
+    return _power_iterate(
+        spark.table(table_name),
+        lambda r: disk_checkpoint(r, "prb-ranks"),
+        damping,
+        iters,
     )
-    ce = spark.table(table_name)
-    # degrees/nodes re-derived FROM the bucketed table: groupBy(src) reuses
-    # the bucket partitioning, so even setup adds no edge-side exchange
-    bdeg = ce.groupBy("src").agg(F.first("deg").alias("deg"))
-    n_nodes = bdeg.agg(F.count("*").cast("double").alias("n"))
-    ranks = bdeg.crossJoin(F.broadcast(n_nodes)).select(
-        F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    for i in range(iters):
-        ranks = (
-            ce.join(ranks, ce["src"] == ranks["node"])
-            .groupBy(F.col("dst").alias("_dst"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                F.col("_dst").alias("node"),
-                (
-                    (1.0 - damping) / F.col("n") + damping * F.col("contrib")
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % 5 == 0:
-            ranks = disk_checkpoint(ranks, "prb-ranks")
-    return ranks
 
 
 def copurchase_pair_counts(li: DataFrame) -> DataFrame:
@@ -509,22 +498,18 @@ def _register_queries() -> None:
         purchase network'. ORACLE-CHECKED, unlike the usual rows-only fate
         of iterative algorithms: the fixed iteration count makes the result
         a pure function of the edge list, and the oracle unrolls the same
-        10 steps as chained SQL CTEs. Emitted ranks are rescaled by N so
-        6-dp rounding sits ~1e7 above cross-engine FP noise."""
+        10 steps as chained SQL CTEs. :func:`pagerank` already returns
+        N-scaled ranks (mean 1), which the oracle's normalized ranks match
+        after its ``rank * N``; 6-dp rounding sits ~1e7 above
+        cross-engine FP noise, and no node count is needed here."""
         from cdc_worker_spark.sources.tables import load_table
 
         li = load_table(spark, sf_dir, "lineitem")
         edges = copurchase_pair_counts(li).filter(F.col("w") >= 2).select(
             "src", "dst"
         )
-        ranks = pagerank(edges)
-        # N from the (checkpointed) rank table — one row per node — NOT
-        # from the raw edges plan: counting there would re-run the whole
-        # pair-expansion derivation a second time (measured: the sf10
-        # query was ~2x its iteration+derive cost before this)
-        n_nodes = ranks.agg(F.count("*").cast("double").alias("n"))
-        return ranks.crossJoin(F.broadcast(n_nodes)).select(
-            "node", F.round(F.col("rank") * F.col("n"), 6).alias("rank_scaled")
+        return pagerank(edges).select(
+            "node", F.round("rank", 6).alias("rank_scaled")
         )
 
     @query("q_graph_pagerank_directed", oracle=_pagerank_directed_oracle())

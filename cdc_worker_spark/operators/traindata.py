@@ -191,9 +191,12 @@ def pq_assign_udf(cents_per_sub: list, sub_w: int, dim: int):
     the distances are bit-identical to the multipass form (same
     |x|²+|c|²-2xc expansion, same float64 BLAS shapes — asserted in
     tests/test_traindata.py::test_pq_codes_fused_equals_multipass_form).
-    NULL / wrong-length vectors keep the multipass semantics exactly:
-    codes NULL (array_position over a NULL distance array), sq_err 0.0
-    (greatest(NULL, 0.0) in the old JVM fold)."""
+    A vector whose length is not ``dim`` (NULL included) is unassignable
+    as a whole: all codes NULL and sq_err 0.0, even when its length
+    still fills whole subspaces (e.g. 32 at dim 64) — no partial codes
+    from a vector outside the codebook's space, and no part in training
+    the codebooks. The multipass form in :func:`pq_codes` applies the
+    same rule."""
     import numpy as np
     import pandas as pd
 
@@ -242,7 +245,8 @@ def pq_codes(
     """Product-quantize ``emb`` (must carry dv): per subspace j, Lloyd-train
     K centroids on the dim/m-wide slice, assign the nearest codeword, and
     carry the squared quantization error. Adds columns code_0..code_{m-1}
-    (int) and sq_err (double, sum of per-subspace residuals).
+    (int) and sq_err (double, sum of per-subspace residuals); a vector
+    whose length is not the corpus dim gets NULL codes and sq_err 0.0.
 
     Scale design: training reuses :func:`kmeans_centroids_cached` (sampled
     Lloyd — O(k·dim) driver state, vectors never collect); assignment is a
@@ -262,10 +266,14 @@ def pq_codes(
     if dim == 0 or dim % m != 0:
         raise ValueError(f"PQ needs dim % m == 0, got dim={dim}, m={m}")
     sub_w = dim // m  # fixture: 64/4 = 16
+    # wrong-length vectors are unassignable (pq_assign_udf): they get no
+    # code and train no codebook
+    ok = F.size("dv") == dim
+    train = emb.filter(ok)
     cents_per_sub = []
     for j in range(m):
         sub_col = F.slice("dv", j * sub_w + 1, sub_w)
-        sub = emb.select("vec_id", sub_col.alias("dv")).withColumn(
+        sub = train.select("vec_id", sub_col.alias("dv")).withColumn(
             "nrm", dot_col(F.col("dv"), F.col("dv"))
         )
         cents_per_sub.append(
@@ -299,14 +307,16 @@ def pq_codes(
     for j in range(m):
         d = F.col(f"_d{j}")
         code_cols.append(
-            (F.array_position(d, F.array_min(d)) - 1)
+            F.when(ok, F.array_position(d, F.array_min(d)) - 1)
             .cast("int")
             .alias(f"code_{j}")
         )
         # the |x|^2+|c|^2-2xc expansion can go epsilon-negative at exact hits
         err_total = err_total + F.greatest(F.array_min(d), F.lit(0.0))
     return out.select(
-        "*", *code_cols, err_total.alias("sq_err")
+        "*",
+        *code_cols,
+        F.when(ok, err_total).otherwise(0.0).alias("sq_err"),
     ).drop(*[f"_d{j}" for j in range(m)])
 
 

@@ -739,13 +739,10 @@ def check_pagerank_bucketed_dual(ctx, df):
     )
     tmp = tempfile.mkdtemp(prefix="inv_prb_")
     try:
-        ranks_b = pagerank_bucketed(
+        # pagerank_bucketed's ranks are N-scaled already, like rank_scaled
+        scaled_b = pagerank_bucketed(
             ctx.spark, edges, "inv_prb_edges", f"{tmp}/edges"
-        )
-        n_nodes = ranks_b.agg(F.count("*").cast("double").alias("n"))
-        scaled_b = ranks_b.crossJoin(F.broadcast(n_nodes)).select(
-            "node", F.round(F.col("rank") * F.col("n"), 6).alias("rank_scaled")
-        )
+        ).select("node", F.round("rank", 6).alias("rank_scaled"))
         j = df.alias("p").join(scaled_b.alias("b"), "node", "full")
         r = _one(
             j.agg(

@@ -48,3 +48,28 @@ def test_clean_run_has_empty_errors_and_long_messages_are_clipped():
     block = bench.measure(errors, "raw_secondary", long_failure)
     assert len(block["error"]) > 5000  # the full artifact keeps the whole text
     assert len(errors) == 1 and len(errors[0]) <= len("raw_secondary: ") + 240
+
+
+def test_round_stamp_from_env_then_git_never_from_file_count(tmp_path, monkeypatch):
+    import subprocess
+
+    # a directory full of tail records does not move the stamp
+    for n in (1, 2, 13):
+        (tmp_path / f"BENCH_r{n:02d}.json").write_text("{}")
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
+    assert bench.round_stamp(str(tmp_path)) == "r07"
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "r14")
+    assert bench.round_stamp(str(tmp_path)) == "r14"
+
+    # no round given: the short sha of the checkout's HEAD, or no stamp
+    monkeypatch.delenv("SPARK_GRAFT_ROUND")
+    monkeypatch.setenv("GIT_CEILING_DIRECTORIES", str(tmp_path.parent))
+    assert bench.round_stamp(str(tmp_path)) is None
+    git = ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@t"]
+    subprocess.run([*git, "init", "-q"], check=True)
+    subprocess.run([*git, "commit", "-q", "--allow-empty", "-m", "x"], check=True)
+    sha = subprocess.run(
+        [*git, "rev-parse", "--short", "HEAD"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert bench.round_stamp(str(tmp_path)) == f"g{sha}"

@@ -393,3 +393,27 @@ def test_basket_pair_array_packed_matches_struct_form(spark):
             .collect()
         )
         assert structs == packed and structs, directed
+
+
+def test_basket_pair_array_packed_null_key_no_pair_out_of_domain_raises(spark):
+    """packed=True domain guard: a NULL item key yields no pair (the same
+    as the struct form) and does not fail the task; a key outside
+    [0, 2^32) still fails it with the named error."""
+    from pyspark.sql import functions as F
+
+    from cdc_worker_spark.functions.exprs import basket_pair_array
+
+    def pairs(rows):
+        df = spark.createDataFrame([(r,) for r in rows], "parts: array<long>")
+        return sorted(
+            r.pk
+            for r in df.select(
+                F.explode(
+                    basket_pair_array("parts", directed=True, packed=True)
+                ).alias("pk")
+            ).collect()
+        )
+
+    assert pairs([[1, None, 2], [None]]) == [(1 << 32) | 2, (2 << 32) | 1]
+    with pytest.raises(Exception, match="outside"):
+        pairs([[1, 1 << 32]])

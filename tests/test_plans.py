@@ -389,10 +389,13 @@ def test_basket_pairs_co_partitions_on_orderkey_no_cartesian(spark, sf_dir):
 
 def test_pagerank_iterations_reuse_checkpointed_state(spark, sf_dir):
     """Fixed-iteration PageRank: the per-iteration join must be on the
-    src equi key (no cartesian), and localCheckpoint keeps the final plan
-    from growing with iteration count (scans, not 10 nested joins)."""
+    src equi key (no cartesian, no node-count cross join), and
+    localCheckpoint keeps the final plan from growing with iteration count
+    (scans, not 10 nested joins)."""
     tree = tree_of(spark, "q_graph_pagerank", sf_dir)
     assert "CartesianProduct" not in tree
+    # ranks are N-scaled: no node count broadcast into a cross join
+    assert "BroadcastNestedLoopJoin" not in tree
     # plan is O(1): the checkpoint truncates lineage, so the tree holds
     # at most the last <=3 un-checkpointed iterations (~2 joins each),
     # not all 10

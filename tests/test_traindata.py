@@ -142,11 +142,17 @@ def test_pq_codes_fused_equals_multipass_form(spark):
     """r13: the single-Arrow-pass pq_assign_udf is BIT-equal to the
     per-subspace centroid_dists_udf chain it replaced — codes and sq_err,
     including the NULL / wrong-length row semantics (codes NULL, sq_err
-    0.0 via greatest(NULL, 0.0))."""
+    0.0). The length-32 vector fills two whole 16-wide subspaces of the
+    64-dim space and is still unassignable in both forms."""
     emb = with_double_vec(load_table(spark, SF, "embeddings"))
-    # plant a NULL vector and a wrong-length vector (same schema)
+    # plant a NULL vector and wrong-length vectors (same schema)
+    bad_ids = (10_000_001, 10_000_002, 10_000_003)
     bad = spark.createDataFrame(
-        [(10_000_001, "syn", None), (10_000_002, "syn", [1.0, 2.0])],
+        [
+            (10_000_001, "syn", None),
+            (10_000_002, "syn", [1.0, 2.0]),
+            (10_000_003, "syn", [0.5] * 32),
+        ],
         "vec_id: long, label: string, dv: array<double>",
     ).withColumn("nrm", F.lit(0.0))
     emb = emb.select("vec_id", "label", "dv", "nrm").unionByName(bad)
@@ -160,14 +166,15 @@ def test_pq_codes_fused_equals_multipass_form(spark):
         r.vec_id: r
         for r in pq_codes(emb, key, fused=False).select(cols).collect()
     }
-    assert set(fused) == set(multi) and len(fused) > 2
+    assert set(fused) == set(multi) and len(fused) > len(bad_ids)
     for vid, f_row in fused.items():
         m_row = multi[vid]
         for c in cols[1:]:
             assert f_row[c] == m_row[c], (vid, c, f_row[c], m_row[c])
     # the planted bad rows: NULL codes, 0.0 error — in BOTH forms
-    for vid in (10_000_001, 10_000_002):
-        assert fused[vid].code_0 is None and fused[vid].sq_err == 0.0
+    for vid in bad_ids:
+        assert all(fused[vid][c] is None for c in cols[1:-1]), fused[vid]
+        assert fused[vid].sq_err == 0.0
 
 
 def test_pq_16_codewords_beat_one(spark):

@@ -115,7 +115,6 @@ def compact_line(
     sf: float,
     timings: dict[str, float],
     *,
-    raw: dict,
     calibration: dict,
     incr_fold: dict,
     ingest_sec: float | None,
@@ -133,8 +132,6 @@ def compact_line(
         "queries": timings,
         "errors": errors,
     }
-    if "value" in raw:
-        compact["raw_total_sec"] = raw["value"]
     if "error" not in calibration:
         compact["calibration"] = calibration
     if "fold_sec" in incr_fold:
@@ -160,44 +157,19 @@ def compact_line(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cdc-worker-spark-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8) if cpus.isdigit() else 32))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # r12 (optimization guide §9 baseline): let the planner pick
-        # shuffled-hash join where its size conditions hold instead of
-        # always sort-merge — SHJ skips both sort passes. Suite-level A/B
-        # (3 interleaved full-suite rounds): total-of-mins 67.3 s -> 57.2 s;
-        # every suspected per-query regression re-measured as noise over 6
-        # rounds (q_join_asof/q_dedup_minhash medians equal or better).
-        # Scale note: the choice stays size-GATED by the planner
-        # (canBuildLocalHashMap: plan-statistics side estimate under
-        # autoBroadcastJoinThreshold x shuffle partitions), and the
-        # operators that must never hash-build an O(corpus) side pin SMJ
-        # explicitly with .hint("merge"). SPARK_GRAFT_PREFER_SMJ=1 restores
-        # the default for deployments with unreliable statistics.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            # r13 (ADVICE r12): parse the escape hatch explicitly — any of
-            # 1/true/yes restores the SMJ-preferring default; 0/false/empty
-            # (and unset) select shuffled-hash preference.
-            "true"
-            if os.environ.get("SPARK_GRAFT_PREFER_SMJ", "").lower()
-            in ("1", "true", "yes")
-            else "false",
-        )
-        .getOrCreate()
+    # two shuffle partitions per core; the heap is sized for sf0.1 and up
+    spark = get_spark(
+        "cdc-worker-spark-bench",
+        **{
+            "spark.sql.shuffle.partitions": str(max(int(cpus) * 2, 8) if cpus.isdigit() else 32),
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -299,10 +271,9 @@ def main() -> None:
     # partial agg on ONE core, an upload pathology no 100 TB deployment
     # keeps. The headline therefore times the suite AFTER the engine's own
     # sized-file re-ingest (sources/layout.ingest_sized — the production
-    # fix), with the rewrite cost reported as ingest_sec. The raw-fixture
-    # pass is kept as the SECONDARY pass for cross-round continuity: at
-    # the r9->r10 switch, compare r10's "raw_secondary" against r9's
-    # "primary" (both raw single-row-group) — SCALE.md §r10.
+    # fix), with the rewrite cost reported as ingest_sec. If the ingest
+    # fails, the suite is timed on the raw fixtures and the layout label
+    # says so.
     def _ingest() -> tuple[str, float]:
         from cdc_worker_spark.sources.layout import ingest_sized
 
@@ -325,12 +296,6 @@ def main() -> None:
         timings = timed_suite(sf_dir)
         primary_layout = f"RAW FALLBACK — ingest failed: {ingest['error']}"
 
-    # secondary pass: raw driver fixtures, for r1-r9 continuity
-    def _raw() -> dict:
-        t2 = timed_suite(sf_dir) if cache is not None else dict(timings)
-        return {"value": round(sum(t2.values()), 3), "queries": t2}
-
-    raw = measure(errors, "raw_secondary", _raw)
     if cache is not None:
         shutil.rmtree(cache, ignore_errors=True)
 
@@ -407,22 +372,19 @@ def main() -> None:
                 "calibration": calibration,
                 "primary_layout": primary_layout,
                 "ingest_sec": ingest_sec,
-                "raw_secondary": raw,
                 "streaming": streaming,
                 "incr_fold": incr_fold,
                 "errors": errors,
                 "notes": "best-of-3; ivf centroid training excluded "
                 "(memoized at warmup — build-once/probe-many by design); "
                 "r10+: PRIMARY pass runs on the engine's sized-file "
-                "ingested layout (rewrite cost reported as ingest_sec); "
-                "raw_secondary re-times the raw single-row-group driver "
-                "fixtures for r1-r9 continuity",
+                "ingested layout (rewrite cost reported as ingest_sec)",
             }
         )
     )
     # Cross-round comparability (VERDICT r07 wrong #2): the full artifact —
-    # BOTH passes, explicitly labeled — is written to a committed file, so
-    # r(N)->r(N+1) per-query deltas always compare like passes. The compact
+    # the pass with its layout label — is written to a committed file, so
+    # r(N)->r(N+1) per-query deltas always compare like layouts. The compact
     # driver line below stays the official tail record.
     full_art = {
         "metric": "headline_suite_wall_seconds",
@@ -435,19 +397,13 @@ def main() -> None:
                 "total_sec": total,
                 "queries": timings,
             },
-            "raw_secondary": dict(
-                raw, layout="raw driver fixtures (single row group)"
-            ),
         },
         "streaming": streaming,
         "incr_fold": incr_fold,
         "errors": errors,
         "notes": "best-of-3 per query; compare per-query times ONLY within "
-        "the same pass label across rounds. r10 pass relabeling (VERDICT "
-        "r09 next #6): 'primary' is now the sized-file ingested layout — "
-        "r1-r9 'primary' and r10+ 'raw_secondary' are the comparable raw "
-        "series; r9 'ingested' and r10+ 'primary' are the comparable "
-        "sized series (SCALE.md §r10)",
+        "the same layout across rounds: r10+ 'primary' is the sized-file "
+        "ingested layout, comparable with r9 'ingested' (SCALE.md §r10)",
     }
     try:
         here = os.path.dirname(os.path.abspath(__file__))
@@ -469,7 +425,7 @@ def main() -> None:
     # official per-round record parses: suite totals + every headline
     # timing + the streaming headline numbers, minimal separators.
     line = compact_line(
-        total, sf, timings, raw=raw, calibration=calibration, incr_fold=incr_fold,
+        total, sf, timings, calibration=calibration, incr_fold=incr_fold,
         ingest_sec=ingest_sec, streaming=streaming, errors=errors,
     )
     print(line)

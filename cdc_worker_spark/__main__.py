@@ -17,17 +17,10 @@ import argparse
 import sys
 
 
-def _spark(cpus: str = "8"):
-    from pyspark.sql import SparkSession
+def _spark():
+    from cdc_worker_spark.session import get_spark
 
-    s = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cdc-worker-spark-cli")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    s = get_spark("cdc-worker-spark-cli")
     s.sparkContext.setLogLevel("ERROR")
     return s
 

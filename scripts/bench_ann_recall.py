@@ -27,7 +27,6 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/repo/.fixtures/sf10")
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--n-queries", type=int, default=32)
     ap.add_argument("--topk", type=int, default=10)
     ap.add_argument("--driver-mem", default="16g")
@@ -42,17 +41,12 @@ def main() -> None:
                     help="PQ codes per subspace (default PQ_K=16)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-ann-recall")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", args.driver_mem)
-        .getOrCreate()
-    )
+    from cdc_worker_spark.session import get_spark
+
+    spark = get_spark("bench-ann-recall", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     import os

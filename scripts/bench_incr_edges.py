@@ -31,22 +31,14 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/repo/.fixtures/sf10")
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--driver-mem", default="16g")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-incr-edges")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", args.driver_mem)
-        .getOrCreate()
-    )
+    spark = get_spark("bench-incr-edges", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.operators.graph import copurchase_pair_counts

@@ -60,7 +60,6 @@ def main() -> None:
     ap.add_argument("--docs-per-batch", type=int, default=2_500)
     ap.add_argument("--families-per-batch", type=int, default=25)
     ap.add_argument("--label-cadence", type=int, default=2)
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--driver-mem", default="16g")
     ap.add_argument(
         "--twins",
@@ -79,20 +78,10 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-ingest-regime")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        # the delta-endpoint lookup pruning needs IN pushdown (r11)
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
-        .getOrCreate()
-    )
+    spark = get_spark("bench-ingest-regime", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.operators.dedup import (

@@ -51,23 +51,14 @@ def main() -> None:
     ap.add_argument("--group", type=int, default=20)
     ap.add_argument("--label-cadence", type=int, default=4)
     ap.add_argument("--index-compact-cadence", type=int, default=4)
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--driver-mem", default="16g")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-ingest-sf100")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        .getOrCreate()
-    )
+    spark = get_spark("bench-ingest-sf100", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.operators.dedup import (

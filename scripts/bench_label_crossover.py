@@ -54,25 +54,14 @@ def main() -> None:
         "a few bits/row, a best-case-compressibility LOWER bound that "
         "flatters the monolithic full rewrite (the r11 first-pass grid).",
     )
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--driver-mem", default="16g")
     ap.add_argument("--workdir", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-label-crossover")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        # required for the delta-endpoint lookup pruning (session.py note)
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
-        .getOrCreate()
-    )
+    spark = get_spark("bench-label-crossover", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.streaming.ingest import (

@@ -68,17 +68,9 @@ def main() -> None:
     ap.add_argument("--iters", type=int, default=10)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .appName("pagerank-layout-bench")
-        .getOrCreate()
-    )
+    spark = get_spark("pagerank-layout-bench", **{"spark.driver.memory": "16g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.operators.graph import pagerank, pagerank_bucketed

@@ -95,17 +95,11 @@ def main() -> None:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("cdc-worker-spark-scaling")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    spark = get_spark(
+        "cdc-worker-spark-scaling",
+        **{"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -265,16 +265,11 @@ def multi_topic_bench(spark, rounds: int = 2) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cdc-stream-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    spark = get_spark(
+        "cdc-stream-bench",
+        **{"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")},
     )
     spark.sparkContext.setLogLevel("ERROR")
     out = run_bench(spark)

@@ -35,23 +35,14 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/repo/.fixtures/sf10")
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--batches", type=int, default=8)
     ap.add_argument("--driver-mem", default="16g")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("bench-streaming-labels")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        .getOrCreate()
-    )
+    spark = get_spark("bench-streaming-labels", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.operators.cluster_incr import DELTA_MOD, DELTA_REM

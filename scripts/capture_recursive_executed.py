@@ -34,21 +34,9 @@ def main() -> None:
         / "q_recursive_tree_executed_levels.txt"
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("capture-recursive-executed")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # keep every sub-execution in the store (default 1000 is plenty,
-        # stated for clarity)
-        .config("spark.sql.ui.retainedExecutions", "2000")
-        .getOrCreate()
-    )
+    spark = get_spark("capture-recursive-executed")
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.plans import all_queries

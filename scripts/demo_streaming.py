@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""End-to-end drive of the streaming CDC pipeline under a VANILLA SparkSession
+"""End-to-end drive of the streaming CDC pipeline under a hostile session: the
+engine's, with a non-UTC timezone and Spark's default 200 shuffle partitions
 (the verify recipe for diffs touching cdc_worker_spark/streaming/).
 
 Scenario (reference semantics, SURVEY §2.2):
@@ -27,7 +28,7 @@ import tempfile
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from cdc_worker_spark.session import get_spark  # noqa: E402
 
 
 def make_envelope(replay_id, record_id="A", change_type="UPDATE",
@@ -69,12 +70,13 @@ def main() -> int:
 
     work = tempfile.mkdtemp(prefix="cdc_demo_")
     dirs = {k: os.path.join(work, k) for k in ("input", "state", "dlq", "chk")}
-    # hostile-vanilla session: non-UTC tz, default shuffle partitions
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("cdc-streaming-demo")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .getOrCreate()
+    # hostile session: non-UTC tz, Spark's default shuffle partitions
+    spark = get_spark(
+        "cdc-streaming-demo",
+        **{
+            "spark.sql.session.timeZone": "America/New_York",
+            "spark.sql.shuffle.partitions": "200",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     failures: list[str] = []

@@ -186,6 +186,7 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
+    # not get_spark: this session stands in for the external driver's own
     builder = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("drive-contract")

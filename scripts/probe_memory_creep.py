@@ -3,10 +3,10 @@ next #1): why did the basket/range-bounds sf100 bespokes need a 28g
 driver in r11 where r10's 14g sufficed, and why do 32 executor threads
 OOM heavy-scan bespokes that 16 threads handle?
 
-One invocation = one grid cell: build the EXACT session shape the sweep
-harness uses (scripts/verify_invariants.py:main — local[cpus], AQE on,
-shuffle.partitions=64, NO engine session knobs), run one query's builder
-plus its bespoke checks, and measure:
+One invocation = one grid cell: build the EXACT session the sweep harness
+uses (scripts/verify_invariants.py:main — ``get_spark`` with the given
+driver heap, cores from SPARK_GRAFT_CPUS), run one query's builder plus its
+bespoke checks, and measure:
 
 - peak JVM heap (sampled at 4 Hz from a daemon thread via py4j
   Runtime.totalMemory()-freeMemory(); py4j gives each Python thread its
@@ -23,7 +23,7 @@ runs the cells and SCALE.md §r12 records the post-mortem.
 
 Usage:
   python scripts/probe_memory_creep.py --query q_basket_pairs \
-      --cpus 32 --driver-mem 14g [--sf /root/repo/.fixtures/sf100]
+      --driver-mem 14g [--sf .fixtures/sf100]
 """
 
 from __future__ import annotations
@@ -116,7 +116,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--query", required=True)
     ap.add_argument("--sf", default=f"{REPO}/.fixtures/sf100")
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--driver-mem", required=True)
     ap.add_argument(
         "--skip-bespoke",
@@ -125,20 +124,11 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
     # EXACTLY the sweep harness session (verify_invariants.py:main): the
-    # creep was observed THERE, so the probe must not add engine knobs
-    # (session.py's inFilterThreshold etc. are absent there too).
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName(f"probe-mem-{args.query}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        .getOrCreate()
-    )
+    # creep was observed THERE, so the probe must not add knobs of its own.
+    spark = get_spark(f"probe-mem-{args.query}", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from verify_invariants import BESPOKE, Ctx, fingerprint
@@ -171,7 +161,7 @@ def main() -> int:
         json.dumps(
             {
                 "query": args.query,
-                "cpus": int(args.cpus),
+                "cpus": spark.sparkContext.defaultParallelism,
                 "driver_mem": args.driver_mem,
                 "status": status,
                 "wall_sec": round(wall, 1),

@@ -5,7 +5,8 @@ frozen first 50 (VERDICT r05 next #6).
 The external driver's per-round CORRECTNESS_r{N}.json covers only the first
 50 registry entries (frozen since r3 for round-over-round comparability),
 which is now <30% of the registry. This reproduces the driver's harness
-shape — vanilla non-UTC SparkSession, DuckDB views over the same parquet,
+shape — a non-UTC session (the engine's, with ``--tz``; the vanilla
+session is ``drive_contract.py``'s), DuckDB views over the same parquet,
 per-query ``{rows_match, schema_match, hash_match, spark_rows, oracle_rows,
 err}`` records, ``"err": "no_oracle"`` rows-only entries — over any
 registry slice, so every query family has a driver-format artifact:
@@ -67,14 +68,12 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("rotate-windows")
-        .config("spark.sql.session.timeZone", args.tz)
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    from cdc_worker_spark.session import get_spark
+
+    spark = get_spark(
+        "rotate-windows",
+        **{"spark.sql.session.timeZone": args.tz, "spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

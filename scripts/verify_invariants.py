@@ -39,7 +39,6 @@ from __future__ import annotations
 import argparse
 import json
 import math
-import os
 import pathlib
 import re
 import sys
@@ -2633,7 +2632,6 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/repo/.fixtures/sf100")
     ap.add_argument("--only", default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--cpus", default="32")
     ap.add_argument("--driver-mem", default="16g")
     ap.add_argument(
         "--validate",
@@ -2664,29 +2662,9 @@ def main() -> int:
     if args.validate and args.sf == ap.get_default("sf"):
         args.sf = "/root/testdata/sf0.01"
 
-    from pyspark.sql import SparkSession
+    from cdc_worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("verify-invariants")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        # r13 (VERDICT r12 next #4): the sweep must exercise the same join
-        # policy the bench and session.py now run (shuffled-hash preferred,
-        # size-gated) — previously this harness silently kept the SMJ
-        # default, so sweeps never validated the benched plan shapes. Same
-        # escape hatch as bench.py/session.py.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true"
-            if os.environ.get("SPARK_GRAFT_PREFER_SMJ", "").lower()
-            in ("1", "true", "yes")
-            else "false",
-        )
-        .getOrCreate()
-    )
+    spark = get_spark("verify-invariants", **{"spark.driver.memory": args.driver_mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_worker_spark.plans import all_queries

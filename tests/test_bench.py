@@ -12,7 +12,7 @@ def _line(errors, calibration, streaming):
     return json.loads(
         bench.compact_line(
             1.5, 0.1, {"q_scan_filter": 1.5},
-            raw={"value": 1.4, "queries": {}}, calibration=calibration,
+            calibration=calibration,
             incr_fold={"fold_sec": 0.2}, ingest_sec=0.3, streaming=streaming,
             errors=errors,
         )
@@ -45,9 +45,9 @@ def test_clean_run_has_empty_errors_and_long_messages_are_clipped():
     def long_failure():
         raise RuntimeError("y" * 5000)
 
-    block = bench.measure(errors, "raw_secondary", long_failure)
+    block = bench.measure(errors, "incr_fold", long_failure)
     assert len(block["error"]) > 5000  # the full artifact keeps the whole text
-    assert len(errors) == 1 and len(errors[0]) <= len("raw_secondary: ") + 240
+    assert len(errors) == 1 and len(errors[0]) <= len("incr_fold: ") + 240
 
 
 def test_round_stamp_from_env_then_git_never_from_file_count(tmp_path, monkeypatch):

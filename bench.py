@@ -163,7 +163,9 @@ def main() -> None:
 
     from cdc_worker_spark.session import get_spark
 
-    # two shuffle partitions per core; the heap is sized for sf0.1 and up
+    # two shuffle partitions per core (on 4 cores get_spark's 32 ran the
+    # sf0.1 suite 4 % slower than 8 in the median of 3 rounds:
+    # AB_shuffle_partitions_sf0.1.json); the heap is sized for sf0.1 and up
     spark = get_spark(
         "cdc-worker-spark-bench",
         **{

@@ -21,6 +21,63 @@ from pyspark.sql import functions as F
 from cdc_worker_spark.plans.registry import query
 from cdc_worker_spark.sources.tables import load_events_ms, load_table
 
+
+def event_runs(events: DataFrame) -> DataFrame:
+    """(user_id, event_type, ts_ms, event_id) events as the one-event runs
+    ``stitch_versions`` takes."""
+    return events.select(
+        "user_id",
+        "event_type",
+        F.col("ts_ms").alias("valid_from_ms"),
+        F.lit(1).cast("long").alias("n_events"),
+        F.col("event_id").alias("anchor_id"),
+    )
+
+
+def stitch_versions(runs: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """Gaps-and-islands over runs (``*keys``, event_type, valid_from_ms,
+    n_events, anchor_id): the one SCD2 kernel. A run is a weighted pseudo-
+    event; a raw event is the run ``n_events = 1, anchor_id = event_id``.
+    Per ``keys`` partition, runs in (valid_from_ms, anchor_id) order
+    collapse into maximal same-type versions (lag -> running sum ->
+    groupBy), and valid_to_ms is the next version's valid_from_ms (lead).
+    The anchor tiebreak is the event-level (ts_ms, event_id) total order,
+    so equal-timestamp runs stitch deterministically, and re-collapsing is
+    associative: stitch(stitch(A) ∪ B) == stitch(A ∪ B) for B after A in
+    time, which is what the incremental merge (streaming/scd2.py) relies
+    on. Every window and the groupBy key on a superset of ``keys``, so one
+    exchange on any subset of them serves all of them."""
+    w = Window.partitionBy(*keys).orderBy("valid_from_ms", "anchor_id")
+    prev = F.lag("event_type").over(w)
+    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
+    collapsed = (
+        runs.withColumn(
+            "version",
+            F.sum(chg).over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        )
+        .groupBy(*keys, "version", "event_type")
+        .agg(
+            F.min("valid_from_ms").alias("valid_from_ms"),
+            F.sum("n_events").alias("n_events"),
+            F.min(F.struct("valid_from_ms", "anchor_id"))["anchor_id"].alias(
+                "anchor_id"
+            ),
+        )
+    )
+    w2 = Window.partitionBy(*keys).orderBy("version")
+    return collapsed.select(
+        *keys,
+        F.col("version").cast("long"),
+        "event_type",
+        "valid_from_ms",
+        F.lead("valid_from_ms").over(w2).alias("valid_to_ms"),
+        "n_events",
+        "anchor_id",
+    )
+
+
 @query(
     "q_cdc_scd2",
     oracle="""
@@ -61,36 +118,21 @@ def q_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gaps-and-islands), valid_to = next run's valid_from, open interval =
     current row.
 
-    All three passes (lag, running sum, lead) share ONE partitioning on
-    user_id — a single exchange; the groupBy collapses within the same
-    key space. Interval bounds use the ts_ms BIGINT convention so hashes
+    Each event is a one-event run through ``stitch_versions``, the kernel
+    the incremental merge shares: all three passes (lag, running sum,
+    lead) share ONE partitioning on user_id — a single exchange; the
+    groupBy collapses within the same key space. Interval bounds use the ts_ms BIGINT convention so hashes
     are time-zone-proof."""
-    ev = load_events_ms(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
-    prev = F.lag("event_type").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
-    runs = ev.select(
-        "user_id",
-        "event_type",
-        "ts_ms",
-        "event_id",
-        F.sum(chg).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).alias("run_id"),
+    versions = stitch_versions(
+        event_runs(load_events_ms(spark, sf_dir)), ("user_id",)
     )
-    collapsed = runs.groupBy("user_id", "run_id", "event_type").agg(
-        F.min("ts_ms").alias("valid_from_ms"),
-        F.count("*").alias("n_events"),
-    )
-    w2 = Window.partitionBy("user_id").orderBy("run_id")
-    valid_to = F.lead("valid_from_ms").over(w2)
-    return collapsed.select(
+    return versions.select(
         "user_id",
-        F.col("run_id").cast("bigint").alias("version"),
+        "version",
         "event_type",
         "valid_from_ms",
-        valid_to.alias("valid_to_ms"),
-        valid_to.isNull().alias("is_current"),
+        "valid_to_ms",
+        F.col("valid_to_ms").isNull().alias("is_current"),
         "n_events",
     )
 

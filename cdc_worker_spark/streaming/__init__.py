@@ -23,7 +23,6 @@ from cdc_worker_spark.streaming.registry import (
 )
 from cdc_worker_spark.streaming.scd2 import (
     Scd2State,
-    collapse_runs,
     run_scd2_pipeline,
 )
 from cdc_worker_spark.streaming.sinks import forward_events, run_forwarding_sink
@@ -55,7 +54,6 @@ __all__ = [
     "resolve_new_ids",
     "run_cdc_pipeline",
     "run_multiplexed_pipeline",
-    "collapse_runs",
     "run_forwarding_sink",
     "run_scd2_pipeline",
     "running_counters",

@@ -15,14 +15,16 @@ Reference mapping:
 - C4/D10 DLQ            : corrupt payloads appended to a failures table;
   the stream continues.
 
-State storage: a key-hash-BUCKETED manifest-versioned parquet table (an
-explicit, dependency-free stand-in for a Delta/Iceberg MERGE target — the
-production swap-in is ``MERGE INTO state USING batch ON key``). Each merge
-rewrites ONLY the buckets touched by the batch (a batch over many keys
-touches them all: ROADMAP D8), and DELETEs are retained as tombstone
-rows (filtered out of the live view, garbage-collected past the retention
-horizon) so a late out-of-order pre-delete event cannot resurrect a deleted
-record.
+State storage: a key-hash-BUCKETED manifest-versioned parquet table
+(``BucketedStore``: an explicit, dependency-free stand-in for a
+Delta/Iceberg MERGE target — the production swap-in is ``MERGE INTO state
+USING batch ON key``). It has two users: the latest-wins table here and the
+SCD2 dimension (streaming/scd2.Scd2State), which keeps every version. Each
+merge rewrites ONLY the buckets touched by the batch (a batch over many
+keys touches them all: ROADMAP D8). Latest-wins retains DELETEs as
+tombstone rows (filtered out of the live view, garbage-collected past the
+retention horizon) so a late out-of-order pre-delete event cannot
+resurrect a deleted record.
 """
 
 from __future__ import annotations
@@ -30,9 +32,11 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 
@@ -70,19 +74,23 @@ def read_event_stream(
 
 
 @dataclass
-class LatestWinsState:
-    """Bucketed, manifest-versioned parquet latest-wins table (the
-    foreachBatch MERGE target).
+class BucketedStore:
+    """Bucketed, manifest-versioned parquet table: the one foreachBatch
+    MERGE target, shared by :class:`LatestWinsState` and the SCD2
+    dimension (streaming/scd2.Scd2State).
 
     Layout: ``path/v{N}/_bucket={K}/*.parquet`` — rows land in bucket
-    ``pmod(xxhash64(entity, record_id), n_buckets)``. ``_MANIFEST.json``
-    maps each bucket to the version directory holding its latest data, so a
-    merge that touches 1 bucket writes 1 bucket and repoints 1 manifest
-    entry; untouched buckets keep serving their old files (the same
-    copy-on-write shape as a Delta/Iceberg transaction log; a batch over many
-    keys touches them all: ROADMAP D8). Stored rows INCLUDE DELETE
-    tombstones; :meth:`read` is the live view.
+    ``pmod(xxhash64(*key), n_buckets)``. ``_MANIFEST.json`` maps each bucket
+    to the version directory holding its latest data, so a merge that
+    touches 1 bucket writes 1 bucket and repoints 1 manifest entry;
+    untouched buckets keep serving their old files (the same copy-on-write
+    shape as a Delta/Iceberg transaction log; a batch over many keys touches
+    them all: ROADMAP D8). Subclasses name the bucket hash columns in
+    ``key`` and may pin the read ``schema`` (None: the parquet footers').
     """
+
+    key: ClassVar[tuple[str, ...]]
+    schema: ClassVar[StructType | None] = None
 
     path: str
     n_buckets: int = 16
@@ -110,11 +118,17 @@ class LatestWinsState:
             return {"version": -1, "n_buckets": self.n_buckets, "buckets": {}}
 
     def _write_manifest(self, manifest: dict) -> None:
+        """Commit ``manifest``: its per-version snapshot FIRST, then the main
+        manifest, each by tmp + atomic os.replace. Every version the main
+        manifest can ever point at has a live AS-OF snapshot — the reverse
+        order left a crash window where read(at_version=current) raised on a
+        committed version (ADVICE r02)."""
         os.makedirs(self.path, exist_ok=True)
-        tmp = self._manifest_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_file())
+        for name in (f"_MANIFEST.v{manifest['version']}.json", "_MANIFEST.json"):
+            dst = os.path.join(self.path, name)
+            with open(dst + ".tmp", "w") as f:
+                json.dump(manifest, f)
+            os.replace(dst + ".tmp", dst)
 
     def _bucket_paths(self, manifest: dict, buckets=None) -> list[str]:
         items = manifest["buckets"].items()
@@ -130,38 +144,32 @@ class LatestWinsState:
 
         A non-empty store's n_buckets is part of its on-disk layout: opening
         it with a different constructor default and hashing with the wrong
-        modulus would read the wrong bucket subset (latest-wins could lose to
+        modulus would read the wrong bucket subset (a merge could lose to
         unread stored rows) and repoint manifest entries at data-less bucket
-        dirs. Called at the top of merge_latest_wins — BEFORE bucket_col()
-        and read_full() — so the whole merge runs under one layout
-        (ADVICE r02)."""
+        dirs. Called at the top of every merge — BEFORE bucket_col() and
+        read_full() — so the whole merge runs under one layout (ADVICE
+        r02)."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             self.n_buckets = manifest["n_buckets"]
 
     def bucket_col(self) -> Column:
-        return F.pmod(F.xxhash64("entity", "record_id"), F.lit(self.n_buckets))
+        return F.pmod(F.xxhash64(*self.key), F.lit(self.n_buckets))
 
     def read_full(
         self, spark: SparkSession, buckets=None, at_version: int | None = None
     ) -> DataFrame | None:
-        """All stored rows (tombstones included) — optionally only the given
-        buckets (the merge path reads just the buckets a batch touches), or
-        the table AS OF an earlier committed version (time travel via the
-        per-version manifest snapshot; valid until vacuum reclaims the old
-        files, exactly the Delta VACUUM contract)."""
+        """All stored rows — optionally only the given buckets (the merge
+        path reads just the buckets a batch touches), or the table AS OF an
+        earlier committed version (time travel via the per-version manifest
+        snapshot; valid until vacuum reclaims the old files, exactly the
+        Delta VACUUM contract)."""
         manifest = self._manifest(at_version)
         paths = self._bucket_paths(manifest, buckets)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
-
-    def read(
-        self, spark: SparkSession, at_version: int | None = None
-    ) -> DataFrame | None:
-        """Live view: tombstoned (deleted) keys filtered out."""
-        df = self.read_full(spark, at_version=at_version)
-        return None if df is None else df.filter(F.col("change_type") != "DELETE")
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(*paths)
 
     def vacuum(self) -> list[str]:
         """Delete version directories no manifest entry references (each
@@ -205,39 +213,50 @@ class LatestWinsState:
                     removed.append(subfull)
         return removed
 
-    def write_buckets(self, df: DataFrame, touched: list[int]) -> None:
+    def write_buckets(
+        self, df: DataFrame, touched: list[int], stamp: dict | None = None
+    ) -> None:
         """Commit ``df`` (rows of exactly the ``touched`` buckets, with their
         ``_bucket`` column) as a new version: write those bucket partitions,
-        repoint their manifest entries, leave every other bucket untouched."""
+        repoint their manifest entries, leave every other bucket untouched.
+        ``stamp`` keys go into the same manifest commit as the data (a
+        caller's own commit record, e.g. Scd2State's batch ids)."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             # layout mismatch mid-commit means bucket_col()/read_full already
             # ran with the wrong modulus — refusing beats corrupting the
-            # store; callers go through merge_latest_wins, which syncs first
+            # store; merges call sync_layout() first
             raise ValueError(
                 f"store at {self.path} has n_buckets="
                 f"{manifest['n_buckets']}, writer has {self.n_buckets}; "
                 f"call sync_layout() before computing buckets"
             )
         v = manifest["version"] + 1
-        (
-            df.write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, f"v{v}"))
-        )
-        manifest["version"] = v
-        manifest["n_buckets"] = self.n_buckets
+        if touched:
+            (
+                df.write.mode("overwrite")
+                .partitionBy("_bucket")
+                .parquet(os.path.join(self.path, f"v{v}"))
+            )
+        manifest.update(stamp or {}, version=v, n_buckets=self.n_buckets)
         for b in touched:
             manifest["buckets"][str(b)] = v
-        # per-version snapshot FIRST (tmp + atomic replace), THEN the main
-        # manifest: every version the main manifest can ever point at has a
-        # live AS-OF snapshot — the reverse order left a crash window where
-        # read(at_version=current) raised on a committed version (ADVICE r02)
-        snap = os.path.join(self.path, f"_MANIFEST.v{v}.json")
-        with open(snap + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(snap + ".tmp", snap)
         self._write_manifest(manifest)
+
+
+class LatestWinsState(BucketedStore):
+    """The latest-wins table: one row per (entity, record_id), bucketed on
+    that key. Stored rows INCLUDE DELETE tombstones; :meth:`read` is the
+    live view."""
+
+    key = ("entity", "record_id")
+
+    def read(
+        self, spark: SparkSession, at_version: int | None = None
+    ) -> DataFrame | None:
+        """Live view: tombstoned (deleted) keys filtered out."""
+        df = self.read_full(spark, at_version=at_version)
+        return None if df is None else df.filter(F.col("change_type") != "DELETE")
 
 
 def merge_latest_wins(

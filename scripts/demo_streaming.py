@@ -119,12 +119,8 @@ def main() -> int:
         # incremental SCD2 twin (streaming/scd2.py): two micro-batch runs
         # with a checkpoint restart in between must equal the one-shot
         # batch build, and the replayed first file must be a no-op
-        from cdc_worker_spark.streaming.scd2 import (
-            Scd2State,
-            collapse_runs,
-            _restitch,
-            run_scd2_pipeline,
-        )
+        from cdc_worker_spark.operators.warehouse import event_runs, stitch_versions
+        from cdc_worker_spark.streaming.scd2 import Scd2State, run_scd2_pipeline
 
         scd_in = os.path.join(work, "scd_in")
         scd_state = os.path.join(work, "scd_state")
@@ -157,7 +153,7 @@ def main() -> int:
         want = sorted(
             (r.user_id, r.version, r.event_type, r.valid_from_ms,
              r.valid_to_ms, r.n_events)
-            for r in _restitch(collapse_runs(all_rows)).collect()
+            for r in stitch_versions(event_runs(all_rows), ("user_id",)).collect()
         )
         check(got == want,
               "incremental SCD2 across checkpoint restart == batch build")

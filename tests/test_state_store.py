@@ -4,7 +4,9 @@ so the state store itself must keep the delete's (commit_ts, replay_id) to
 win the comparison), event-time tombstone GC, incremental bucketed merge (a
 batch touching 1 bucket rewrites 1 bucket, not the whole store — reference
 semantics are per-record upsert, design doc:670-676), and the merge's plan
-shape (one shuffle, one file per rewritten bucket)."""
+shape (one shuffle, one file per rewritten bucket). The SCD2 dimension
+shares the store: its merge has the same plan shape, and it gets vacuum and
+time travel from the same code."""
 
 from __future__ import annotations
 
@@ -15,7 +17,7 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
-from cdc_worker_spark.streaming import LatestWinsState, merge_latest_wins
+from cdc_worker_spark.streaming import LatestWinsState, Scd2State, merge_latest_wins
 
 T0 = dt.datetime(2023, 10, 4, 18, 0, 0)
 
@@ -33,6 +35,14 @@ def batch(spark, rows):
             for rid, s, rec, ct, p in rows
         ],
         SCHEMA,
+    )
+
+
+def scd2_events(spark, users, ts0=0, kind="click"):
+    """One event per user at ``ts0 + user``, event ids unique per ``ts0``."""
+    return spark.createDataFrame(
+        [(u, kind, ts0 + u, ts0 * 100 + u) for u in users],
+        "user_id long, event_type string, ts_ms long, event_id long",
     )
 
 
@@ -111,6 +121,47 @@ def test_incremental_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert got["K7"].payload == "v7"  # untouched bucket rows intact
 
 
+def _capture_write_plans(monkeypatch, cls):
+    """Record the executed plan of every frame ``cls.write_buckets``
+    commits; the returned list fills as merges run."""
+    plans = []
+    write = cls.write_buckets
+
+    def capture(self, df, touched, *rest):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        write(self, df, touched, *rest)
+
+    monkeypatch.setattr(cls, "write_buckets", capture)
+    return plans
+
+
+def _without_coalescing(spark, merge):
+    """Run ``merge()`` with AQE partition coalescing off: a shuffle keyed on
+    anything finer than _bucket would then spread one bucket over several
+    tasks and so several files."""
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        merge()
+    finally:
+        spark.conf.set(coalesce, prev)
+
+
+def _assert_one_bucket_shuffle_one_file_per_bucket(plans, root, version, n):
+    assert len(plans) == 1
+    # ShuffleExchangeExec prints as "Exchange"; BroadcastExchange is not a shuffle
+    shuffles = re.findall(r"(?<![A-Za-z])Exchange (\w+\([^)]*\))", plans[0])
+    assert len(shuffles) == 1, plans[0]
+    assert re.fullmatch(rf"hashpartitioning\(_bucket#\d+L?, {n}\)", shuffles[0]), shuffles
+    vdir = os.path.join(root, f"v{version}")
+    bucket_dirs = [d for d in os.listdir(vdir) if d.startswith("_bucket=")]
+    assert len(bucket_dirs) > 1
+    for d in bucket_dirs:
+        files = os.listdir(os.path.join(vdir, d))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, (d, files)
+
+
 def test_merge_plans_one_shuffle_and_writes_one_file_per_bucket(
     spark, tmp_path, monkeypatch
 ):
@@ -125,40 +176,84 @@ def test_merge_plans_one_shuffle_and_writes_one_file_per_bucket(
         state, batch(spark, [(i, i, f"K{i}", "CREATE", f"v{i}") for i in range(40)])
     )
 
-    plans = []
-    write = LatestWinsState.write_buckets
+    plans = _capture_write_plans(monkeypatch, LatestWinsState)
+    _without_coalescing(spark, lambda: merge_latest_wins(
+        state,
+        batch(spark, [(1000 + i, 100 + i, f"K{i}", "UPDATE", "u") for i in range(0, 40, 3)]),
+    ))
 
-    def capture(self, df, touched):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        write(self, df, touched)
-
-    monkeypatch.setattr(LatestWinsState, "write_buckets", capture)
-    # without coalescing, a shuffle keyed on anything finer than _bucket
-    # would spread one bucket over several tasks and so several files
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce)
-    spark.conf.set(coalesce, "false")
-    try:
-        merge_latest_wins(
-            state,
-            batch(spark, [(1000 + i, 100 + i, f"K{i}", "UPDATE", "u") for i in range(0, 40, 3)]),
-        )
-    finally:
-        spark.conf.set(coalesce, prev)
-
-    assert len(plans) == 1
-    # ShuffleExchangeExec prints as "Exchange"; BroadcastExchange is not a shuffle
-    shuffles = re.findall(r"(?<![A-Za-z])Exchange (\w+\([^)]*\))", plans[0])
-    assert len(shuffles) == 1, plans[0]
-    assert re.fullmatch(r"hashpartitioning\(_bucket#\d+L?, 8\)", shuffles[0]), shuffles
-    v = state._manifest()["version"]
-    bucket_dirs = [d for d in os.listdir(os.path.join(root, f"v{v}")) if d.startswith("_bucket=")]
-    assert len(bucket_dirs) > 1
-    for d in bucket_dirs:
-        files = os.listdir(os.path.join(root, f"v{v}", d))
-        assert len([f for f in files if f.endswith(".parquet")]) == 1, (d, files)
+    _assert_one_bucket_shuffle_one_file_per_bucket(
+        plans, root, state._manifest()["version"], 8
+    )
     got = live(spark, state)
     assert len(got) == 40 and got["K3"].payload == "u" and got["K4"].payload == "v4"
+
+
+def test_scd2_merge_plans_one_shuffle_and_writes_one_file_per_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """The SCD2 merge has the same shape: stored runs of the touched
+    buckets and the batch's events meet in ONE shuffle on ``_bucket``, and
+    the stitch's (_bucket, user_id) windows and groupBy need no other."""
+    root = str(tmp_path / "scd2")
+    state = Scd2State(root, n_buckets=8)
+    state.merge_batch(spark, scd2_events(spark, range(40)), batch_id=0)
+
+    plans = _capture_write_plans(monkeypatch, Scd2State)
+    _without_coalescing(spark, lambda: state.merge_batch(
+        spark, scd2_events(spark, range(0, 40, 3), ts0=100, kind="view"), batch_id=1
+    ))
+
+    _assert_one_bucket_shuffle_one_file_per_bucket(
+        plans, root, state._manifest()["version"], 8
+    )
+    rows = {(r.user_id, r.version): r for r in state.read(spark).collect()}
+    assert len(rows) == 40 + len(range(0, 40, 3))
+    assert rows[(3, 2)].event_type == "view" and rows[(3, 1)].valid_to_ms == 103
+    assert rows[(4, 1)].valid_to_ms is None
+
+
+def test_scd2_vacuum_and_time_travel(spark, tmp_path):
+    """SCD2 state gets the store's vacuum and AS-OF reads: after three
+    merges, vacuum removes the stranded versions without changing the read,
+    and a read at an earlier version returns that version's history."""
+    root = str(tmp_path / "scd2")
+    state = Scd2State(root, n_buckets=4)
+    state.merge_batch(spark, scd2_events(spark, range(20)), batch_id=0)
+    v0 = state._manifest()["version"]
+    then = sorted(state.read(spark).collect())
+    state.merge_batch(spark, scd2_events(spark, [1], ts0=100), batch_id=1)
+    state.merge_batch(spark, scd2_events(spark, [1, 2], ts0=200, kind="view"), batch_id=2)
+
+    assert sorted(state.read(spark, at_version=v0).collect()) == then
+    before = sorted(state.read(spark).collect())
+    assert before != then
+    removed = state.vacuum()
+    assert removed  # the earlier copies of users 1 and 2's buckets
+    assert sorted(state.read(spark).collect()) == before
+    assert state.vacuum() == []
+    assert state.committed_batch_ids() == {0, 1, 2}
+    for b, v in state._manifest()["buckets"].items():
+        assert os.path.exists(os.path.join(root, f"v{v}", f"_bucket={b}"))
+
+
+def test_manifest_code_lives_in_one_store():
+    """The bucketed manifest-versioned table is written once
+    (streaming/pipeline.py); the ANN index pointer (operators/index_layout.py)
+    is a separate format. Any other manifest or atomic-replace code under
+    the package is a fork of the store."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cdc_worker_spark")
+    hits = []
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as f:
+                    text = f.read()
+                if "_MANIFEST" in text or "os.replace(" in text:
+                    hits.append(os.path.relpath(path, pkg))
+    assert sorted(hits) == ["operators/index_layout.py", "streaming/pipeline.py"]
 
 
 def test_touched_bucket_merge_is_latest_wins_within_bucket(spark, tmp_path):

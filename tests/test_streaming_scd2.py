@@ -1,20 +1,19 @@
 """Incremental SCD2 maintenance (streaming/scd2.py): the stitched
-incremental result must equal the from-scratch batch build, replays must
-be no-ops (ledger), and only touched buckets may rewrite."""
+incremental result must equal a from-scratch build (a pure-Python
+gaps-and-islands reference that shares no code with the engine), replays
+must be no-ops (the manifest's commit record), and only touched buckets
+may rewrite."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 
-from pyspark.sql import functions as F
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from cdc_worker_spark.streaming.scd2 import (
-    Scd2State,
-    collapse_runs,
-    _restitch,
-    run_scd2_pipeline,
-)
+from cdc_worker_spark.streaming.scd2 import Scd2State, run_scd2_pipeline
 
 EVENTS = [
     # user 1: view view click view  (3 runs)
@@ -30,8 +29,26 @@ EVENTS = [
 COLS = ["user_id", "event_type", "ts_ms", "event_id"]
 
 
-def _batch_build(spark, rows):
-    return _restitch(collapse_runs(spark.createDataFrame(rows, COLS)))
+def _reference(rows):
+    """SCD2 history of (user_id, event_type, ts_ms, event_id) rows as
+    (user_id, version, event_type, valid_from_ms, valid_to_ms, n_events):
+    per user, events in (ts_ms, event_id) order; a version is a maximal run
+    of one event_type; valid_to is the next version's start."""
+    by_user = {}
+    for u, t, ts, e in rows:
+        by_user.setdefault(u, []).append((ts, e, t))
+    out = []
+    for u, events in by_user.items():
+        runs = []  # [event_type, valid_from_ms, n_events]
+        for ts, _, t in sorted(events):
+            if runs and runs[-1][0] == t:
+                runs[-1][2] += 1
+            else:
+                runs.append([t, ts, 1])
+        ends = [r[1] for r in runs[1:]] + [None]
+        for v, ((t, start, n), end) in enumerate(zip(runs, ends), 1):
+            out.append((u, v, t, start, end, n))
+    return sorted(out)
 
 
 def _write_jsonl(path, rows):
@@ -69,7 +86,7 @@ def test_incremental_equals_batch(spark, tmp_path):
     state.merge_batch(spark, spark.createDataFrame(EVENTS, COLS))
     state.merge_batch(spark, spark.createDataFrame(extra, COLS))
     got = _rows(state.read(spark))
-    want = _rows(_batch_build(spark, EVENTS + extra))
+    want = _reference(EVENTS + extra)
     assert got == want
     # the spanning run merged instead of splitting: user 1 ends with ONE
     # open 'view' version covering events 4 and 7
@@ -106,7 +123,7 @@ def test_pipeline_replay_is_noop_and_restart_resumes(spark, tmp_path):
     _write_jsonl(os.path.join(input_dir, "b0.jsonl"), EVENTS)
     run_scd2_pipeline(spark, input_dir, state_dir, ckpt)
     first = _rows(Scd2State(state_dir).read(spark))
-    assert first == _rows(_batch_build(spark, EVENTS))
+    assert first == _reference(EVENTS)
 
     # simulate the foreachBatch replay window: the committed batch ids
     # live INSIDE the state manifest (atomic with the data), so a
@@ -122,9 +139,7 @@ def test_pipeline_replay_is_noop_and_restart_resumes(spark, tmp_path):
     extra = [(1, "click", 6000, 20)]
     _write_jsonl(os.path.join(input_dir, "b1.jsonl"), extra)
     run_scd2_pipeline(spark, input_dir, state_dir, ckpt)
-    assert _rows(Scd2State(state_dir).read(spark)) == _rows(
-        _batch_build(spark, EVENTS + extra)
-    )
+    assert _rows(Scd2State(state_dir).read(spark)) == _reference(EVENTS + extra)
 
 
 def test_unsafe_double_merge_without_ledger_double_counts(spark, tmp_path):
@@ -166,7 +181,7 @@ def test_restitch_equal_timestamp_runs_deterministic(spark, tmp_path):
         (9, "view", 1000, 3),    # and a third run, still at ts 1000
         (9, "view", 2000, 4),
     ]
-    want = _rows(_batch_build(spark, rows))
+    want = _reference(rows)
     # versions must follow event_id order at the tied timestamp
     types_in_order = [r[2] for r in sorted(want, key=lambda r: r[1])]
     assert types_in_order == ["view", "click", "view"]
@@ -202,3 +217,38 @@ def test_manifest_records_layout_version(spark, tmp_path):
     state.merge_batch(spark, spark.createDataFrame(EVENTS, COLS))
     with open(os.path.join(state.path, "_MANIFEST.json")) as f:
         assert json.load(f)["layout"] == SCD2_LAYOUT_VERSION
+
+
+def test_merge_batch_equals_reference_property(spark, tmp_path):
+    """Random histories (1-4 users, tied ts_ms, 1-3 time-ordered batch
+    splits) merged batch by batch, with one committed batch replayed under
+    its id at or after its own merge, equal the pure-Python reference."""
+    dirs = itertools.count()
+    event = st.tuples(
+        st.integers(1, 4), st.sampled_from(["view", "click"]), st.integers(0, 3)
+    )
+
+    @settings(max_examples=12, deadline=None)
+    @given(st.lists(event, min_size=1, max_size=10), st.data())
+    def check(drawn, data):
+        rows = sorted(
+            ((u, t, ts * 1000, e) for e, (u, t, ts) in enumerate(drawn, 1)),
+            key=lambda r: (r[2], r[3]),
+        )
+        cuts = sorted(
+            data.draw(st.sets(st.integers(1, len(rows)), max_size=2))
+            - {len(rows)}
+        )
+        batches = [rows[a:b] for a, b in zip([0, *cuts], [*cuts, len(rows)])]
+        replay = data.draw(st.integers(0, len(batches) - 1))
+        after = data.draw(st.integers(replay, len(batches) - 1))
+        state = Scd2State(str(tmp_path / f"scd2_{next(dirs)}"), n_buckets=4)
+        for i, b in enumerate(batches):
+            state.merge_batch(spark, spark.createDataFrame(b, COLS), batch_id=i)
+            if i == after:  # foreachBatch re-delivers a committed batch
+                again = spark.createDataFrame(batches[replay], COLS)
+                state.merge_batch(spark, again, batch_id=replay)
+        assert _rows(state.read(spark)) == _reference(rows)
+        assert state.committed_batch_ids() == set(range(len(batches)))
+
+    check()

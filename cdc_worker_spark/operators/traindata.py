@@ -187,16 +187,14 @@ def pq_assign_udf(cents_per_sub: list, sub_w: int, dim: int):
     across the JVM↔Arrow boundary once PER SUBSPACE (m ArrowEvalPython
     nodes, m Python-worker round trips per batch — q_emb_pq was the
     suite's worst 32-core scaler at 0.49). All m codebooks ride one UDF;
-    per subspace the math is executed on an ``ascontiguousarray`` slice so
-    the distances are bit-identical to the multipass form (same
-    |x|²+|c|²-2xc expansion, same float64 BLAS shapes — asserted in
-    tests/test_traindata.py::test_pq_codes_fused_equals_multipass_form).
-    A vector whose length is not ``dim`` (NULL included) is unassignable
-    as a whole: all codes NULL and sq_err 0.0, even when its length
-    still fills whole subspaces (e.g. 32 at dim 64) — no partial codes
-    from a vector outside the codebook's space, and no part in training
-    the codebooks. The multipass form in :func:`pq_codes` applies the
-    same rule."""
+    per subspace the math is the |x|²+|c|²-2xc expansion on an
+    ``ascontiguousarray`` slice (codes and errors asserted against a numpy
+    re-derivation in tests/test_traindata.py::
+    test_pq_assignment_matches_numpy_reference). A vector whose length is
+    not ``dim`` (NULL included) is unassignable as a whole: all codes NULL
+    and sq_err 0.0, even when its length still fills whole subspaces
+    (e.g. 32 at dim 64) — no partial codes from a vector outside the
+    codebook's space, and no part in training the codebooks."""
     import numpy as np
     import pandas as pd
 
@@ -208,7 +206,7 @@ def pq_assign_udf(cents_per_sub: list, sub_w: int, dim: int):
     def assign(dv: pd.Series) -> pd.DataFrame:
         n = len(dv)
         out_codes = pd.Series([None] * n, dtype=object, index=dv.index)
-        # bad rows carry 0.0, matching greatest(NULL, 0.0) in the JVM fold
+        # unassignable rows carry sq_err 0.0
         out_err = pd.Series([0.0] * n, dtype="float64", index=dv.index)
         if not n:
             return pd.DataFrame({"codes": out_codes, "sq_err": out_err})
@@ -218,8 +216,8 @@ def pq_assign_udf(cents_per_sub: list, sub_w: int, dim: int):
             codes = np.empty((V.shape[0], m), dtype=np.int64)
             err = np.zeros(V.shape[0], dtype=np.float64)
             for j in range(m):
-                # contiguous copy == the multipass form's np.stack of the
-                # JVM-sliced lists (identical BLAS input layout)
+                # contiguous copy: the same BLAS input layout as a
+                # stack of the sliced subvectors
                 Vj = np.ascontiguousarray(V[:, j * sub_w : (j + 1) * sub_w])
                 D = (
                     (Vj * Vj).sum(axis=1)[:, None]
@@ -239,8 +237,7 @@ def pq_assign_udf(cents_per_sub: list, sub_w: int, dim: int):
 
 
 def pq_codes(
-    emb: DataFrame, emb_path: str, m: int = PQ_M, k: int = PQ_K,
-    fused: bool = True,
+    emb: DataFrame, emb_path: str, m: int = PQ_M, k: int = PQ_K
 ) -> DataFrame:
     """Product-quantize ``emb`` (must carry dv): per subspace j, Lloyd-train
     K centroids on the dim/m-wide slice, assign the nearest codeword, and
@@ -281,43 +278,14 @@ def pq_codes(
                 sub, cache_key=f"{emb_path}#pq{m}x{k}s{j}", k=k, n_iters=2
             )
         )
-    if fused:
-        # r13: one ArrowEvalPython node for all m subspaces (see
-        # pq_assign_udf). Bit-equal to the multipass branch below.
-        assign = pq_assign_udf(cents_per_sub, sub_w, dim)
-        out = emb.withColumn("_pq", assign(F.col("dv")))
-        return out.select(
-            "*",
-            *[
-                F.col("_pq.codes")[j].alias(f"code_{j}")
-                for j in range(m)
-            ],
-            F.col("_pq.sq_err").alias("sq_err"),
-        ).drop("_pq")
-    # multipass reference form (kept for the fused-equality test): one
-    # centroid_dists_udf Arrow pass per subspace + JVM argmin/min fold
-    out = emb
-    for j in range(m):
-        sub_col = F.slice("dv", j * sub_w + 1, sub_w)
-        out = out.withColumn(
-            f"_d{j}", centroid_dists_udf(cents_per_sub[j])(sub_col)
-        )
-    code_cols = []
-    err_total = F.lit(0.0)
-    for j in range(m):
-        d = F.col(f"_d{j}")
-        code_cols.append(
-            F.when(ok, F.array_position(d, F.array_min(d)) - 1)
-            .cast("int")
-            .alias(f"code_{j}")
-        )
-        # the |x|^2+|c|^2-2xc expansion can go epsilon-negative at exact hits
-        err_total = err_total + F.greatest(F.array_min(d), F.lit(0.0))
+    # one ArrowEvalPython node for all m subspaces (see pq_assign_udf)
+    assign = pq_assign_udf(cents_per_sub, sub_w, dim)
+    out = emb.withColumn("_pq", assign(F.col("dv")))
     return out.select(
         "*",
-        *code_cols,
-        F.when(ok, err_total).otherwise(0.0).alias("sq_err"),
-    ).drop(*[f"_d{j}" for j in range(m)])
+        *[F.col("_pq.codes")[j].alias(f"code_{j}") for j in range(m)],
+        F.col("_pq.sq_err").alias("sq_err"),
+    ).drop("_pq")
 
 
 @query("q_emb_pq")  # rows-only: Lloyd training is not SQL-expressible;

@@ -10,8 +10,10 @@ from cdc_worker_spark.streaming.pipeline import (
     bootstrap_from_snapshot,
     merge_latest_wins,
     read_event_stream,
+    read_json_stream,
     run_cdc_pipeline,
     stale_topics,
+    start_batches,
 )
 from cdc_worker_spark.streaming.registry import (
     SchemaRegistry,
@@ -28,6 +30,7 @@ from cdc_worker_spark.streaming.scd2 import (
 from cdc_worker_spark.streaming.sinks import forward_events, run_forwarding_sink
 from cdc_worker_spark.streaming.windows import (
     running_counters,
+    session_close_summaries,
     session_counts,
     sliding_counts,
     stream_static_enrich,
@@ -51,15 +54,18 @@ __all__ = [
     "forward_events",
     "merge_latest_wins",
     "read_event_stream",
+    "read_json_stream",
     "resolve_new_ids",
     "run_cdc_pipeline",
     "run_multiplexed_pipeline",
     "run_forwarding_sink",
     "run_scd2_pipeline",
     "running_counters",
+    "session_close_summaries",
     "session_counts",
     "sliding_counts",
     "stale_topics",
+    "start_batches",
     "stream_static_enrich",
     "stream_stream_interval_join",
     "tumbling_counts",

@@ -29,6 +29,7 @@ from cdc_worker_spark.operators.dedup_index import (
     extend_dedup_index,
     probe_dedup_index,
 )
+from cdc_worker_spark.streaming.pipeline import read_json_stream, start_batches
 
 DOC_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -864,11 +865,6 @@ def run_dedup_ingest_pipeline(
             )
     os.makedirs(checkpoint_dir, exist_ok=True)
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_dir)
-
     committed_path = os.path.join(checkpoint_dir, "_ingest_committed")
 
     def _committed() -> set[int]:
@@ -1031,9 +1027,5 @@ def run_dedup_ingest_pipeline(
         )
         return want if want is not None else 0
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = read_json_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger)
+    return start_batches(stream, apply_batch, checkpoint_dir, available_now)

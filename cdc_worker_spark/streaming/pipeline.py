@@ -15,6 +15,16 @@ Reference mapping:
 - C4/D10 DLQ            : corrupt payloads appended to a failures table;
   the stream continues.
 
+The micro-batch loop lives here once, for every foreachBatch pipeline in
+the package (this one, the multiplexed, SCD2, dedup-ingest and forwarding
+pipelines): ``read_json_stream`` is the one file-source reader,
+``start_batches`` the one foreachBatch (persist, apply, unpersist,
+checkpoint, availableNow) and ``fault_point`` the one chaos seam, a no-op
+that tests monkeypatch to kill a batch at ``pre``, ``mid`` (between two
+side effects) or ``post`` (before the checkpoint commit). Replays
+re-deliver, so each pipeline's ``apply`` must be idempotent per batch id
+(reference client.js:227-242).
+
 State storage: a key-hash-BUCKETED manifest-versioned parquet table
 (``BucketedStore``: an explicit, dependency-free stand-in for a
 Delta/Iceberg MERGE target — the production swap-in is ``MERGE INTO state
@@ -31,11 +41,13 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
@@ -47,6 +59,21 @@ from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 AVRO_WIRE_SCHEMA = (
     "replay_id_b64 STRING, schema_id STRING, payload_b64 STRING"
 )
+
+
+def read_json_stream(
+    spark: SparkSession,
+    schema: StructType | str,
+    input_dir: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The one file-source reader: JSON lines of ``schema`` from
+    ``input_dir``, at most ``max_files_per_trigger`` files per micro-batch
+    (A5 backpressure; None drains the whole backlog in one batch)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(input_dir)
 
 
 def read_event_stream(
@@ -61,16 +88,48 @@ def read_event_stream(
     surfaces them as the BINARY ``payload`` column decode_envelope's avro
     branch expects."""
     if codec == "json":
-        reader = spark.readStream.schema(ENVELOPE_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.json(input_dir)
-    reader = spark.readStream.schema(AVRO_WIRE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(input_dir).select(
-        "replay_id_b64", "schema_id", F.unbase64("payload_b64").alias("payload")
+        return read_json_stream(spark, ENVELOPE_SCHEMA, input_dir, max_files_per_trigger)
+    return read_json_stream(
+        spark, AVRO_WIRE_SCHEMA, input_dir, max_files_per_trigger
+    ).select("replay_id_b64", "schema_id", F.unbase64("payload_b64").alias("payload"))
+
+
+def fault_point(batch_id: int, point: str) -> None:
+    """Chaos seam: does nothing. Tests monkeypatch it (as
+    ``pipeline.fault_point``, so callers look it up through this module) to
+    raise at ``pre`` (before the batch's apply), ``mid`` (between a
+    pipeline's two side effects) or ``post`` (after apply, before the
+    checkpoint commit)."""
+
+
+def start_batches(
+    stream: DataFrame,
+    apply: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """The one foreachBatch loop: each micro-batch is persisted, handed to
+    ``apply(batch_df, batch_id)`` and unpersisted, between the ``pre`` and
+    ``post`` fault points. The file source and ``checkpoint_dir`` make a
+    batch replayable under its id after a crash, so ``apply`` must be
+    idempotent per batch id. ``available_now`` drains the backlog and
+    stops; otherwise the default trigger runs continuously."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        fault_point(batch_id, "pre")
+        batch_df = batch_df.persist()
+        try:
+            apply(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+        fault_point(batch_id, "post")
+
+    writer = stream.writeStream.foreachBatch(run).option(
+        "checkpointLocation", checkpoint_dir
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 @dataclass
@@ -413,37 +472,29 @@ def run_cdc_pipeline(
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            # C4/D10: corrupt events to the dead-letter table, stream goes
-            # on; one row per replay id, also when the batch is replayed
-            # after a kill between this append and the checkpoint commit
-            # (a NULL id matches no earlier row: at most one per batch)
-            dead = batch_df.filter("is_corrupt").dropDuplicates(["replay_id"])
-            if os.path.isdir(dlq_dir):
-                seen = spark.read.schema("replay_id DECIMAL(20,0)").parquet(dlq_dir)
-                dead = dead.join(seen, "replay_id", "left_anti")
-            (
-                dead.select(
-                    "replay_id",
-                    F.col("schema_id"),
-                    F.col("raw_payload"),
-                    F.lit(
-                        f"payload {'JSON' if codec == 'json' else codec} decode failed"
-                    ).alias("error"),
-                    F.current_timestamp().alias("failed_at"),
-                )
-                .write.mode("append")
-                .parquet(dlq_dir)
+        # C4/D10: corrupt events to the dead-letter table, stream goes on;
+        # one row per replay id, also when the batch is replayed after a
+        # kill between this append and the checkpoint commit (a NULL id
+        # matches no earlier row: at most one per batch)
+        dead = batch_df.filter("is_corrupt").dropDuplicates(["replay_id"])
+        if os.path.isdir(dlq_dir):
+            seen = spark.read.schema("replay_id DECIMAL(20,0)").parquet(dlq_dir)
+            dead = dead.join(seen, "replay_id", "left_anti")
+        (
+            dead.select(
+                "replay_id",
+                F.col("schema_id"),
+                F.col("raw_payload"),
+                F.lit(
+                    f"payload {'JSON' if codec == 'json' else codec} decode failed"
+                ).alias("error"),
+                F.current_timestamp().alias("failed_at"),
             )
-            good = batch_df.filter(~F.col("is_corrupt")).select(*select_cols)
-            merge_latest_wins(state, good)
-        finally:
-            batch_df.unpersist()
+            .write.mode("append")
+            .parquet(dlq_dir)
+        )
+        fault_point(batch_id, "mid")
+        good = batch_df.filter(~F.col("is_corrupt")).select(*select_cols)
+        merge_latest_wins(state, good)
 
-    stream = decoded.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
+    return start_batches(decoded, apply_batch, checkpoint_dir, available_now)

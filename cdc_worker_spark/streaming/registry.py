@@ -24,6 +24,7 @@ Scale: the registry dict is O(topics) and ships inside the serialized plan
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_worker_spark.functions.offsets import decode_replay_id_col
+from cdc_worker_spark.streaming import pipeline
 from cdc_worker_spark.streaming.envelope import decode_envelope
 
 
@@ -180,7 +182,6 @@ def run_multiplexed_pipeline(
     registry: SchemaRegistry,
     max_files_per_trigger: int | None = 1,
     available_now: bool = True,
-    fault_injector=None,
 ):
     """Multi-topic CDC stream with MID-STREAM schema evolution: each
     micro-batch first resolves any schema id it carries that the registry has
@@ -200,57 +201,30 @@ def run_multiplexed_pipeline(
     WAL pins batch_id -> file set, so the replayed batch is byte-identical;
     if mid-stream schema resolution advanced between attempts, overwrite
     also retires the first attempt's DLQ rows that now decode.
-
-    ``fault_injector(batch_id, point)`` is the chaos seam
-    (tests/test_streaming_chaos.py): called at ``pre`` (before decode),
-    ``mid`` (between the two sink writes — the torn-write window) and
-    ``post`` (after both writes, before the checkpoint commit); raising
-    kills the query at exactly that point.
     """
-    import os
-
-    from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA
-
-    reader = spark.readStream.schema(ENVELOPE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.json(input_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if fault_injector is not None:
-            fault_injector(batch_id, "pre")
-        batch_df = batch_df.persist()
+        resolve_new_ids(registry, batch_df)
+        decoded = decode_multiplexed(batch_df, registry).persist()
         try:
-            resolve_new_ids(registry, batch_df)
-            decoded = decode_multiplexed(batch_df, registry).persist()
-            try:
-                # DLQ is corrupt-rows-only and small by definition:
-                # repartition(1) keeps one schema-bearing file per batch
-                # even when the batch has zero corrupt rows, so a replay
-                # always overwrites cleanly and the parent dir always
-                # reads. repartition, NOT coalesce: coalesce(1) propagates
-                # through the filter and runs the whole batch decode (and
-                # the cache materialization) in ONE task — measured 4.7x
-                # off the multi-topic aggregate MB/s; the shuffle boundary
-                # keeps decode parallel and moves only corrupt rows.
-                decoded.filter("is_corrupt").repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(dlq_dir, f"batch={batch_id}"))
-                if fault_injector is not None:
-                    fault_injector(batch_id, "mid")
-                decoded.filter("NOT is_corrupt").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
-            finally:
-                decoded.unpersist()
+            # DLQ is corrupt-rows-only and small by definition:
+            # repartition(1) keeps one schema-bearing file per batch even
+            # when the batch has zero corrupt rows, so a replay always
+            # overwrites cleanly and the parent dir always reads.
+            # repartition, NOT coalesce: coalesce(1) propagates through the
+            # filter and runs the whole batch decode (and the cache
+            # materialization) in ONE task — measured 4.7x off the
+            # multi-topic aggregate MB/s; the shuffle boundary keeps decode
+            # parallel and moves only corrupt rows.
+            decoded.filter("is_corrupt").repartition(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(dlq_dir, f"batch={batch_id}"))
+            pipeline.fault_point(batch_id, "mid")
+            decoded.filter("NOT is_corrupt").write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch={batch_id}")
+            )
         finally:
-            batch_df.unpersist()
-        if fault_injector is not None:
-            fault_injector(batch_id, "post")
+            decoded.unpersist()
 
-    stream = raw.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
+    raw = pipeline.read_event_stream(spark, input_dir, max_files_per_trigger)
+    return pipeline.start_batches(raw, apply_batch, checkpoint_dir, available_now)

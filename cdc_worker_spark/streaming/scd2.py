@@ -13,9 +13,10 @@ Design (the same shapes the rest of the streaming layer uses):
   bucketed manifest-versioned parquet, copy-on-write per touched bucket,
   time travel and vacuum. Only the user_id bucket hash, the SCD2 schema
   and the refusal of layout-v1 state are this module's own;
-- commit record: the committed batch ids ride in the same manifest commit
-  as the data, so foreachBatch replays are no-ops and interval counts never
-  double-count;
+- commit record: a high-water mark, the last committed batch id, rides in
+  the same manifest commit as the data. foreachBatch ids are monotone per
+  checkpoint, so a replayed batch (id at or below the mark) is a no-op and
+  interval counts never double-count;
 - the stitch is the batch operator's kernel (operators/warehouse.
   stitch_versions): stored intervals ARE runs and an event is a one-event
   run, so "merge stored history with a new batch" = stitch the stored runs
@@ -42,7 +43,11 @@ from pyspark.sql.types import (
 )
 
 from cdc_worker_spark.operators.warehouse import event_runs, stitch_versions
-from cdc_worker_spark.streaming.pipeline import BucketedStore
+from cdc_worker_spark.streaming.pipeline import (
+    BucketedStore,
+    read_json_stream,
+    start_batches,
+)
 
 #: on-disk layout version. v1 had no anchor_id column; v2 (current) added
 #: it as the deterministic stitch tiebreak. Reading v1 state with the v2
@@ -70,8 +75,8 @@ SCD2_SCHEMA = StructType(
 class Scd2State(BucketedStore):
     """The SCD2 dimension table: one row per version per entity, bucketed
     on user_id in the shared bucketed store (vacuum and time travel come
-    with it). Only a v2-layout manifest is read, and the committed batch
-    ids ride in the same manifest commit as the data."""
+    with it). Only a v2-layout manifest is read, and the last committed
+    batch id rides in the same manifest commit as the data."""
 
     key = ("user_id",)
     schema = SCD2_SCHEMA
@@ -90,6 +95,10 @@ class Scd2State(BucketedStore):
                 "dimension from the batch operator or replay the stream into "
                 "a fresh state directory."
             )
+        # manifests written before the high-water mark kept every id
+        ids = manifest.pop("committed_batch_ids", None)
+        if ids is not None:
+            manifest["committed_batch_id"] = max(ids, default=-1)
         return manifest
 
     def read(
@@ -97,13 +106,14 @@ class Scd2State(BucketedStore):
     ) -> DataFrame | None:
         return self.read_full(spark, at_version=at_version)
 
-    def committed_batch_ids(self) -> set[int]:
-        """Batch ids already folded into the stored history. Recorded in
-        the SAME manifest os.replace that publishes the data, so "state
-        merged" and "batch committed" are one atomic step — no
-        crash-between-two-writes replay corruption (a separate ledger file
-        had exactly that window)."""
-        return set(self._manifest().get("committed_batch_ids", []))
+    def committed_batch_id(self) -> int:
+        """The last batch id folded into the stored history (-1: none).
+        foreachBatch ids are monotone per checkpoint, so every id at or
+        below it is committed. Recorded in the SAME manifest os.replace
+        that publishes the data, so "state merged" and "batch committed"
+        are one atomic step — no crash-between-two-writes replay corruption
+        (a separate ledger file had exactly that window)."""
+        return self._manifest().get("committed_batch_id", -1)
 
     def merge_batch(
         self, spark: SparkSession, batch: DataFrame, batch_id: int | None = None
@@ -115,12 +125,11 @@ class Scd2State(BucketedStore):
         ``_bucket``, which also serves the kernel's (_bucket, user_id)
         windows, so each task re-stitches and writes whole buckets (one
         file per bucket) under a new manifest version. When ``batch_id`` is
-        given, the merge is exactly-once: an id already in the manifest's
-        committed set is a no-op, and the id is committed by the same
-        atomic manifest replace that publishes the buckets."""
+        given, the merge is exactly-once: an id at or below the committed
+        mark is a no-op, and the id becomes the mark in the same atomic
+        manifest replace that publishes the buckets."""
         self.sync_layout()
-        committed = self.committed_batch_ids()
-        if batch_id is not None and batch_id in committed:
+        if batch_id is not None and batch_id <= self.committed_batch_id():
             return
         touched = sorted(batch.agg(F.collect_set(self.bucket_col())).first()[0] or [])
         runs = event_runs(batch)
@@ -133,9 +142,7 @@ class Scd2State(BucketedStore):
             ),
             ("_bucket", "user_id"),
         )
-        stamp = {}
-        if batch_id is not None:
-            stamp["committed_batch_ids"] = sorted(committed | {int(batch_id)})
+        stamp = {} if batch_id is None else {"committed_batch_id": int(batch_id)}
         self.write_buckets(
             merged.select(*SCD2_SCHEMA.fieldNames(), "_bucket"), touched, stamp
         )
@@ -150,33 +157,21 @@ def run_scd2_pipeline(
     available_now: bool = True,
 ):
     """Stream jsonl change events (user_id, event_type, ts_ms, event_id)
-    into an incrementally-maintained SCD2 dimension. foreachBatch with the
-    batch id committed INSIDE the state manifest (one os.replace publishes
-    buckets + commit record together) = exactly-once interval counts under
-    replay, with no crash window between "merged" and "recorded"."""
-    os.makedirs(checkpoint_dir, exist_ok=True)
+    into an incrementally-maintained SCD2 dimension and return the query.
+    The batch id is committed INSIDE the state manifest (one os.replace
+    publishes buckets + commit mark together) = exactly-once interval
+    counts under replay, with no crash window between "merged" and
+    "recorded". The checkpoint lives at ``checkpoint_dir/query``."""
     state = Scd2State(state_dir)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state.merge_batch(spark, batch_df, batch_id=batch_id)
-
-    event_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_ms", LongType()),
-            StructField("event_id", LongType()),
-        ]
+    stream = read_json_stream(
+        spark,
+        "user_id long, event_type string, ts_ms long, event_id long",
+        input_dir,
+        max_files_per_trigger,
     )
-    reader = spark.readStream.schema(event_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_dir)
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", os.path.join(checkpoint_dir, "query")
+    return start_batches(
+        stream,
+        lambda batch_df, batch_id: state.merge_batch(spark, batch_df, batch_id=batch_id),
+        os.path.join(checkpoint_dir, "query"),
+        available_now,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()

@@ -11,8 +11,8 @@ Spark-first shape: the POST happens EXECUTOR-side inside ``mapInPandas`` —
 rows never collect to the driver, transport parallelism = partition count
 (the reference's workpool `maxParallelism: 5` ↔ partition count here), and
 the Arrow batch is the natural "batch of events" unit. Failed rows flow back
-as ordinary result rows and append to the failures table — a distributed
-dead-letter path with no side-channel state.
+as ordinary result rows and land in the failures table, one directory per
+micro-batch — a distributed dead-letter path with no side-channel state.
 
 The transport is an injected callable ``poster(topic, payload_json) -> None``
 (raise to fail) — the HTTP client in production, a recording fake in tests;
@@ -22,6 +22,7 @@ the gRPC/HTTP specifics are connector configuration, not operator logic
 
 from __future__ import annotations
 
+import os
 import time
 from collections.abc import Callable, Iterator
 
@@ -29,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from cdc_worker_spark.streaming.pipeline import start_batches
 
 Poster = Callable[[str, str], None]
 
@@ -99,16 +102,16 @@ def run_forwarding_sink(
     available_now: bool = True,
 ):
     """C5 end-to-end: stream -> per-batch executor-side POST with retries ->
-    permanent failures appended to the cdcFailures table; the stream never
-    stops on a delivery failure (log-and-continue, index.ts:56-59)."""
+    permanent failures written to the cdcFailures table; the stream never
+    stops on a delivery failure (log-and-continue, index.ts:56-59). Each
+    batch's failures overwrite their own ``failures_dir/batch=<id>``
+    directory (one file, also when empty), so a batch replayed after a kill
+    before the checkpoint commit cannot duplicate them."""
 
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         failures = forward_events(batch_df, poster, max_attempts, base_delay_s)
-        failures.write.mode("append").parquet(failures_dir)
+        failures.repartition(1).write.mode("overwrite").parquet(
+            os.path.join(failures_dir, f"batch={batch_id}")
+        )
 
-    stream = decoded_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
+    return start_batches(decoded_stream, apply_batch, checkpoint_dir, available_now)

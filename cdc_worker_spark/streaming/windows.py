@@ -201,113 +201,15 @@ def stream_stream_interval_join(
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API): timer-closed
-# sessions. applyInPandasWithState (above) covers the legacy GroupState
-# surface; this is the modern processor API — typed state handles + true
-# EVENT-TIME timers — which is what a production session-close pipeline
-# uses at scale (state lives in the state store, incl. RocksDB; timers fire
-# when the watermark passes, not when a batch happens to arrive).
-# ---------------------------------------------------------------------------
-
 SESSION_SUMMARY_SCHEMA = (
     "record_id string, n_events bigint, first_ts_ms bigint, last_ts_ms bigint"
 )
 
 
-def _session_processor(gap_ms: int):
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class SessionCloser(StatefulProcessor):
-        """Per-key session accumulator. New events MERGE/SPLIT against the
-        stored pending sessions by the gap rule (events later than
-        last + gap open a NEW session instead of extending the old one —
-        otherwise a batch that spans a session boundary would glue two
-        sessions together before the close timer ever fired); one
-        event-time timer is armed at the earliest pending close, and when
-        it fires every session whose close time the watermark passed emits
-        and is dropped. State per key is O(pending sessions inside the
-        watermark horizon) longs; timers are state-store-backed (no driver
-        involvement)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.sess = handle.getValueState(
-                "sess", "ns ARRAY<BIGINT>, t0s ARRAY<BIGINT>, t1s ARRAY<BIGINT>"
-            )
-
-        def _sessions(self) -> list[list[int]]:
-            if not self.sess.exists():
-                return []
-            ns, t0s, t1s = self.sess.get()
-            return [[n, a, b] for n, a, b in zip(ns, t0s, t1s)]
-
-        def _rearm(self, sessions: list[list[int]]) -> None:
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            if sessions:
-                self.sess.update(
-                    (
-                        [s[0] for s in sessions],
-                        [s[1] for s in sessions],
-                        [s[2] for s in sessions],
-                    )
-                )
-                self.handle.registerTimer(sessions[0][2] + gap_ms)
-            else:
-                self.sess.clear()
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            pts: list[int] = []
-            for pdf in rows:
-                pts.extend(int(t) for t in pdf["ts_ms"])
-            items = sorted(
-                self._sessions() + [[1, t, t] for t in pts], key=lambda s: s[1]
-            )
-            sessions: list[list[int]] = []
-            for it in items:
-                if sessions and it[1] <= sessions[-1][2] + gap_ms:
-                    sessions[-1][0] += it[0]
-                    sessions[-1][2] = max(sessions[-1][2], it[2])
-                else:
-                    sessions.append(it)
-            self._rearm(sessions)
-            return iter(())  # nothing emits until a session closes
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            wm = timerValues.getCurrentWatermarkInMs()
-            sessions = self._sessions()
-            done = [s for s in sessions if s[2] + gap_ms <= wm]
-            self._rearm([s for s in sessions if s[2] + gap_ms > wm])
-            if done:
-                yield pd.DataFrame(
-                    {
-                        "record_id": [key[0]] * len(done),
-                        "n_events": [s[0] for s in done],
-                        "first_ts_ms": [s[1] for s in done],
-                        "last_ts_ms": [s[2] for s in done],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return SessionCloser()
-
-
-#: fallback state: the key's open/pending sessions as parallel arrays
+#: session-close state: the key's open/pending sessions as parallel arrays
 #: (ns[i], t0s[i], t1s[i]) sorted by t0 — normally 1-2 entries; bounded by
 #: sessions inside the watermark horizon, same bound as the built-in agg.
-_SESSION_FB_STATE_SCHEMA = T.StructType(
+_SESSION_STATE_SCHEMA = T.StructType(
     [
         T.StructField("ns", T.ArrayType(T.LongType())),
         T.StructField("t0s", T.ArrayType(T.LongType())),
@@ -316,22 +218,23 @@ _SESSION_FB_STATE_SCHEMA = T.StructType(
 )
 
 
-def session_close_summaries_fallback(
-    events: DataFrame, gap: str = "30 minutes", gap_ms: int = 30 * 60_000
-) -> DataFrame:
-    """Protobuf-free twin of :func:`session_close_summaries` on the legacy
-    ``applyInPandasWithState`` + ``EventTimeTimeout`` surface (no
-    Python<->JVM state server, so it runs where ``transformWithState``'s
-    protobuf dependency is absent — this container). Same contract: one
-    appended row per CLOSED session, closed exactly when the event-time
-    watermark passes last_event + gap, matching the built-in
-    ``session_window`` aggregation's closed set (asserted in tests).
+def session_close_summaries(events: DataFrame, gap_ms: int = 30 * 60_000) -> DataFrame:
+    """Per-key session summaries on ``applyInPandasWithState`` +
+    ``EventTimeTimeout``: one appended row per CLOSED session (count +
+    span), emitted exactly when the event-time watermark passes
+    last_event + ``gap_ms``. The watermark delay is the gap itself, so the
+    closed set matches the built-in ``session_window`` aggregation's for
+    the same gap (asserted in tests), and the operator is the template for
+    session logic the built-in can't express (per-session payload digests,
+    conditional emission, cross-session carry-over).
 
-    Unlike the timer processor, a key's pending sessions live in ONE
-    GroupState value (parallel arrays): new events merge/split against
-    them by the gap rule, sessions whose close time the watermark passed
-    emit, and one event-time timeout re-arms at the earliest remaining
-    close — O(sessions inside the watermark horizon) state per key."""
+    A key's pending sessions live in ONE GroupState value (parallel
+    arrays): new events merge/split against them by the gap rule (events
+    later than last + gap open a NEW session, so a batch spanning a
+    session boundary never glues two sessions together), sessions whose
+    close time the watermark passed emit, and one event-time timeout
+    re-arms at the earliest remaining close — O(sessions inside the
+    watermark horizon) state per key."""
 
     def _close(key, sessions, wm):
         """Split sessions into (emit-frame, keep) by the watermark."""
@@ -380,40 +283,15 @@ def session_close_summaries_fallback(
 
     with_ts = events.withColumn(
         "ts_ms", (F.col("commit_ts").cast("double") * 1000).cast("long")
-    ).withWatermark("commit_ts", gap)
+    ).withWatermark("commit_ts", f"{gap_ms} milliseconds")
     return (
         with_ts.select("record_id", "commit_ts", "ts_ms")
         .groupBy("record_id")
         .applyInPandasWithState(
             update,
             outputStructType=SESSION_SUMMARY_SCHEMA,
-            stateStructType=_SESSION_FB_STATE_SCHEMA,
+            stateStructType=_SESSION_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def session_close_summaries(
-    events: DataFrame, gap: str = "30 minutes", gap_ms: int = 30 * 60_000
-) -> DataFrame:
-    """Timer-closed session summaries via ``transformWithStateInPandas``:
-    one row per CLOSED session (count + span), emitted exactly when the
-    event-time watermark passes session_end + gap. Equivalent to the
-    built-in ``session_window`` aggregation's closed windows — asserted in
-    tests — but as an arbitrary-state processor, the template for session
-    logic the built-in can't express (per-session payload digests,
-    conditional emission, cross-session carry-over)."""
-    with_ts = events.withColumn(
-        "ts_ms", (F.col("commit_ts").cast("double") * 1000).cast("long")
-    ).withWatermark("commit_ts", gap)
-    return (
-        with_ts.select("record_id", "commit_ts", "ts_ms")
-        .groupBy("record_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_session_processor(gap_ms),
-            outputStructType=SESSION_SUMMARY_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
         )
     )

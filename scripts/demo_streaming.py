@@ -136,10 +136,11 @@ def main() -> int:
         os.makedirs(scd_in, exist_ok=True)
         with open(os.path.join(scd_in, "s1.jsonl"), "w") as f:
             f.writelines(json.dumps(r) + "\n" for r in rows1)
-        run_scd2_pipeline(spark, scd_in, scd_state, scd_chk)
+        run_scd2_pipeline(spark, scd_in, scd_state, scd_chk).awaitTermination()
         with open(os.path.join(scd_in, "s2.jsonl"), "w") as f:
             f.writelines(json.dumps(r) + "\n" for r in rows2)
-        run_scd2_pipeline(spark, scd_in, scd_state, scd_chk)  # restart
+        # restart
+        run_scd2_pipeline(spark, scd_in, scd_state, scd_chk).awaitTermination()
         got = sorted(
             (r.user_id, r.version, r.event_type, r.valid_from_ms,
              r.valid_to_ms, r.n_events)

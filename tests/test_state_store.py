@@ -232,7 +232,7 @@ def test_scd2_vacuum_and_time_travel(spark, tmp_path):
     assert removed  # the earlier copies of users 1 and 2's buckets
     assert sorted(state.read(spark).collect()) == before
     assert state.vacuum() == []
-    assert state.committed_batch_ids() == {0, 1, 2}
+    assert state.committed_batch_id() == 2
     for b, v in state._manifest()["buckets"].items():
         assert os.path.exists(os.path.join(root, f"v{v}", f"_bucket={b}"))
 
@@ -254,6 +254,25 @@ def test_manifest_code_lives_in_one_store():
                 if "_MANIFEST" in text or "os.replace(" in text:
                     hits.append(os.path.relpath(path, pkg))
     assert sorted(hits) == ["operators/index_layout.py", "streaming/pipeline.py"]
+
+
+def test_micro_batch_loop_lives_in_one_module():
+    """Every foreachBatch pipeline starts through pipeline.start_batches
+    and reads through pipeline.read_json_stream; a foreachBatch or a
+    file-source reader anywhere else under the package is a fork of the
+    loop."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cdc_worker_spark")
+    hits = set()
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as f:
+                    text = f.read()
+                if "foreachBatch(" in text or "readStream.schema(" in text:
+                    hits.add(os.path.relpath(path, pkg))
+    assert hits == {"streaming/pipeline.py"}
 
 
 def test_touched_bucket_merge_is_latest_wins_within_bucket(spark, tmp_path):

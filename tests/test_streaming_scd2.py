@@ -1,8 +1,8 @@
 """Incremental SCD2 maintenance (streaming/scd2.py): the stitched
 incremental result must equal a from-scratch build (a pure-Python
 gaps-and-islands reference that shares no code with the engine), replays
-must be no-ops (the manifest's commit record), and only touched buckets
-may rewrite."""
+must be no-ops (the manifest's committed-batch mark), and only touched
+buckets may rewrite."""
 
 from __future__ import annotations
 
@@ -121,24 +121,23 @@ def test_pipeline_replay_is_noop_and_restart_resumes(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     _write_jsonl(os.path.join(input_dir, "b0.jsonl"), EVENTS)
-    run_scd2_pipeline(spark, input_dir, state_dir, ckpt)
+    run_scd2_pipeline(spark, input_dir, state_dir, ckpt).awaitTermination()
     first = _rows(Scd2State(state_dir).read(spark))
     assert first == _reference(EVENTS)
 
-    # simulate the foreachBatch replay window: the committed batch ids
-    # live INSIDE the state manifest (atomic with the data), so a
-    # replayed apply of batch 0 is a no-op (counts unchanged)
+    # simulate the foreachBatch replay window: the committed mark lives
+    # INSIDE the state manifest (atomic with the data), so a replayed
+    # apply of batch 0 is a no-op (counts unchanged)
     state = Scd2State(state_dir)
-    committed_before = state.committed_batch_ids()
-    assert committed_before  # batch 0 recorded atomically with its merge
-    run_scd2_pipeline(spark, input_dir, state_dir, ckpt)  # no new files
+    assert state.committed_batch_id() == 0  # recorded with its merge
+    run_scd2_pipeline(spark, input_dir, state_dir, ckpt).awaitTermination()
     assert _rows(Scd2State(state_dir).read(spark)) == first
-    assert Scd2State(state_dir).committed_batch_ids() == committed_before
+    assert Scd2State(state_dir).committed_batch_id() == 0
 
     # a genuinely new file resumes from the checkpoint and stitches
     extra = [(1, "click", 6000, 20)]
     _write_jsonl(os.path.join(input_dir, "b1.jsonl"), extra)
-    run_scd2_pipeline(spark, input_dir, state_dir, ckpt)
+    run_scd2_pipeline(spark, input_dir, state_dir, ckpt).awaitTermination()
     assert _rows(Scd2State(state_dir).read(spark)) == _reference(EVENTS + extra)
 
 
@@ -164,10 +163,35 @@ def test_merge_with_batch_id_is_exactly_once(spark, tmp_path):
     once = _rows(state.read(spark))
     state.merge_batch(spark, batch, batch_id=0)  # foreachBatch replay
     assert _rows(state.read(spark)) == once
-    assert state.committed_batch_ids() == {0}
+    assert state.committed_batch_id() == 0
     # an empty batch still records its id (no re-merge on replay)
     state.merge_batch(spark, spark.createDataFrame([], "user_id long, event_type string, ts_ms long, event_id long"), batch_id=1)
-    assert state.committed_batch_ids() == {0, 1}
+    assert state.committed_batch_id() == 1
+
+
+def test_old_manifest_id_list_reads_as_its_max(spark, tmp_path):
+    """A manifest written before the high-water mark lists every committed
+    id; it reads as its max, an id at or below it is a no-op, and the next
+    commit stores the mark alone."""
+    state = Scd2State(str(tmp_path / "scd2"), n_buckets=4)
+    state.merge_batch(spark, spark.createDataFrame(EVENTS, COLS), batch_id=0)
+    manifest_file = os.path.join(state.path, "_MANIFEST.json")
+    with open(manifest_file) as f:
+        manifest = json.load(f)
+    del manifest["committed_batch_id"]
+    manifest["committed_batch_ids"] = [0, 1, 2]
+    with open(manifest_file, "w") as f:
+        json.dump(manifest, f)
+    assert state.committed_batch_id() == 2
+    extra = spark.createDataFrame([(3, "purchase", 9500, 10)], COLS)
+    state.merge_batch(spark, extra, batch_id=2)  # replay: no-op
+    assert _rows(state.read(spark)) == _reference(EVENTS)
+    state.merge_batch(spark, extra, batch_id=3)
+    assert _rows(state.read(spark)) == _reference(EVENTS + [(3, "purchase", 9500, 10)])
+    with open(manifest_file) as f:
+        manifest = json.load(f)
+    assert manifest["committed_batch_id"] == 3
+    assert "committed_batch_ids" not in manifest
 
 
 def test_restitch_equal_timestamp_runs_deterministic(spark, tmp_path):
@@ -249,6 +273,6 @@ def test_merge_batch_equals_reference_property(spark, tmp_path):
                 again = spark.createDataFrame(batches[replay], COLS)
                 state.merge_batch(spark, again, batch_id=replay)
         assert _rows(state.read(spark)) == _reference(rows)
-        assert state.committed_batch_ids() == set(range(len(batches)))
+        assert state.committed_batch_id() == len(batches) - 1
 
     check()

@@ -216,91 +216,22 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert pairs == {(1, 10), (2, 12)}
 
 
-def test_session_close_summaries_transform_with_state(spark, tmp_path):
-    """The transformWithStateInPandas session closer (event-time timers)
-    emits exactly the CLOSED sessions the built-in session_window
-    aggregation computes for the same gap — counts and spans equal. A
-    session closes only when the watermark passes last_event + gap, so a
-    third batch far in the future flushes the earlier sessions.
-
-    Availability: transformWithStateInPandas drives its Python<->JVM state
-    server over protobuf; ``import google.protobuf`` fails in this
-    container (not installed, no network route for pip — same offline
-    class as the spark-avro jar and delta-spark). The operator
-    (streaming/windows.py::session_close_summaries) and this test body
-    are complete; any environment with `pip install protobuf` runs it.
-
-    Round-6 attempt (2026-08-14): `pip download protobuf` retried and
-    fails at DNS ("Name or service not known" for the index host) — third
-    consecutive documented failure, closing the question per VERDICT r05
-    next #2. The session-close SEMANTICS are nevertheless tested offline:
-    test_session_close_fallback_matches_window_agg below runs the
-    applyInPandasWithState fallback (no protobuf needed) against the same
-    fixture and asserts equal summaries. Round-7 probe (2026-08-15):
-    `pip download protobuf` re-ran once, still DNS-blocked; unchanged.
-    Round-8 probe (2026-08-15): re-ran once — "No matching distribution
-    found for protobuf" (index unreachable); unchanged. Round-9 probe
-    (2026-08-16): re-ran once — same "No matching distribution found for
-    protobuf" (pip index DNS-blocked); unchanged. Round-10 probe
-    (2026-08-16): re-ran once — same "No matching distribution found"
-    (pip index DNS-blocked); unchanged. Round-11 probe (2026-08-16):
-    re-ran once — `pip download protobuf` "No matching distribution
-    found" (pip index DNS-blocked); unchanged. Round-12 probe
-    (2026-08-16): re-ran once — `pip download protobuf` retries die
-    with "Name or service not known" on the index host; unchanged."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs protobuf; container is offline",
-    )
-    from cdc_worker_spark.streaming.windows import session_close_summaries
-
-    write_batch_file(
-        str(tmp_path / "in"), "b1.jsonl",
-        [
-            make_envelope(1, record_id="A", commit_ts=T0 + 1 * MIN),
-            make_envelope(2, record_id="A", commit_ts=T0 + 10 * MIN),
-            make_envelope(3, record_id="B", commit_ts=T0 + 50 * MIN),
-        ],
-    )
-    write_batch_file(
-        str(tmp_path / "in"), "b2.jsonl",
-        [
-            make_envelope(4, record_id="A", commit_ts=T0 + 65 * MIN),
-            make_envelope(5, record_id="B", commit_ts=T0 + 70 * MIN),
-        ],
-    )
-    # far-future batch: advances the watermark past every gap, closing all
-    write_batch_file(
-        str(tmp_path / "in"), "b3.jsonl",
-        [make_envelope(9, record_id="C", commit_ts=T0 + 600 * MIN)],
-    )
-    # pin strictly increasing mtimes: same-mtime files order arbitrarily,
-    # and the far-future file processed first would late-drop everything
-    import os as _os
-    import time as _time
-
-    now = _time.time()
-    for i, name in enumerate(("b1.jsonl", "b2.jsonl", "b3.jsonl")):
-        _os.utime(str(tmp_path / "in" / name), (now + 2 * i, now + 2 * i))
-    stream = decode_envelope(
-        read_event_stream(spark, str(tmp_path / "in"), max_files_per_trigger=1)
-    )
-    out = drain(session_close_summaries(stream, gap="30 minutes"), tmp_path).collect()
-    got = {(r.record_id, r.n_events,
-            (r.last_ts_ms - r.first_ts_ms) // MIN) for r in out}
-    # A: (+1,+10) closed by the >30min gap to +65; then (+65) closed by b3's
-    # watermark. B: (+50,+70) one session. C's session never closes (no
-    # later watermark) — exactly the built-in session_window's closed set.
-    assert got == {("A", 2, 9), ("A", 1, 0), ("B", 2, 20)}
-
-
-def test_session_close_fallback_matches_window_agg(spark, tmp_path):
-    """The applyInPandasWithState session-close fallback (VERDICT r05 next
-    #7 — no protobuf needed, so it RUNS in this container) emits exactly
-    the CLOSED sessions the built-in session_window aggregation computes
-    for the same gap: counts and spans equal, open sessions withheld.
-    Same fixture as the import-gated transformWithState twin above, so the
-    two operators are pinned to one contract.
+@pytest.mark.parametrize(
+    "gap_min, want",
+    [
+        # A: (+1,+10) split from (+65) by the 55-min gap; (+65) and B's
+        # (+50,+70) close when b3's watermark passes. C never closes.
+        (30, [("A", 1, 0), ("A", 2, 9), ("B", 2, 20)]),
+        # a 10-min gap also splits B's 20-min pause into two sessions
+        (10, [("A", 1, 0), ("A", 2, 9), ("B", 1, 0), ("B", 1, 0)]),
+    ],
+    ids=["gap30", "gap10"],
+)
+def test_session_close_matches_window_agg(spark, tmp_path, gap_min, want):
+    """The applyInPandasWithState session closer emits exactly the CLOSED
+    sessions the built-in session_window aggregation computes for the same
+    gap: counts and spans equal, open sessions withheld. The one ``gap_ms``
+    is both the close rule and the watermark delay.
 
     File mtimes are pinned strictly increasing: the file source orders
     same-mtime files arbitrarily, and processing the far-future batch
@@ -309,7 +240,7 @@ def test_session_close_fallback_matches_window_agg(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from cdc_worker_spark.streaming.windows import session_close_summaries_fallback
+    from cdc_worker_spark.streaming.windows import session_close_summaries
 
     write_batch_file(
         str(tmp_path / "in"), "b1.jsonl",
@@ -338,10 +269,10 @@ def test_session_close_fallback_matches_window_agg(spark, tmp_path):
         read_event_stream(spark, str(tmp_path / "in"), max_files_per_trigger=1)
     )
     out = drain(
-        session_close_summaries_fallback(stream, gap="30 minutes"), tmp_path
+        session_close_summaries(stream, gap_ms=gap_min * MIN), tmp_path
     ).collect()
-    got = {(r.record_id, r.n_events,
-            (r.last_ts_ms - r.first_ts_ms) // MIN) for r in out}
-    # A: (+1,+10) split from (+65) by the 55-min gap; (+65) and B's
-    # (+50,+70) close when b3's watermark passes. C never closes.
-    assert got == {("A", 2, 9), ("A", 1, 0), ("B", 2, 20)}
+    got = sorted(
+        (r.record_id, r.n_events, (r.last_ts_ms - r.first_ts_ms) // MIN)
+        for r in out
+    )
+    assert got == want

@@ -87,65 +87,14 @@ def test_mix_temperature_weights_normalize_and_flatten(spark):
 # ---------------------------------------------------- product quantization
 
 
-@pytest.mark.slow
 def test_pq_assignment_matches_numpy_reference(spark):
     """Codes and sq_err agree with a numpy re-derivation against the SAME
     trained codebooks (training is deterministic and cached; this pins the
-    assignment + error math, the part that runs at corpus scale)."""
-    emb = with_double_vec(load_table(spark, SF, "embeddings"))
-    coded = {r.vec_id: r for r in pq_codes(emb, f"{SF}/embeddings.parquet").collect()}
-    raw = {
-        r.vec_id: np.asarray(r.dv, dtype=np.float64)
-        for r in emb.select("vec_id", "dv").collect()
-    }
-    dim = len(next(iter(raw.values())))
-    m, sub_w = 4, dim // 4
-    for j in range(m):
-        sub = emb.select(
-            "vec_id",
-            F.slice("dv", j * sub_w + 1, sub_w).alias("dv"),
-        ).withColumn("nrm", F.lit(0.0))
-        cents = np.asarray(
-            kmeans_centroids_cached(
-                sub, cache_key=f"{SF}/embeddings.parquet#pq4x16s{j}", k=16, n_iters=2
-            ),
-            dtype=np.float64,
-        )
-        c_nrm = (cents * cents).sum(axis=1)
-        for vid, v in raw.items():
-            x = v[j * sub_w : (j + 1) * sub_w]
-            d = (x @ x) + c_nrm - 2.0 * (cents @ x)
-            assert coded[vid][f"code_{j}"] == int(np.argmin(d))
-    # total sq_err equals the clamped sum of per-subspace minima
-    for vid, v in raw.items():
-        total = 0.0
-        for j in range(m):
-            sub = emb.select(
-                "vec_id", F.slice("dv", j * sub_w + 1, sub_w).alias("dv")
-            )
-            cents = np.asarray(
-                kmeans_centroids_cached(
-                    sub.withColumn("nrm", F.lit(0.0)),
-                    cache_key=f"{SF}/embeddings.parquet#pq4x16s{j}",
-                    k=16,
-                    n_iters=2,
-                ),
-                dtype=np.float64,
-            )
-            x = v[j * sub_w : (j + 1) * sub_w]
-            d = (x @ x) + (cents * cents).sum(axis=1) - 2.0 * (cents @ x)
-            total += max(float(d.min()), 0.0)
-        assert coded[vid].sq_err == pytest.approx(total, rel=1e-9, abs=1e-9)
-
-
-def test_pq_codes_fused_equals_multipass_form(spark):
-    """r13: the single-Arrow-pass pq_assign_udf is BIT-equal to the
-    per-subspace centroid_dists_udf chain it replaced — codes and sq_err,
-    including the NULL / wrong-length row semantics (codes NULL, sq_err
-    0.0). The length-32 vector fills two whole 16-wide subspaces of the
-    64-dim space and is still unassignable in both forms."""
-    emb = with_double_vec(load_table(spark, SF, "embeddings"))
-    # plant a NULL vector and wrong-length vectors (same schema)
+    assignment + error math, the part that runs at corpus scale). Planted
+    NULL, length-2 and length-32 vectors are unassignable: NULL codes and
+    sq_err 0.0. The length-32 vector fills two whole 16-wide subspaces of
+    the 64-dim space and still gets no partial codes."""
+    key = f"{SF}/embeddings.parquet"
     bad_ids = (10_000_001, 10_000_002, 10_000_003)
     bad = spark.createDataFrame(
         [
@@ -155,26 +104,48 @@ def test_pq_codes_fused_equals_multipass_form(spark):
         ],
         "vec_id: long, label: string, dv: array<double>",
     ).withColumn("nrm", F.lit(0.0))
-    emb = emb.select("vec_id", "label", "dv", "nrm").unionByName(bad)
-    key = f"{SF}/embeddings.parquet"
-    cols = ["vec_id", "code_0", "code_1", "code_2", "code_3", "sq_err"]
-    fused = {
-        r.vec_id: r
-        for r in pq_codes(emb, key, fused=True).select(cols).collect()
-    }
-    multi = {
-        r.vec_id: r
-        for r in pq_codes(emb, key, fused=False).select(cols).collect()
-    }
-    assert set(fused) == set(multi) and len(fused) > len(bad_ids)
-    for vid, f_row in fused.items():
-        m_row = multi[vid]
-        for c in cols[1:]:
-            assert f_row[c] == m_row[c], (vid, c, f_row[c], m_row[c])
-    # the planted bad rows: NULL codes, 0.0 error — in BOTH forms
-    for vid in bad_ids:
-        assert all(fused[vid][c] is None for c in cols[1:-1]), fused[vid]
-        assert fused[vid].sq_err == 0.0
+    emb = (
+        with_double_vec(load_table(spark, SF, "embeddings"))
+        .select("vec_id", "label", "dv", "nrm")
+        .unionByName(bad)
+    )
+    m = 4
+    cols = ["vec_id", *[f"code_{j}" for j in range(m)], "sq_err"]
+    coded = {r.vec_id: r for r in pq_codes(emb, key).select(cols).collect()}
+    raw = {r.vec_id: r.dv for r in emb.select("vec_id", "dv").collect()}
+    assert set(coded) == set(raw) and len(coded) > len(bad_ids)
+    dim = len(next(dv for vid, dv in raw.items() if vid not in bad_ids))
+    sub_w = dim // m
+    cents = [
+        np.asarray(
+            kmeans_centroids_cached(
+                emb.select(
+                    "vec_id", F.slice("dv", j * sub_w + 1, sub_w).alias("dv")
+                ).withColumn("nrm", F.lit(0.0)),
+                cache_key=f"{key}#pq4x16s{j}",
+                k=16,
+                n_iters=2,
+            ),
+            dtype=np.float64,
+        )
+        for j in range(m)
+    ]
+    for vid, dv in raw.items():
+        row = coded[vid]
+        if dv is None or len(dv) != dim:
+            assert vid in bad_ids
+            assert all(row[c] is None for c in cols[1:-1]), row
+            assert row.sq_err == 0.0
+            continue
+        v = np.asarray(dv, dtype=np.float64)
+        total = 0.0
+        for j, C in enumerate(cents):
+            x = v[j * sub_w : (j + 1) * sub_w]
+            d = (x @ x) + (C * C).sum(axis=1) - 2.0 * (C @ x)
+            assert row[f"code_{j}"] == int(np.argmin(d)), (vid, j)
+            # total sq_err is the clamped sum of per-subspace minima
+            total += max(float(d.min()), 0.0)
+        assert row.sq_err == pytest.approx(total, rel=1e-9, abs=1e-9)
 
 
 def test_pq_16_codewords_beat_one(spark):

@@ -25,6 +25,7 @@ uses it when present and falls back here when not.
 """
 
 # NB: no `from __future__ import annotations` — pandas_udf needs real hints.
+import functools
 import io
 import json
 import struct as _struct
@@ -569,19 +570,32 @@ def compile_json_decoder(schema: object):
 # ---------------------------------------------------------------------------
 
 
+@functools.lru_cache(maxsize=None)
+def _json_decoder(schema_json: str):
+    """The compiled JSON decoder of a writer schema, built once per Python
+    process (each reused Spark Python worker compiles it on its first
+    batch)."""
+    return compile_json_decoder(parse_schema(schema_json))
+
+
 def from_avro_json_udf(schema_json: str):
     """Arrow-batched bytes->JSON-text decoder column for `decode_envelope
     (codec="avro_py")`. Malformed payloads yield NULL (the downstream
     from_json then surfaces a NULL header -> is_corrupt, identical to the
     jar branch's PERMISSIVE behavior). One Python map per Arrow batch; at
-    cluster scale prefer the spark-avro jar when available."""
+    cluster scale prefer the spark-avro jar when available.
+
+    The UDF ships only the schema JSON; the decoder is generated on the
+    worker (:func:`_json_decoder`), so building the column pickles no
+    generated code."""
     import pandas as pd
 
-    schema = parse_schema(schema_json)
-    dec = compile_json_decoder(schema)
+    _json_decoder(schema_json)  # a bad schema fails here, not per batch
 
     @F.pandas_udf("string")
     def _dec(payload: pd.Series) -> pd.Series:
+        dec = _json_decoder(schema_json)
+
         def one(b):
             if b is None:
                 return None

@@ -6,36 +6,36 @@ hex bitmaps over the schema's field list, LSB = field 0. Compound (nested
 record) fields appear as `"<parentFieldIndex>-<hexBitmap>"` entries whose bits
 index the child field list, expanded to `Parent.Child` names.
 
-Two implementations:
-- :func:`expand_bitmap_py` — plain Python, the behavioral twin used by golden
-  and property tests (and by driver-side tooling).
-- :func:`changed_fields_col` — a native Spark column expression (higher-order
-  functions over a per-schema field-name literal; JVM-side, codegen'd, no
-  Python in the hot path) used by the batch/streaming decode pipeline.
+Entry rule, shared by both functions below: an entry is
+``[<decimal parent index>-][0x]<hex digits>`` (:data:`ENTRY_PATTERN`). Bits
+beyond the dictionary, parent indices outside it or without a child list,
+NULL entries and entries of any other form (non-hex digits, a sign, a second
+dash) expand to nothing. A poison entry therefore never fails a decode.
+
+One implementation and its oracle:
+- :func:`bitmap_names_col` — a native Spark column: ONE SQL expression per
+  field dictionary, built with a single ``F.expr`` (O(1) gateway calls,
+  whatever the dictionary width), JVM-side and codegen'd, no Python in the
+  per-event path. Used by the streaming decode and the batch queries.
+- :func:`expand_bitmap_py` — plain Python, the test oracle.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: one bitmap entry; group 1 = parent index, group 2 = hex digits. `(?!.)`
+#: under DOTALL is the absolute end of input in both Java and Python regex
+#: (`$` would also match before a trailing line terminator)
+ENTRY_PATTERN = r"(?s)^(?:([0-9]+)-)?(?:0[xX])?([0-9A-Fa-f]*)(?!.)"
 
-def _bits_of_hex(hex_bitmap: str) -> list[int]:
-    """Set-bit positions of a hex bitmap string (LSB-first, i.e. bit 0 =
-    field 0 — the reference reverses the binary string to get this order,
-    eventParser.js:195-214)."""
-    h = hex_bitmap[2:] if hex_bitmap.lower().startswith("0x") else hex_bitmap
-    if not h:
-        return []
-    value = int(h, 16)
-    out = []
-    i = 0
-    while value:
-        if value & 1:
-            out.append(i)
-        value >>= 1
-        i += 1
-    return out
+#: hex digits per chunk: 15 digits = 60 bits, so a chunk value is < 2^60 and
+#: always fits a BIGINT (the conv -> cast never overflows)
+_CHUNK_HEX = 15
+_CHUNK_BITS = _CHUNK_HEX * 4
 
 
 def expand_bitmap_py(
@@ -43,7 +43,8 @@ def expand_bitmap_py(
     bitmaps: list[str],
     child_fields: dict[str, list[str]] | None = None,
 ) -> list[str]:
-    """Expand hex bitmaps to field names (eventParser.js:79-152 semantics).
+    """Expand hex bitmaps to field names (eventParser.js:79-152 semantics,
+    under the module's entry rule).
 
     ``fields`` is the schema's ordered top-level field list; ``child_fields``
     maps a compound field's name to its ordered child field list. Plain
@@ -53,144 +54,84 @@ def expand_bitmap_py(
     """
     child_fields = child_fields or {}
     out: list[str] = []
-    for bm in bitmaps:
-        if "-" in bm:
-            parent_idx_s, child_bm = bm.split("-", 1)
-            parent = fields[int(parent_idx_s)]
-            children = child_fields.get(parent, [])
-            out.extend(f"{parent}.{children[i]}" for i in _bits_of_hex(child_bm))
-        else:
-            out.extend(fields[i] for i in _bits_of_hex(bm))
+    for entry in bitmaps:
+        m = re.match(ENTRY_PATTERN, entry) if entry is not None else None
+        if m is None:
+            continue
+        parent, digits = m.groups()
+        names = fields
+        if parent is not None:
+            p = int(parent)
+            if p >= len(fields) or fields[p] not in child_fields:
+                continue
+            names = [f"{fields[p]}.{c}" for c in child_fields[fields[p]]]
+        value = int(digits or "0", 16)
+        out.extend(n for i, n in enumerate(names) if value >> i & 1)
     return out
 
 
-def changed_fields_col(bitmap_col: str | Column, fields: list[str]) -> Column:
-    """Native column expression: hex bitmap -> array of set field names.
-
-    JVM-side higher-order functions over the (broadcast-as-literal) field
-    list: the hex string is parsed chunk-wise (:func:`_positions_of`) so
-    bitmaps of ANY width decode — real change-event schemas routinely exceed
-    63 fields (reference eventParser.js:140-152 handles arbitrary-width hex).
-    No Python UDF — stays inside whole-stage codegen at any scale.
-
-    Handles the plain (non-compound) form; compound `"idx-hex"` entries are
-    handled by :func:`expand_bitmaps_array_col` over the exploded array.
-    """
-    col = F.col(bitmap_col) if isinstance(bitmap_col, str) else bitmap_col
-    fields_arr = F.array(*[F.lit(x) for x in fields])
-    positions = _positions_of(col, max_bits=len(fields))
-    return F.transform(positions, lambda i: F.element_at(fields_arr, i + 1))
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def changed_fields_col_small(bitmap_col: str | Column, fields: list[str]) -> Column:
-    """64-bit fast path: hex bitmap (<= 16 digits) -> array of field names
-    using BIGINT shifts (cheaper than the DECIMAL-safe variant)."""
-    col = F.col(bitmap_col) if isinstance(bitmap_col, str) else bitmap_col
-    n = min(len(fields), 63)
-    fields_arr = F.array(*[F.lit(x) for x in fields])
-    hex_digits = F.regexp_replace(F.upper(col), "^0X", "")
-    value = F.conv(hex_digits, 16, 10).cast("bigint")
-    positions = F.filter(
-        F.sequence(F.lit(0), F.lit(n - 1)),
-        lambda i: F.getbit(value, i.cast("int")) == 1,
+def _names_sql(digits: str, names: list[str]) -> str:
+    """SQL: the names of the set bits of the hex string ``digits`` (a SQL
+    expression) over the dictionary ``names``, NULL-padded.
+
+    The digits are cut from the right into 15-digit (60-bit) chunks, as
+    many as the dictionary needs (digits beyond it are ignored), so any
+    width decodes; the naive ``conv(hex,16,10)`` to BIGINT overflows once
+    bit 63 is set. The chunk values are bound once by one lambda over their
+    array; each bit is one inlined ``CASE`` on ``getbit`` with its name as a
+    literal, so there is no per-bit lambda and no ``sequence``."""
+    n_chunks = max(1, -(-len(names) // _CHUNK_BITS))
+    width = n_chunks * _CHUNK_HEX
+    padded = f"lpad(right({digits}, {width}), {width}, '0')"
+    values = ", ".join(
+        f"CAST(conv(substr({padded}, {width - _CHUNK_HEX * (c + 1) + 1}, "
+        f"{_CHUNK_HEX}), 16, 10) AS BIGINT)"
+        for c in range(n_chunks)
     )
-    return F.transform(positions, lambda i: F.element_at(fields_arr, i + 1))
+    arms = " ".join(
+        f"WHEN {c} THEN array("
+        + ", ".join(
+            f"CASE WHEN getbit(v, {b}) = 1 THEN {_sql_str(n)} END"
+            for b, n in enumerate(names[c * _CHUNK_BITS : (c + 1) * _CHUNK_BITS])
+        )
+        + ")"
+        for c in range(n_chunks)
+    )
+    return f"flatten(transform(array({values}), (v, k) -> CASE k {arms} END))"
 
 
-def expand_bitmaps_array_col(
-    bitmaps_col: str | Column,
+def bitmap_names_col(
+    entries: str,
     fields: list[str],
     child_fields: dict[str, list[str]] | None = None,
 ) -> Column:
-    """Full reference semantics over an ``array<string>`` of bitmap entries,
-    including compound `"<parentIdx>-<hex>"` entries -> `Parent.Child`.
+    """Native column: bitmap entries -> array of set field names, with the
+    full reference semantics (compound `"<parentIdx>-<hex>"` entries ->
+    `Parent.Child`) under the module's entry rule.
 
-    Composition of native HOFs: flatten(transform(entries, expand-one-entry)).
-    The per-schema field dictionaries become array literals (they are tiny —
-    schema metadata, not data)."""
+    ``entries`` is the SQL text of an ``array<string>`` column (a column
+    name, a nested field path, or e.g. ``array(hex_col)`` for a single
+    bitmap). The result is NULL for a NULL array. Compound entries dispatch
+    with a ``CASE`` on the parent index over the parents that have a child
+    list."""
     child_fields = child_fields or {}
-    col = F.col(bitmaps_col) if isinstance(bitmaps_col, str) else bitmaps_col
-    fields_arr = F.array(*[F.lit(x) for x in fields])
-    max_child_bits = max((len(k) for k in child_fields.values()), default=1)
-
-    def one_entry(entry: Column) -> Column:
-        parent_idx = F.split(entry, "-").getItem(0)
-        child_hex = F.split(entry, "-").getItem(1)
-        parent_name = F.element_at(fields_arr, parent_idx.cast("int") + 1)
-        # child dictionary lookup: map literal parent -> array of children
-        if child_fields:
-            child_map = F.create_map(
-                *[
-                    x
-                    for parent, kids in child_fields.items()
-                    for x in (F.lit(parent), F.array(*[F.lit(k) for k in kids]))
-                ]
-            )
-            children = F.element_at(child_map, parent_name)
-        else:
-            children = F.array().cast("array<string>")
-        compound = F.transform(
-            _positions_of(child_hex, max_bits=max_child_bits),
-            lambda i: F.concat_ws(".", parent_name, F.element_at(children, i + 1)),
-        )
-        plain = F.transform(
-            _positions_of(entry, max_bits=len(fields)),
-            lambda i: F.element_at(fields_arr, i + 1),
-        )
-        return F.when(entry.contains("-"), compound).otherwise(plain)
-
-    return F.flatten(F.transform(col, one_entry))
-
-
-#: hex digits per chunk: 15 digits = 60 bits, so a chunk value is < 2^60 and
-#: always fits a BIGINT (conv -> cast never overflows to NULL)
-_CHUNK_HEX = 15
-_CHUNK_BITS = _CHUNK_HEX * 4
-
-
-def _positions_of(hex_col: Column, max_bits: int = 63) -> Column:
-    """Set-bit positions (0-based, LSB-first) of a hex string column of
-    ARBITRARY width.
-
-    The naive ``conv(hex,16,10).cast('bigint')`` overflows to NULL once bit 63
-    is set, silently dropping every field of the entry. Instead the hex string
-    is consumed in 15-digit (60-bit) chunks from the right; each chunk parses
-    into its own BIGINT and contributes positions offset by ``60*chunk``. The
-    chunk count is static (``ceil(max_bits/60)``) so the expression remains a
-    fixed-size, codegen'd HOF tree — no Python, any schema width
-    (reference eventParser.js:140-152 handles arbitrary-width hex the same
-    way, digit-by-digit)."""
-    h = F.regexp_replace(F.upper(hex_col), "^0X", "")
-    length = F.length(h)
-    n_chunks = max(1, -(-max_bits // _CHUNK_BITS))
-
-    # Two-level HOF keeps the expensive work per-CHUNK, not per-bit: HOF
-    # lambdas have no common-subexpression elimination, so testing bit i
-    # against `conv(substr(...))` directly would re-run the regex + conv for
-    # EVERY i (measured in the streaming decode plan). Instead the chunk
-    # values materialize once into an array of (value, chunk_idx) structs;
-    # the per-bit lambda only does getbit on the lambda variable.
-    # NB: helper closures, not default-arg lambdas — pyspark dispatches HOF
-    # lambdas on their parameter COUNT, so `lambda i, v=value:` would be
-    # (mis)read as the two-arg (element, index) form.
-    def chunk_struct(c: Column) -> Column:
-        ln = F.least(F.lit(_CHUNK_HEX), length - _CHUNK_HEX * c)
-        start = F.greatest(length - _CHUNK_HEX * (c + 1) + 1, F.lit(1))
-        chunk = F.when(ln > 0, F.substr(h, start, ln)).otherwise(F.lit("0"))
-        value = F.coalesce(F.conv(chunk, 16, 10).cast("bigint"), F.lit(0))
-        return F.struct(value.alias("v"), (c * _CHUNK_BITS).alias("off"))
-
-    vals = F.transform(
-        F.sequence(F.lit(0), F.lit(n_chunks - 1)), chunk_struct
+    digits = f"regexp_extract(e, {_sql_str(ENTRY_PATTERN)}, 2)"
+    compound = " ".join(
+        f"WHEN {p} THEN "
+        + _names_sql(digits, [f"{f}.{c}" for c in child_fields[f]])
+        for p, f in enumerate(fields)
+        if f in child_fields
     )
-
-    def chunk_positions(s: Column) -> Column:
-        bits = F.filter(
-            F.sequence(F.lit(0), F.lit(_CHUNK_BITS - 1)),
-            lambda i: F.getbit(s.getField("v"), i.cast("int")) == 1,
+    per_entry = f"CASE WHEN instr(e, '-') = 0 THEN {_names_sql(digits, fields)}"
+    if compound:
+        per_entry += (
+            f" ELSE CASE try_cast(substring_index(e, '-', 1) AS INT) {compound} END"
         )
-        return F.transform(bits, lambda i: i + s.getField("off"))
-
-    flat = F.flatten(F.transform(vals, chunk_positions))
-    # bound to the dictionary width (the last chunk spans a full 60 bits)
-    return F.filter(flat, lambda i: i < F.lit(max_bits))
+    return F.expr(
+        f"array_compact(flatten(transform({entries}, e -> coalesce("
+        f"{per_entry} END, CAST(array() AS ARRAY<STRING>)))))"
+    )

@@ -195,10 +195,10 @@ BITMAP_FIELDS = [
 def q_cdc_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Changed-field bitmap expansion (B3, eventParser.js:79-152) in batch
     form: a hex bitmap per event (derived from the replay id) expands to the
-    set field names of an 8-field schema, exploded to scalar rows. Pure
-    higher-order functions — conv parses the hex, filter(sequence) tests the
-    bits, transform maps positions to names; no UDF."""
-    from cdc_worker_spark.functions.bitmap import changed_fields_col_small
+    set field names of an 8-field schema, exploded to scalar rows. One
+    native expression (functions/bitmap.py): conv parses the hex, one
+    inlined getbit CASE per field names the set bits; no UDF."""
+    from cdc_worker_spark.functions.bitmap import bitmap_names_col
 
     ev = load_events_ms(spark, sf_dir)
     with_bm = ev.select(
@@ -206,7 +206,7 @@ def q_cdc_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     expanded = with_bm.select(
         "event_id",
-        changed_fields_col_small("bitmap_hex", BITMAP_FIELDS).alias("field_names"),
+        bitmap_names_col("array(bitmap_hex)", BITMAP_FIELDS).alias("field_names"),
     )
     return expanded.select("event_id", F.explode("field_names").alias("field_name"))
 

@@ -737,7 +737,7 @@ def q_cdc_field_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion (B3, eventParser.js:79-152) with one partial+final aggregate:
     the explode happens map-side, and the shuffle carries
     O(topics x fields) cells."""
-    from cdc_worker_spark.functions.bitmap import changed_fields_col_small
+    from cdc_worker_spark.functions.bitmap import bitmap_names_col
     from cdc_worker_spark.functions.scalar_queries import BITMAP_FIELDS
 
     ev = load_events_ms(spark, sf_dir)
@@ -745,9 +745,7 @@ def q_cdc_field_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         F.explode(
-            changed_fields_col_small(
-                F.lower(F.hex(F.col("event_id") % 256)), BITMAP_FIELDS
-            )
+            bitmap_names_col("array(lower(hex(event_id % 256)))", BITMAP_FIELDS)
         ).alias("field_name"),
     )
     return expanded.groupBy("event_type", "field_name").agg(

@@ -9,22 +9,28 @@ uint64 replay id (eventParser.js:160-174).
 Spark-first equivalents here:
 - envelope rows arrive as JSON lines (payload = JSON text, replay id =
   base64 of the 8-byte BE buffer) or as Avro bytes — ``decode_envelope``
-  takes ``codec="json"|"avro"``; the avro branch runs ``from_avro`` against
-  a writer schema derived from the same StructType (the spark-avro jar is
-  not in this container, so the JSON codec is the tested path and the avro
-  branch is covered by a skipped-unless-jar-present equivalence test);
-- the whole of the reference's parseEvent (B1: offset decode + payload decode
-  + bitmap expansion) is ONE ``select`` of native expressions — no Python in
-  the per-event path, which is what makes it survive 100 TB.
+  takes ``codec="json"|"avro"|"avro_py"``. ``avro`` runs spark-avro's
+  ``from_avro`` against a writer schema derived from the same StructType
+  when the jar is on the classpath and falls back to ``avro_py`` when it is
+  not; ``avro_py`` decodes the Avro binary in one Arrow-batched Python UDF
+  (functions/avro_codec.py) to JSON text for the same ``from_json``. Both
+  the JSON and the ``avro_py`` codec are tested end to end; the jar branch
+  only by a skipped-unless-jar-present equivalence test;
+- the rest of the reference's parseEvent (B1: offset decode, header
+  projection, bitmap expansion) is ONE ``select`` of native expressions.
+  The JSON codec and the jar branch have no Python in the per-event path;
+  ``avro_py`` has exactly the one Arrow UDF. Each bitmap column is a
+  single SQL expression (functions/bitmap.py), so building the projection
+  costs a few hundred gateway calls, not thousands.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdc_worker_spark.functions.bitmap import expand_bitmaps_array_col
+from cdc_worker_spark.functions.bitmap import bitmap_names_col
 from cdc_worker_spark.functions.offsets import decode_replay_id_col
 
 #: raw stream envelope (one JSON line per event)
@@ -136,10 +142,6 @@ def account_payload_schema() -> T.StructType:
         else:
             fields.append(T.StructField(name, T.StringType()))
     return T.StructType(fields)
-
-
-def _expand(header_field: Column, fields: list[str], child: dict[str, list[str]]) -> Column:
-    return expand_bitmaps_array_col(header_field, fields, child)
 
 
 def _avro_type(dt: T.DataType, name: str) -> object:
@@ -312,9 +314,15 @@ def decode_envelope(
         hdr.transactionKey.alias("txn_key"),
         hdr.sequenceNumber.alias("seq_no"),
         hdr.commitNumber.alias("commit_number"),
-        _expand(hdr.changedFields, fields, child_fields).alias("changed_fields"),
-        _expand(hdr.nulledFields, fields, child_fields).alias("nulled_fields"),
-        _expand(hdr.diffFields, fields, child_fields).alias("diff_fields"),
+        *[
+            bitmap_names_col(f"event.ChangeEventHeader.{wire}", fields, child_fields)
+            .alias(name)
+            for wire, name in (
+                ("changedFields", "changed_fields"),
+                ("nulledFields", "nulled_fields"),
+                ("diffFields", "diff_fields"),
+            )
+        ],
         event_out.alias("event"),
         # a NULL replay id (missing/malformed offset bytes) is corrupt too:
         # it would otherwise vanish in NULL-valued offset predicates and

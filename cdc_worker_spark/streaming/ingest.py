@@ -60,6 +60,16 @@ LABELS_META = "_labels_layout.json"
 #: pointer-meta key carrying the label snapshot's bucket count
 LABELS_META_KEY = "labels_buckets"
 
+#: pointer-meta key carrying each ingest stream's committed-batch
+#: high-water mark, ``{<absolute checkpoint dir>: <last committed
+#: batch_id>}``: one mark per stream, so a fresh stream (new checkpoint)
+#: over an existing index starts from nothing
+INGEST_MARK_KEY = "ingest_committed"
+
+#: LEGACY per-checkpoint ledger (one appended line per committed batch,
+#: never trimmed); read once at start as its max, then replaced by the mark
+INGEST_LEDGER = "_ingest_committed"
+
 
 def _labels_buckets(index_dir: str) -> int | None:
     """Bucket count of the partitioned label layout (None = monolithic).
@@ -823,8 +833,18 @@ def run_dedup_ingest_pipeline(
     committed batches — the "nightly" small-files hygiene the compaction
     docstring prescribes, wired into the loop so a long-running stream
     never accumulates thousands of probe-taxing segment files. Keyed to
-    the committed-batch count, so replays never double-compact."""
-    from cdc_worker_spark.operators.index_layout import table_exists
+    the committed-batch mark, so replays never double-compact.
+
+    Exactly-once bookkeeping: the last committed batch id of this stream
+    (keyed by its checkpoint dir) is a high-water mark in the index
+    pointer's meta entry (:data:`INGEST_MARK_KEY`), read once per batch; a
+    batch id at or below it is a no-op. A legacy ``_ingest_committed``
+    ledger in the checkpoint dir is read once, as its max, and removed."""
+    from cdc_worker_spark.operators.index_layout import (
+        publish_generations,
+        read_meta,
+        table_exists,
+    )
 
     if label_layout is not None and label_buckets is not None:
         raise ValueError(
@@ -864,25 +884,33 @@ def run_dedup_ingest_pipeline(
                 f"buckets={label_buckets})"
             )
     os.makedirs(checkpoint_dir, exist_ok=True)
+    stream_key = os.path.abspath(checkpoint_dir)
 
-    committed_path = os.path.join(checkpoint_dir, "_ingest_committed")
+    def _publish_mark(marks: dict, batch_id: int) -> None:
+        # a meta-only pointer write: no table is repointed
+        publish_generations(
+            index_dir, {}, meta={INGEST_MARK_KEY: {**marks, stream_key: batch_id}}
+        )
 
-    def _committed() -> set[int]:
-        try:
-            with open(committed_path) as fh:
-                return {int(line) for line in fh if line.strip()}
-        except FileNotFoundError:
-            return set()
+    ledger = os.path.join(checkpoint_dir, INGEST_LEDGER)
+    if os.path.isfile(ledger):
+        with open(ledger) as fh:
+            legacy = max((int(line) for line in fh if line.strip()), default=-1)
+        marks = read_meta(index_dir).get(INGEST_MARK_KEY, {})
+        if legacy > marks.get(stream_key, -1):
+            _publish_mark(marks, legacy)
+        os.remove(ledger)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: after a crash between the sink
         # writes and the checkpoint commit, the same batch_id replays. The
-        # committed-batch ledger makes the replay a no-op, so corpus/index
-        # appends are effectively exactly-once (the ledger write is the
-        # last step; a crash before it re-runs the batch, whose duplicate
-        # corpus rows the downstream exact dedup absorbs — the narrow
-        # remaining window of the standard recipe).
-        if batch_id in _committed():
+        # committed-batch mark (foreachBatch ids only grow) makes the
+        # replay a no-op, so corpus/index appends are effectively
+        # exactly-once (the mark write is the last step; a crash before it
+        # re-runs the batch, whose docs the probe detects as replays of
+        # themselves — the narrow remaining window of the standard recipe).
+        marks = read_meta(index_dir).get(INGEST_MARK_KEY, {})
+        if batch_id <= marks.get(stream_key, -1):
             return
         t_batch = time.perf_counter()
         accepted, rejected = dedup_batch_against_index(
@@ -895,7 +923,7 @@ def run_dedup_ingest_pipeline(
         rejected = rejected.localCheckpoint(eager=True)
         rejected.write.mode("append").parquet(rejects_dir)
         accepted.write.mode("append").parquet(corpus_dir)
-        # batch_id as the idempotency token: if the ledger write below
+        # batch_id as the idempotency token: if the mark write below
         # crashes and the batch replays, the index extend is a no-op at
         # the segment layer too (exactly-once, not just at-least-once)
         extend_dedup_index(accepted, index_dir, token=f"b{batch_id}")
@@ -914,19 +942,18 @@ def run_dedup_ingest_pipeline(
                     )
             layout_event = _auto_layout(fold_stats)
             label_sec = round(time.perf_counter() - t_lbl, 3)
-        with open(committed_path, "a") as fh:
-            fh.write(f"{batch_id}\n")
+        _publish_mark(marks, batch_id)
         if (
             index_compact_cadence is not None
-            and len(_committed()) % index_compact_cadence == 0
+            and (batch_id + 1) % index_compact_cadence == 0
         ):
             # small-files hygiene on a cadence (every extend appends a
             # few files; after thousands of batches the probe pays the
-            # per-file open tax). Runs AFTER the ledger write: compaction
+            # per-file open tax). Runs AFTER the mark write: compaction
             # is a pure rewrite-and-flip, idempotent and crash-safe by
             # the manifest protocol, so replay interplay is a non-issue —
-            # keyed to the committed count, a replayed batch (no-op,
-            # count unchanged) never double-compacts.
+            # keyed to the mark, a replayed batch (a no-op below the
+            # mark) never double-compacts.
             from cdc_worker_spark.operators.dedup_index import (
                 compact_dedup_index,
             )
@@ -957,7 +984,7 @@ def run_dedup_ingest_pipeline(
 
         Scope of "exactly-once": it holds within one cadence window.
         fold_pending_labels' _clear_spool wipes the consumed segment
-        token list, so a replay AFTER full checkpoint/ledger loss will
+        token list, so a replay AFTER full checkpoint and mark loss will
         re-spool already-folded batches; the end state stays correct
         because the refold is idempotent (the delta_near_pairs probe and
         fold are pure functions of corpus + labels — exercised by the
@@ -998,7 +1025,7 @@ def run_dedup_ingest_pipeline(
     def _auto_layout(fold_stats: dict):
         """Observe the fold just run and migrate the label layout when
         the policy says the regime changed (VERDICT r11 next #3). Runs
-        BEFORE the ledger write: a crash mid-migration is absorbed by
+        BEFORE the mark write: a crash mid-migration is absorbed by
         write_label_snapshot's atomic pointer commit, and the replayed
         batch re-folds (idempotent) and re-decides. Returns the new
         bucket count (0 = monolithic) when a migration happened, else

@@ -104,8 +104,9 @@ def test_udf_queries_use_arrow_not_row_python(spark, sf_dir):
 def test_decode_envelope_is_pure_native_projection(spark):
     """The streaming decode path (B1: offset decode + payload decode + B3
     bitmap expansion) must stay ONE native projection: no Python evaluator
-    of any kind in the plan, bitmap expansion as higher-order functions
-    (filter/transform over sequence), per-event at 100 TB."""
+    of any kind in the plan, bitmap expansion as native expressions
+    (transform over the entries, conv per chunk, getbit per field), per-event
+    at 100 TB."""
     from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 
     df = decode_envelope(spark.createDataFrame([], ENVELOPE_SCHEMA))
@@ -118,6 +119,34 @@ def test_decode_envelope_is_pure_native_projection(spark):
     # B3 runs as HOF expressions over the field-dictionary literals:
     # transform/conv/getbit (the chunk-wise bit test) all JVM-side
     assert "transform(" in plan and "conv(" in plan and "getbit(" in plan
+
+
+def test_decode_envelope_builds_in_few_gateway_calls(spark):
+    """Building the decode projection is client-side work paid on every
+    pipeline start: the three bitmap expressions are one ``F.expr`` each
+    and the Avro UDF ships no generated code, so one ``decode_envelope``
+    call stays within a bounded number of Py4J round trips (the per-node
+    HOF trees it replaced made ~4,200)."""
+    from cdc_worker_spark.streaming.envelope import (
+        AVRO_ENVELOPE_SCHEMA,
+        decode_envelope,
+    )
+
+    raw = spark.createDataFrame([], AVRO_ENVELOPE_SCHEMA)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        decode_envelope(raw, codec="avro_py")
+    finally:
+        client.send_command = send
+    assert len(calls) <= 1000, f"{len(calls)} gateway round trips"
 
 
 def test_multiplexed_decode_stays_native(spark):

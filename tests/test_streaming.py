@@ -169,6 +169,30 @@ def test_missing_replay_id_is_corrupt_not_silently_dropped(spark, dirs):
     assert len(dlq) == 1 and dlq[0].replay_id is None
 
 
+def test_poison_bitmap_entry_does_not_fail_the_batch(spark, dirs):
+    """A changedFields entry outside the field dictionary is data, not a
+    decode failure: under ANSI mode the batch still commits, the entry
+    expands to nothing and the event's valid entries still name fields."""
+    t0 = 1696444513000
+    write_batch_file(
+        dirs["input"], "b1.jsonl",
+        [
+            make_envelope(900, record_id="A", commit_ts=t0),
+            make_envelope(901, record_id="B", commit_ts=t0 + 1,
+                          changed_bitmaps=["99-0x1", "-0x1", "0x400000"]),
+        ],
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    run_drain(spark, dirs)
+    state = read_state(spark, dirs)
+    assert set(state) == {"A", "B"}
+    assert state["B"].changed_fields == ["LastModifiedDate"]
+    assert state["A"].changed_fields == [
+        "LastModifiedDate", "BillingAddress.City", "BillingAddress.State",
+    ]
+    assert not os.path.isdir(dirs["dlq"]) or not spark.read.parquet(dirs["dlq"]).collect()
+
+
 def test_avro_wire_pipeline_end_to_end(spark, dirs):
     """The reference's ACTUAL wire format through the full pipeline: Avro
     binary payloads (base64-framed in the file source, as the gRPC bridge

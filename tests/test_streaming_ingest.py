@@ -10,8 +10,16 @@ import time
 
 import pytest
 
-from cdc_worker_spark.operators.index_layout import live_paths
-from cdc_worker_spark.streaming.ingest import run_dedup_ingest_pipeline
+from cdc_worker_spark.operators.index_layout import (
+    live_paths,
+    publish_generations,
+    read_meta,
+)
+from cdc_worker_spark.streaming.ingest import (
+    INGEST_LEDGER,
+    INGEST_MARK_KEY,
+    run_dedup_ingest_pipeline,
+)
 
 
 def _write_batch(in_dir: str, name: str, rows: list[dict]) -> None:
@@ -19,6 +27,15 @@ def _write_batch(in_dir: str, name: str, rows: list[dict]) -> None:
     with open(os.path.join(in_dir, name), "w") as fh:
         for r in rows:
             fh.write(json.dumps(r) + "\n")
+
+
+def _lose_checkpoint_and_mark(tmp_path) -> None:
+    """The crash window replayed below: Spark's checkpoint AND the
+    committed-batch mark are gone, so every batch re-runs in full."""
+    import shutil
+
+    shutil.rmtree(tmp_path / "chk")
+    publish_generations(str(tmp_path / "idx"), {}, meta={INGEST_MARK_KEY: None})
 
 
 def _doc(doc_id: int, text: str) -> dict:
@@ -78,7 +95,10 @@ def test_ingest_dedups_across_batches(spark, tmp_path):
 def test_replayed_batches_do_not_double_append(spark, tmp_path):
     """Crash-replay semantics: if the engine re-delivers already-committed
     batch ids (fresh checkpoint, same inputs — the post-crash shape), the
-    committed-batch ledger turns the replays into no-ops."""
+    committed-batch mark turns the replays into no-ops: no probe, no
+    append, no pointer write. A legacy ledger is honored once, as its max,
+    and removed; a stream with another checkpoint has its own mark and
+    runs its batches."""
     import shutil
 
     in_dir = str(tmp_path / "in")
@@ -89,31 +109,46 @@ def test_replayed_batches_do_not_double_append(spark, tmp_path):
     _write_batch(in_dir, "b1.jsonl", [
         _doc(2, "second unique document about mountains and rivers yesterday"),
     ])
-    kw = dict(
-        input_dir=in_dir,
-        index_dir=str(tmp_path / "idx"),
-        corpus_dir=str(tmp_path / "corpus"),
-        rejects_dir=str(tmp_path / "rejects"),
-        checkpoint_dir=str(tmp_path / "chk"),
-    )
-    run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
-    first = sorted(
-        r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
-    )
-    assert first == [1, 2]
+    idx = str(tmp_path / "idx")
+
+    def run(chk: str) -> list:
+        metrics: list = []
+        run_dedup_ingest_pipeline(
+            spark, input_dir=in_dir, index_dir=idx,
+            corpus_dir=str(tmp_path / "corpus"),
+            rejects_dir=str(tmp_path / "rejects"),
+            checkpoint_dir=str(tmp_path / chk), batch_metrics=metrics,
+        ).awaitTermination(120)
+        return [m["batch_id"] for m in metrics]
+
+    def corpus() -> list:
+        return sorted(
+            r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
+        )
+
+    def mark(chk: str) -> int | None:
+        return read_meta(idx).get(INGEST_MARK_KEY, {}).get(str(tmp_path / chk))
+
+    assert run("chk") == [0, 1]
+    assert corpus() == [1, 2]
+    assert mark("chk") == 1
+    pointer = (tmp_path / "idx" / "_CURRENT.json").read_text()
 
     # simulate the crash window: Spark's checkpoint is gone (batch ids
-    # restart at 0 and everything re-delivers) but the ledger survived
-    ledger = (tmp_path / "chk" / "_ingest_committed").read_text()
+    # restart at 0 and everything re-delivers) but the mark survived
     shutil.rmtree(tmp_path / "chk")
-    (tmp_path / "chk").mkdir()
-    (tmp_path / "chk" / "_ingest_committed").write_text(ledger)
+    assert run("chk") == []
+    assert corpus() == [1, 2], f"replay double-appended: {corpus()}"
+    assert (tmp_path / "idx" / "_CURRENT.json").read_text() == pointer
 
-    run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
-    again = sorted(
-        r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
-    )
-    assert again == [1, 2], f"replay double-appended: {again}"
+    (tmp_path / "chk2").mkdir()
+    (tmp_path / "chk2" / INGEST_LEDGER).write_text("0\n1\n")
+    assert run("chk2") == []
+    assert mark("chk2") == 1
+    assert not (tmp_path / "chk2" / INGEST_LEDGER).exists()
+
+    assert run("chk3") == [0, 1]  # replay-detected by the probe instead
+    assert corpus() == [1, 2]
 
 
 def test_intra_batch_near_dups_collapse(spark, tmp_path):
@@ -269,7 +304,7 @@ def test_label_mode_crash_replay_lands_on_same_labels(spark, tmp_path):
     first = _label_rows(spark, tmp_path / "idx")
     assert first == [(1, 1), (2, 1)]
 
-    shutil.rmtree(tmp_path / "chk")  # checkpoint + ledger both gone
+    _lose_checkpoint_and_mark(tmp_path)
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
 
     corpus = [
@@ -300,9 +335,9 @@ def test_crash_before_ledger_write_is_absorbed_by_replay_detection(spark, tmp_pa
         checkpoint_dir=str(tmp_path / "chk"),
     )
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
-    # simulate: crash lost BOTH Spark's checkpoint and the ledger, so the
+    # simulate: crash lost BOTH Spark's checkpoint and the mark, so the
     # batch fully replays against an index that already contains it
-    shutil.rmtree(tmp_path / "chk")
+    _lose_checkpoint_and_mark(tmp_path)
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
 
     corpus = [r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()]
@@ -408,7 +443,7 @@ def test_label_cadence_crash_replay_lands_on_same_labels(spark, tmp_path):
     from cdc_worker_spark.streaming.ingest import fold_pending_labels
 
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
-    shutil.rmtree(tmp_path / "chk")  # checkpoint + ledger both gone
+    _lose_checkpoint_and_mark(tmp_path)
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
 
     corpus = [

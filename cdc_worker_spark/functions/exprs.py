@@ -84,59 +84,47 @@ def cap_basket(parts: Column | str, cap: int = BASKET_CAP) -> Column:
     return F.when(F.size(c) > cap, F.slice(F.sort_array(c), 1, cap)).otherwise(c)
 
 
-def basket_pair_array(
-    parts: Column | str, *, directed: bool, packed: bool = False
-) -> Column:
-    """All within-basket item pairs as one array-of-structs projection —
-    the shared pair-expansion core of q_basket_pairs (undirected: a < b,
-    fields part_a/part_b) and the PageRank co-purchase derive (directed:
-    a != b, fields src/dst). No self-join: the basket array is already
-    grouped, so expansion is a pure per-row transform. Callers apply
-    :func:`cap_basket` in the projection BEFORE this expansion (one
-    evaluation of the valve per row, vs twice if it were inlined here) —
-    that cap is what bounds the quadratic per-basket fan-out
+def basket_pair_array(parts: Column | str, *, directed: bool) -> Column:
+    """All within-basket item pairs as one array projection — the shared
+    pair-expansion core of q_basket_pairs (undirected: a < b) and the
+    PageRank co-purchase derive (directed: a != b). No self-join: the basket
+    array is already grouped, so expansion is a pure per-row transform.
+    Callers apply :func:`cap_basket` in the projection BEFORE this expansion
+    (one evaluation of the valve per row, vs twice if it were inlined
+    here) — that cap is what bounds the quadratic per-basket fan-out
     (VERDICT r6 "wrong" #1).
 
-    ``packed=True`` (r12, guide §2.3 "narrower types") emits each pair as
-    ONE bigint ``(a << 32) | b`` instead of a two-field struct: the
-    pair-count shuffle then moves an 8-byte key instead of a 16-byte
-    struct row, and the explode walks a primitive long array. Callers
-    unpack with ``shiftrightunsigned(pk, 32)`` / ``pk & 0xFFFFFFFF`` AFTER the
-    count, so public schemas are unchanged. Safe while item keys fit 32
-    unsigned bits — TPC-H partkeys reach 2e7 at sf100 and 2e8 at sf1000,
-    both far under 2^32 — and since r13 the domain is ENFORCED in the
-    expression itself (assert_true: an out-of-domain key fails the task
-    with a named error instead of silently corrupting the pair). A NULL
-    key yields no pair, as in the struct form."""
+    Each pair is ONE bigint ``(a << 32) | b`` (r12, guide §2.3 "narrower
+    types"): the pair-count shuffle moves an 8-byte key instead of a
+    16-byte struct row. Callers unpack with ``shiftrightunsigned(pk, 32)``
+    / ``pk & 0xFFFFFFFF`` AFTER the count. Item keys must fit 32 unsigned
+    bits (TPC-H partkeys reach 2e8 at sf1000); an out-of-domain key fails
+    the task with a named error instead of corrupting the pair. A NULL key
+    yields no pair."""
     c = F.col(parts) if isinstance(parts, str) else parts
     pred = (lambda x, y: x != y) if directed else (lambda x, y: x < y)
-    if packed:
-        # r13 (ADVICE r12): enforce the documented [0, 2^32) key domain at
-        # expression level — a negative or >= 2^32 key would overlap bits
-        # and silently corrupt the pair. assert_true returns NULL when the
-        # guard holds (so the packed value flows unchanged) and fails the
-        # task with this message when it does not; in-domain plans/results
-        # are bit-identical, the guard is two codegen comparisons per pair.
-        # A NULL key passes the guard (assert_true would raise on the NULL
-        # comparison) and its NULL pair is dropped by the filter below.
-        def pair(x: Column, y: Column) -> Column:  # noqa: E731
-            xl, yl = x.cast("long"), y.cast("long")
-            in_dom = (
-                (xl >= 0) & (xl < F.lit(1 << 32))
-                & (yl >= 0) & (yl < F.lit(1 << 32))
-            )
-            guard = F.assert_true(
-                in_dom | x.isNull() | y.isNull(),
-                F.lit(
-                    "basket_pair_array(packed=True): item key outside"
-                    " [0, 2^32) would corrupt the packed pair"
-                ),
-            )
-            pk = F.shiftleft(xl, 32) + yl
-            return F.when(guard.isNull(), pk)
-    else:
-        fa, fb = ("src", "dst") if directed else ("part_a", "part_b")
-        pair = lambda x, y: F.struct(x.alias(fa), y.alias(fb))  # noqa: E731
+
+    # The [0, 2^32) key domain guard (r13): assert_true is NULL when it
+    # holds, so the packed value flows unchanged, and fails the task with
+    # the message (part of every pair plan, so kept verbatim) when not. A
+    # NULL key passes (assert_true would raise on the NULL comparison) and
+    # its NULL pair is dropped by the filter below.
+    def pair(x: Column, y: Column) -> Column:
+        xl, yl = x.cast("long"), y.cast("long")
+        in_dom = (
+            (xl >= 0) & (xl < F.lit(1 << 32))
+            & (yl >= 0) & (yl < F.lit(1 << 32))
+        )
+        guard = F.assert_true(
+            in_dom | x.isNull() | y.isNull(),
+            F.lit(
+                "basket_pair_array(packed=True): item key outside"
+                " [0, 2^32) would corrupt the packed pair"
+            ),
+        )
+        pk = F.shiftleft(xl, 32) + yl
+        return F.when(guard.isNull(), pk)
+
     return F.flatten(
         F.transform(
             c,

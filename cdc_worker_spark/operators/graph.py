@@ -370,7 +370,7 @@ def copurchase_pair_counts(li: DataFrame) -> DataFrame:
         per_order.select(cap_basket("parts").alias("parts"))
         .select(
             F.explode(
-                basket_pair_array("parts", directed=True, packed=True)
+                basket_pair_array("parts", directed=True)
             ).alias("pk")
         )
         .groupBy("pk")

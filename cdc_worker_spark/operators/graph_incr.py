@@ -123,7 +123,7 @@ def q_graph_copurchase_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "side",
             F.explode(
-                basket_pair_array("parts", directed=True, packed=True)
+                basket_pair_array("parts", directed=True)
             ).alias("pk"),
         )
     )

@@ -273,7 +273,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_order.select(cap_basket("parts").alias("parts"))
         .select(
             F.explode(
-                basket_pair_array("parts", directed=False, packed=True)
+                basket_pair_array("parts", directed=False)
             ).alias("pk")
         )
         .groupBy("pk")

@@ -36,8 +36,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_worker_spark.functions.offsets import encode_replay_id
-from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
+from cdc_worker_spark.functions.offsets import decode_replay_id_col, encode_replay_id
+from cdc_worker_spark.streaming.envelope import after_replay_id, decode_envelope
 from cdc_worker_spark.streaming.pipeline import read_event_stream
 
 #: option mapping for the Kafka swap-in of each preset (documented contract)
@@ -62,9 +62,10 @@ def subscribe_from_replay_id(
     max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """A3: resume strictly AFTER a specific replay id. The predicate is on the
-    decoded offset column, so it composes with checkpoint restore (A6)."""
+    decoded offset column, so it composes with checkpoint restore (A6);
+    corrupt rows pass whatever their offset (envelope.after_replay_id)."""
     return subscribe_earliest(spark, bus_dir, max_files_per_trigger).filter(
-        F.col("replay_id") > F.lit(replay_id).cast("decimal(20,0)")
+        after_replay_id(replay_id)
     )
 
 
@@ -74,8 +75,10 @@ def current_high_water_mark(spark: SparkSession, bus_dir: str) -> int:
         not f.startswith((".", "_")) for f in os.listdir(bus_dir)
     ):
         return -1
-    raw = spark.read.schema(ENVELOPE_SCHEMA).json(bus_dir)
-    row = decode_envelope(raw).agg(F.max("replay_id").alias("m")).collect()[0]
+    offsets = spark.read.schema("replay_id_b64 STRING").json(bus_dir)
+    row = offsets.agg(
+        F.max(decode_replay_id_col(F.unbase64("replay_id_b64"))).alias("m")
+    ).collect()[0]
     return int(row.m) if row.m is not None else -1
 
 

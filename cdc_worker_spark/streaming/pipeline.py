@@ -50,14 +50,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
-
-
-#: wire form of an Avro-payload envelope file: the binary payload ships as
-#: base64 text inside the JSON line (file sources are text; the gRPC bridge
-#: writes the same shape — grpc_bridge.py hands bytes off base64-encoded)
-AVRO_WIRE_SCHEMA = (
-    "replay_id_b64 STRING, schema_id STRING, payload_b64 STRING"
+from cdc_worker_spark.streaming.envelope import (
+    AVRO_WIRE_SCHEMA,  # noqa: F401  callers read it as pipeline.AVRO_WIRE_SCHEMA
+    after_replay_id,
+    decode_envelope,
+    wire_codec,
 )
 
 
@@ -83,15 +80,13 @@ def read_event_stream(
     codec: str = "json",
 ) -> DataFrame:
     """File-source CDC stream of wire envelopes (A1; A5 backpressure via
-    maxFilesPerTrigger). ``codec="json"`` reads JSON-text payloads;
-    ``"avro"``/``"avro_py"`` reads base64-wrapped Avro binary payloads and
-    surfaces them as the BINARY ``payload`` column decode_envelope's avro
-    branch expects."""
-    if codec == "json":
-        return read_json_stream(spark, ENVELOPE_SCHEMA, input_dir, max_files_per_trigger)
-    return read_json_stream(
-        spark, AVRO_WIRE_SCHEMA, input_dir, max_files_per_trigger
-    ).select("replay_id_b64", "schema_id", F.unbase64("payload_b64").alias("payload"))
+    maxFilesPerTrigger), as the raw (replay_id_b64, schema_id, payload)
+    envelope of ``codec`` (envelope.wire_codec) that decode_envelope
+    takes."""
+    wire = wire_codec(codec)
+    return wire.envelope(
+        read_json_stream(spark, wire.line_schema, input_dir, max_files_per_trigger)
+    )
 
 
 def fault_point(batch_id: int, point: str) -> None:
@@ -442,21 +437,19 @@ def run_cdc_pipeline(
     Flow: stream -> decode (one native projection) -> [A3 offset filter] ->
     foreachBatch: DLQ split, deduplicated on replay_id (D4) + latest-wins
     merge (D1), which absorbs redelivery without a state operator. ``codec``
-    selects the payload wire format (json | avro | avro_py — the reference's
+    selects the payload wire format (json | avro_py — the reference's
     actual Avro wire, A8); every stage downstream of the decode is codec-
     identical.
     """
+    decode_error = wire_codec(codec).decode_error
     decoded = decode_envelope(
         read_event_stream(spark, input_dir, max_files_per_trigger, codec=codec),
         codec=codec,
     )
     if start_after_replay_id is not None:
-        # A3 subscribeFromReplayId: corrupt rows pass through (their offset
-        # still decodes, but they must reach the DLQ regardless of position)
-        decoded = decoded.filter(
-            (F.col("replay_id") > F.lit(start_after_replay_id).cast("decimal(20,0)"))
-            | F.col("is_corrupt")
-        )
+        # A3 subscribeFromReplayId: corrupt rows pass through (they must
+        # reach the DLQ regardless of position)
+        decoded = decoded.filter(after_replay_id(start_after_replay_id))
 
     state = LatestWinsState(state_dir)
     select_cols = [
@@ -485,9 +478,7 @@ def run_cdc_pipeline(
                 "replay_id",
                 F.col("schema_id"),
                 F.col("raw_payload"),
-                F.lit(
-                    f"payload {'JSON' if codec == 'json' else codec} decode failed"
-                ).alias("error"),
+                F.lit(decode_error).alias("error"),
                 F.current_timestamp().alias("failed_at"),
             )
             .write.mode("append")

@@ -11,7 +11,8 @@ Spark-first shape:
   schema per column). A resolver callback covers the unseen-id case: it is
   invoked at plan build for ids present on the bus but not registered — the
   GetSchema round-trip, amortized per stream start / micro-batch restart
-  rather than per event.
+  rather than per event. Like the reference's memoized Avro type, each
+  topic's decode projection is built once and reused for later frames.
 - ``decode_topic`` = one topic's typed stream (the reference's per-topic
   subscription callback); ``decode_multiplexed`` = all topics in one stream
   with common envelope columns + payload JSON (the Kafka-style union shape) —
@@ -19,7 +20,8 @@ Spark-first shape:
   preserved, the C4 EventParseError analogue, never an exception.
 
 Scale: the registry dict is O(topics) and ships inside the serialized plan
-(schema literals), not per row; all decode work remains native expressions.
+(schema literals), not per row; the decode is native expressions for the
+JSON codec, plus the one Arrow UDF for ``avro_py``.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from pyspark.sql import types as T
 
 from cdc_worker_spark.functions.offsets import decode_replay_id_col
 from cdc_worker_spark.streaming import pipeline
-from cdc_worker_spark.streaming.envelope import decode_envelope
+from cdc_worker_spark.streaming.envelope import envelope_decoder, wire_codec
 
 
 @dataclass
@@ -55,9 +57,13 @@ class SchemaRegistry:
 
     resolver: Callable[[str], TopicSchema | None] | None = None
     _entries: dict[str, TopicSchema] = field(default_factory=dict)
+    _projections: dict[tuple, Callable[[DataFrame], DataFrame]] = field(
+        default_factory=dict, init=False, repr=False
+    )
 
     def register(self, entry: TopicSchema) -> None:
         self._entries[entry.schema_id] = entry
+        self._projections.clear()  # rebuilt on next use, with this entry
 
     def resolve(self, schema_id: str) -> TopicSchema | None:
         """Cache lookup, then resolver fetch + memoize (client.js:896-909)."""
@@ -70,6 +76,15 @@ class SchemaRegistry:
     def known_ids(self) -> list[str]:
         return sorted(self._entries)
 
+    def projection(
+        self, key: tuple, build: Callable[[], Callable[[DataFrame], DataFrame]]
+    ) -> Callable[[DataFrame], DataFrame]:
+        """The decode projection cached under ``key``, from ``build()`` on
+        first use; :meth:`register` drops them all."""
+        if key not in self._projections:
+            self._projections[key] = build()
+        return self._projections[key]
+
 
 def decode_topic(
     raw: DataFrame,
@@ -81,18 +96,45 @@ def decode_topic(
     schema_id, decode with that topic's schema. Raises KeyError for an id the
     registry cannot resolve — at subscribe time, like the reference.
     ``codec`` selects the payload decode per envelope.decode_envelope
-    ("json" | "avro" | "avro_py") — the avro paths decode each topic's bytes
-    against ITS registry schema, the reference's per-schemaId fromBuffer."""
+    ("json" | "avro_py") — the Avro path decodes each topic's bytes against
+    ITS registry schema, the reference's per-schemaId fromBuffer."""
     entry = registry.resolve(schema_id)
     if entry is None:
         raise KeyError(f"schema_id {schema_id!r} not in registry and not resolvable")
-    return decode_envelope(
-        raw.filter(F.col("schema_id") == schema_id),
-        payload_schema=entry.payload_schema,
-        fields=entry.fields,
-        child_fields=entry.child_fields,
-        codec=codec,
-    )
+
+    def build():
+        is_topic = F.col("schema_id") == schema_id
+        decode = envelope_decoder(
+            entry.payload_schema, entry.fields, entry.child_fields, codec
+        )
+        return lambda df: decode(df.filter(is_topic))
+
+    return registry.projection(("topic", schema_id, codec), build)(raw)
+
+
+def _unknown_rows(known: tuple[str, ...], codec: str) -> Callable[[DataFrame], DataFrame]:
+    """decode_multiplexed's dead-letter branch: rows whose schema id is not
+    in ``known``, flagged ``is_corrupt``. Unknown-schema rows keep their
+    replay id — it lives outside the payload, exactly like the reference's
+    EventParseError (eventParseError.js:30-38). NULL schema_id satisfies
+    neither the per-topic filters nor a bare NOT-isin (NULL-valued
+    predicate) — it is routed here explicitly so it surfaces in the DLQ
+    instead of silently vanishing from the stream."""
+    is_unknown = ~F.col("schema_id").isin(list(known)) | F.col("schema_id").isNull()
+    columns = [
+        decode_replay_id_col(F.unbase64("replay_id_b64")).alias("replay_id"),
+        "schema_id",
+        F.lit(None).cast("timestamp").alias("commit_ts"),
+        *[F.lit(None).cast("string").alias(c) for c in ("entity", "record_id", "change_type", "txn_key")],
+        F.lit(None).cast("int").alias("seq_no"),
+        F.lit(None).cast("bigint").alias("commit_number"),
+        *[F.lit(None).cast("array<string>").alias(c)
+          for c in ("changed_fields", "nulled_fields", "diff_fields")],
+        F.lit(True).alias("is_corrupt"),
+        wire_codec(codec).raw_payload().alias("raw_payload"),
+        F.lit(None).cast("string").alias("event_json"),
+    ]
+    return lambda df: df.filter(is_unknown).select(*columns)
 
 
 def decode_multiplexed(
@@ -104,52 +146,22 @@ def decode_multiplexed(
     """All topics in ONE stream: common envelope columns per schema, payload
     kept as JSON text (schemas differ, so the typed struct stays per-topic —
     use decode_topic for it). Unknown schema ids pass through flagged
-    ``is_corrupt`` so the DLQ, not an exception, handles them (C4).
-    ``codec`` selects the per-topic payload decode; with an avro codec the
-    DLQ's raw_payload column is the base64 of the undecodable bytes (same
-    stringly form decode_envelope emits).
+    ``is_corrupt`` so the DLQ, not an exception, handles them (C4), with
+    the same ``raw_payload`` text decode_envelope emits. Every branch is a
+    projection the registry caches, so a per-micro-batch caller builds
+    only those of newly registered ids.
     """
     ids = schema_ids if schema_ids is not None else registry.known_ids()
-    parts = []
-    for sid in ids:
-        entry = registry.resolve(sid)
-        if entry is None:
-            continue
-        parts.append(
-            decode_envelope(
-                raw.filter(F.col("schema_id") == sid),
-                payload_schema=entry.payload_schema,
-                fields=entry.fields,
-                child_fields=entry.child_fields,
-                codec=codec,
-            ).withColumn("event_json", F.to_json("event")).drop("event")
+    known = tuple(sid for sid in ids if registry.resolve(sid) is not None)
+    out = registry.projection(
+        ("unknown", known, codec), lambda: _unknown_rows(known, codec)
+    )(raw)
+    for sid in known:
+        out = out.unionByName(
+            decode_topic(raw, registry, sid, codec)
+            .selectExpr("*", "to_json(event) AS event_json")
+            .drop("event")
         )
-    known = [sid for sid in ids if registry.resolve(sid) is not None]
-    # unknown-schema rows keep their replay id — it lives outside the payload,
-    # exactly like the reference's EventParseError (eventParseError.js:30-38).
-    # NULL schema_id satisfies neither the per-topic filters nor a bare
-    # NOT-isin (NULL-valued predicate) — route it here explicitly so it
-    # surfaces in the DLQ instead of silently vanishing from the stream.
-    unknown = raw.filter(
-        ~F.col("schema_id").isin(known) | F.col("schema_id").isNull()
-    ).select(
-        decode_replay_id_col(F.unbase64("replay_id_b64")).alias("replay_id"),
-        "schema_id",
-        F.lit(None).cast("timestamp").alias("commit_ts"),
-        *[F.lit(None).cast("string").alias(c) for c in ("entity", "record_id", "change_type", "txn_key")],
-        F.lit(None).cast("int").alias("seq_no"),
-        F.lit(None).cast("bigint").alias("commit_number"),
-        *[F.lit(None).cast("array<string>").alias(c)
-          for c in ("changed_fields", "nulled_fields", "diff_fields")],
-        F.lit(True).alias("is_corrupt"),
-        (
-            F.base64("payload") if codec in ("avro", "avro_py") else F.col("payload")
-        ).alias("raw_payload"),
-        F.lit(None).cast("string").alias("event_json"),
-    )
-    out = unknown
-    for p in parts:
-        out = out.unionByName(p)
     return out
 
 

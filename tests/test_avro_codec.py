@@ -1,63 +1,20 @@
 """Avro codec seam (reference A8/A9: eventParser.js:13 decodes Avro payloads
 against the registry schema; avroHelper.js:8-34 parses the schema text).
 
-The spark-avro jar is not bundled in this container, so the end-to-end
-equivalence test skips unless the jar (and an Avro encoder) is present —
-but the SEAM is concrete either way: the writer-schema derivation and the
-codec branch are exercised here, and the avro plan builds identically.
-
-Round-4 jar attempt (VERDICT r03 next #8): direct fetch of
-spark-avro_2.13-4.1.2.jar from repo1.maven.org returns HTTP 000 (no
-network route from this container) and fastavro is not installed either,
-so neither `spark.jars.packages` nor a manual `spark.jars` load can work
-offline. The skip stands; in any networked deployment the test runs by
-adding org.apache.spark:spark-avro_2.13:4.1.2 to spark.jars.packages and
-`pip install fastavro`.
-
-Round-6 jar attempt (VERDICT r05 next #2, 2026-08-14): retried —
-`curl https://repo1.maven.org/maven2/` fails with "Could not resolve
-host: repo1.maven.org" (curl exit 6, DNS itself is blocked) and
-`pip download` dies the same way on its index host. Third consecutive
-round the fetch is impossible; recording per the judge's instruction and
-closing the question.
-
-Round-7 probe (VERDICT r06 next #8, 2026-08-15): re-ran once — DNS for
-repo1.maven.org and the pip index still fails ("Name or service not
-known"); unchanged.
-
-Round-8 probe (VERDICT r07 next #8, 2026-08-15): re-ran once — curl to
-repo1.maven.org still "Could not resolve host" (exit 6), `pip download`
-still "No matching distribution found" (index unreachable), fastavro
-still absent; unchanged.
-
-Round-9 probe (VERDICT r08 next #8, 2026-08-16): re-ran once — curl to
-repo1.maven.org exit 6 ("Could not resolve host"), `pip download` still
-"No matching distribution found" / "Name or service not known";
-unchanged.
-
-Round-10 probe (VERDICT r09 next #8, 2026-08-16): re-ran once — curl to
-repo1.maven.org exit 6 ("Could not resolve host"), `pip download
-grpcio-tools` still "No matching distribution found" (index
-unreachable); unchanged.
-
-Round-11 probe (VERDICT r10 next #7, 2026-08-16): re-ran once — curl to
-repo1.maven.org exit 6 ("Could not resolve host"), `pip download`
-still "No matching distribution found" (index unreachable); unchanged.
-
-Round-12 probe (VERDICT r11 next #7, 2026-08-16): re-ran once — curl to
-repo1.maven.org exit 6 ("Could not resolve host"), `pip download
-protobuf` retries die with "Name or service not known" on the index
-host; unchanged."""
+The engine's one Avro decoder is the pure-Python codec in
+functions/avro_codec.py, run by ``decode_envelope(codec="avro_py")``:
+spec-derived round-trip, malformed-input and cross-codec tests run here
+without any Avro library. The wire codecs themselves are named in one
+module, streaming/envelope.py."""
 
 from __future__ import annotations
 
-import base64
 import json
+import os
+import re
 
 import pytest
-from pyspark.sql import functions as F
 
-from cdc_worker_spark.functions.offsets import encode_replay_id
 from cdc_worker_spark.streaming.envelope import (
     AVRO_ENVELOPE_SCHEMA,
     ENVELOPE_SCHEMA,
@@ -73,23 +30,6 @@ ENVELOPE_COLS = [
     "change_type", "txn_key", "seq_no", "commit_number",
     "changed_fields", "nulled_fields", "diff_fields", "is_corrupt",
 ]
-
-
-def _jar_present(spark) -> bool:
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        df = spark.createDataFrame([(bytearray(b""),)], "b: binary")
-        df.select(
-            from_avro(
-                "b",
-                '{"type":"record","name":"t","fields":[]}',
-                {"mode": "PERMISSIVE"},
-            )
-        ).collect()
-        return True
-    except Exception:
-        return False
 
 
 def test_avro_writer_schema_derivation():
@@ -117,56 +57,36 @@ def test_avro_writer_schema_derivation():
 
 
 def test_unknown_codec_rejected(spark):
+    """Two codecs exist; any other name, the retired ``"avro"`` included,
+    raises a ValueError naming both."""
     df = spark.createDataFrame([], ENVELOPE_SCHEMA)
-    with pytest.raises(ValueError, match="codec"):
-        decode_envelope(df, codec="protobuf")
+    for name in ("protobuf", "avro"):
+        with pytest.raises(ValueError, match="'json' or 'avro_py'"):
+            decode_envelope(df, codec=name)
 
 
-def test_avro_branch_analyzes_with_or_without_jar(spark):
-    """codec="avro" always yields the full envelope column set: via the
-    jar's from_avro when present, else via the pure-Python binary decoder
-    (functions/avro_codec.py). Round 4 replaced the old fail-fast-without-
-    jar contract — the wire decode is now executable offline."""
-    df = spark.createDataFrame([], AVRO_ENVELOPE_SCHEMA)
-    cols = decode_envelope(df, codec="avro").columns
-    assert [c for c in ENVELOPE_COLS if c not in cols] == []
-    cols_py = decode_envelope(df, codec="avro_py").columns
-    assert [c for c in ENVELOPE_COLS if c not in cols_py] == []
-
-
-def test_avro_json_codec_equivalence(spark):
-    """Golden Account event through BOTH codecs -> identical envelope
-    columns. Runs only where spark-avro and an Avro encoder exist."""
-    if not _jar_present(spark):
-        pytest.skip("spark-avro jar not available in this container")
-    try:
-        import fastavro
-    except ImportError:
-        pytest.skip("no Avro encoder (fastavro) available")
-
-    import io
-
-    env = make_envelope(18098167, record_id="A")
-    payload = json.loads(env["payload"])
-    writer_schema = fastavro.parse_schema(json.loads(avro_schema_json(account_payload_schema())))
-    buf = io.BytesIO()
-    fastavro.schemaless_writer(buf, writer_schema, payload)
-    avro_row = {
-        "replay_id_b64": env["replay_id_b64"],
-        "schema_id": env["schema_id"],
-        "payload": bytearray(buf.getvalue()),
-    }
-    json_df = spark.createDataFrame([env], ENVELOPE_SCHEMA)
-    avro_df = spark.createDataFrame([avro_row], AVRO_ENVELOPE_SCHEMA)
-    a = decode_envelope(json_df, codec="json").select(*ENVELOPE_COLS).collect()[0]
-    b = decode_envelope(avro_df, codec="avro").select(*ENVELOPE_COLS).collect()[0]
-    assert a.asDict() == b.asDict()
+def test_only_envelope_compares_codec_names():
+    """streaming/envelope.py is the one module that knows the wire codecs
+    (WireCodec); everything else asks it. A codec-name comparison anywhere
+    else under the package is a second codec seam."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cdc_worker_spark")
+    compare = re.compile(r"\bcodec\s*(?:==|!=|\bin\b|\bnot\s+in\b)|(?:==|!=)\s*codec\b")
+    hits = set()
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as f:
+                    if compare.search(f.read()):
+                        hits.add(os.path.relpath(path, pkg))
+    assert hits <= {"streaming/envelope.py"}, sorted(hits)
 
 
 # ---------------------------------------------------------------------------
 # pure-Python Avro binary codec (functions/avro_codec.py) — the offline wire
 # decode. Spec-derived round-trip + malformed-input + cross-codec tests that
-# RUN in this container (no jar, no fastavro).
+# RUN without any Avro library.
 # ---------------------------------------------------------------------------
 
 from cdc_worker_spark.functions.avro_codec import (  # noqa: E402
@@ -231,8 +151,8 @@ def test_avro_py_malformed_inputs_raise():
 def test_avro_py_json_codec_equivalence(spark):
     """THE wire-decode equivalence, executable offline: the same logical
     events encoded as Avro binary (own encoder) and as JSON text produce
-    byte-identical envelope rows through decode_envelope. This is the
-    eventParser.js:13 parity test the jar-skip used to defer."""
+    byte-identical envelope rows through decode_envelope (the
+    eventParser.js:13 parity test)."""
     sch = _account_avro_schema()
     envs = [
         make_envelope(18098167, record_id="A"),
@@ -328,12 +248,8 @@ def test_avro_py_roundtrip_property():
         ),
     })
 
-    from cdc_worker_spark.functions.avro_codec import (
-        compile_decoder,
-        compile_json_decoder,
-    )
+    from cdc_worker_spark.functions.avro_codec import compile_json_decoder
 
-    compiled = compile_decoder(sch)
     compiled_json = compile_json_decoder(sch)
 
     @given(rec_strat)
@@ -341,8 +257,6 @@ def test_avro_py_roundtrip_property():
     def check(rec):
         wire = avro_encode(rec, sch)
         assert avro_decode(wire, sch) == rec
-        # the hot-path compiled decoder is value-equal to the reference one
-        assert compiled(wire) == rec
         # the direct-to-JSON decoder parses back to the same value tree
         assert json.loads(compiled_json(wire)) == rec
 

@@ -361,30 +361,30 @@ def test_lsh_keys_udf_equals_two_pass_form(spark):
             assert sigs == [sigs_two[vid][t] for t in range(n_tables)], vid
 
 
-def test_basket_pair_array_packed_matches_struct_form(spark):
-    """r12: packed=True emits (a<<32)|b bigints whose unpack reproduces
-    the struct form exactly, for both directed and undirected pairs."""
+def test_basket_pair_array_unpacks_to_itertools_pairs(spark):
+    """The packed (a<<32)|b bigints unpack to exactly the pairs an
+    itertools oracle draws from each basket (items are distinct, as
+    collect_set makes them): every ordered pair when directed, a < b when
+    not, none from 0- or 1-item baskets."""
+    import itertools
+
     from pyspark.sql import functions as F
 
     from cdc_worker_spark.functions.exprs import basket_pair_array
 
-    df = spark.createDataFrame(
-        [([1, 5, 3, 4294967295],), ([7],), ([],)], "parts: array<long>"
-    )
+    baskets = [[1, 5, 3, 4294967295], [7], []]
+    df = spark.createDataFrame([(b,) for b in baskets], "parts: array<long>")
     for directed in (True, False):
-        fa, fb = ("src", "dst") if directed else ("part_a", "part_b")
-        structs = sorted(
-            (r.p[fa], r.p[fb])
-            for r in df.select(
-                F.explode(basket_pair_array("parts", directed=directed)).alias("p")
-            ).collect()
+        want = sorted(
+            (a, b)
+            for basket in baskets
+            for a, b in itertools.permutations(basket, 2)
+            if directed or a < b
         )
-        packed = sorted(
+        got = sorted(
             (r.a, r.b)
             for r in df.select(
-                F.explode(
-                    basket_pair_array("parts", directed=directed, packed=True)
-                ).alias("pk")
+                F.explode(basket_pair_array("parts", directed=directed)).alias("pk")
             )
             .select(
                 F.shiftrightunsigned("pk", 32).alias("a"),
@@ -392,13 +392,13 @@ def test_basket_pair_array_packed_matches_struct_form(spark):
             )
             .collect()
         )
-        assert structs == packed and structs, directed
+        assert got == want and got, directed
 
 
 def test_basket_pair_array_packed_null_key_no_pair_out_of_domain_raises(spark):
-    """packed=True domain guard: a NULL item key yields no pair (the same
-    as the struct form) and does not fail the task; a key outside
-    [0, 2^32) still fails it with the named error."""
+    """Packed-pair domain guard: a NULL item key yields no pair and does
+    not fail the task; a key outside [0, 2^32) still fails it with the
+    named error."""
     from pyspark.sql import functions as F
 
     from cdc_worker_spark.functions.exprs import basket_pair_array
@@ -409,7 +409,7 @@ def test_basket_pair_array_packed_null_key_no_pair_out_of_domain_raises(spark):
             r.pk
             for r in df.select(
                 F.explode(
-                    basket_pair_array("parts", directed=True, packed=True)
+                    basket_pair_array("parts", directed=True)
                 ).alias("pk")
             ).collect()
         )

@@ -164,6 +164,45 @@ def test_multiplexed_decode_stays_native(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_multiplexed_decode_reuses_topic_projections(spark):
+    """decode_multiplexed runs once per micro-batch: with the registry
+    unchanged, a second call reuses each topic's decode projection instead
+    of rebuilding it, so it makes at most a quarter of the first call's Py4J
+    round trips (cyclic GC is paused so finalizer traffic does not count)."""
+    import gc
+
+    from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA
+    from cdc_worker_spark.streaming.registry import SchemaRegistry, decode_multiplexed
+    from tests.test_schema_registry import account_schema_entry, contact_schema_entry
+
+    reg = SchemaRegistry()
+    reg.register(account_schema_entry())
+    reg.register(contact_schema_entry())
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def round_trips() -> int:
+        raw = spark.createDataFrame([], ENVELOPE_SCHEMA)
+        calls = []
+
+        def counting(*args, **kwargs):
+            calls.append(1)
+            return send(*args, **kwargs)
+
+        gc.collect()
+        gc.disable()
+        client.send_command = counting
+        try:
+            decode_multiplexed(raw, reg)
+        finally:
+            client.send_command = send
+            gc.enable()
+        return len(calls)
+
+    first, second = round_trips(), round_trips()
+    assert second * 4 <= first, f"first {first}, second {second} round trips"
+
+
 def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
     """The eval/benchmark shingle side must broadcast: the corpus-scale side
     streams through the match map-side and only (doc, eval) hits shuffle."""

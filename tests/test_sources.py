@@ -5,6 +5,8 @@ subscribe, assert the round-trip — client.spec.js:84-98) without a live org.""
 
 from __future__ import annotations
 
+import json
+import os
 from decimal import Decimal
 
 from cdc_worker_spark.sources.streams import (
@@ -72,6 +74,30 @@ def test_publish_roundtrip_and_presets(spark, tmp_path):
     # CUSTOM resumes strictly after the given offset
     rows = drain_rows(subscribe_from_replay_id(spark, bus, 10), str(tmp_path / "c3"))
     assert sorted(int(r.replay_id) for r in rows) == [11, 12]
+
+
+def test_subscribe_from_replay_id_keeps_envelope_without_offset(spark, tmp_path):
+    """An envelope whose replay id is missing has a NULL offset, so a bare
+    ``replay_id > X`` filter would drop it without a trace; it must come
+    through flagged ``is_corrupt`` (the pipeline's DLQ rule), while the
+    offset predicate still applies to the others."""
+    bus = str(tmp_path / "bus")
+    publish_batch(bus, [_payload("A", 1), _payload("B", 2)], next_replay_id=10)
+    with open(os.path.join(bus, "no-offset.jsonl"), "w") as f:
+        f.write(json.dumps({
+            "replay_id_b64": None,
+            "schema_id": "account-cdc-v1",
+            "payload": json.dumps(_payload("C", 3)),
+        }) + "\n")
+    rows = drain_rows(
+        subscribe_from_replay_id(spark, bus, 10, max_files_per_trigger=None),
+        str(tmp_path / "chk"),
+    )
+    by_record = {r.record_id: r for r in rows}
+    assert set(by_record) == {"B", "C"}
+    assert by_record["C"].is_corrupt and by_record["C"].replay_id is None
+    assert not by_record["B"].is_corrupt
+    assert current_high_water_mark(spark, bus) == 11
 
 
 def test_publish_dataframe_distributed(spark, tmp_path):

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from cdc_worker_spark.operators.dedup import (
     connected_components,
+    jaccard_verify,
     minhash_pairs,
     shingles_distinct,
 )
@@ -69,9 +70,9 @@ def delta_near_pairs(
     Candidates come from joining the materialized band index (base) plus
     the delta batch's own bands against the broadcast delta bands — the
     pairwise LSH predicate, so this is exactly
-    pairs(base ∪ delta) minus pairs(base). Verification (exact shingle
-    Jaccard, same expression as minhash_pairs) re-reads text only for the
-    candidate-touched docs via a semi-join.
+    pairs(base ∪ delta) minus pairs(base). Verification
+    (dedup.jaccard_verify, the kernel minhash_pairs runs) re-reads text
+    only for the candidate-touched docs via a semi-join.
 
     ``all_docs`` must contain the text of base + delta docs (candidate
     verify needs both sides); only candidate rows of it are ever read past
@@ -102,28 +103,7 @@ def delta_near_pairs(
     involved = all_docs.join(F.broadcast(ids), "doc_id", "semi")
     tok = shingles_distinct(involved).withColumnRenamed("g", "w")
     sets = tok.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
-    inter = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b")
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("ws_a", "ws_b")))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.size("ws_a") + F.size("ws_b") - F.col("n_common")
-    )
-    return (
-        inter.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_verify(cand, sets, threshold)
 
 
 def extend_dedup_cluster_parts(
@@ -255,11 +235,17 @@ def extend_dedup_clusters(
     if parts is None:
         return labels
     remap, new_rows = parts
-    base_new = labels.join(F.broadcast(remap), "cluster_id", "left").select(
+    return relabel(labels, remap).unionByName(new_rows)
+
+
+def relabel(labels: DataFrame, remap: DataFrame) -> DataFrame:
+    """Apply a (cluster_id, _new) remap to (doc_id, cluster_id) label
+    rows: one scan of ``labels`` left-joined to the BROADCAST
+    (delta-sized) remap, keeping ``_new`` where a row's cluster moved."""
+    return labels.join(F.broadcast(remap), "cluster_id", "left").select(
         "doc_id",
         F.coalesce("_new", "cluster_id").alias("cluster_id"),
     )
-    return base_new.unionByName(new_rows)
 
 
 @query("q_dedup_cluster_incr")  # rows-only: iterative CC, engine-specific hashes

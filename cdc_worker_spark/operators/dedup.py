@@ -285,48 +285,50 @@ def minhash_band_table(sig: DataFrame) -> DataFrame:
     )
 
 
-def minhash_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """(doc_a, doc_b, jaccard >= threshold) near-dup pairs — the MinHash-LSH
-    candidates-then-verify pipeline shared by q_dedup_minhash and the
-    cluster assignment operator."""
-    # shingle set is read twice (signatures, verify sets): persist instead of
-    # recomputing the explode. At cluster scale this is the stage you'd
-    # materialize to a shuffle-friendly layout (operators/dedup_index.py is
-    # exactly that materialization).
-    tok = shingles_distinct(docs).withColumnRenamed("g", "w").persist()
-    sig = minhash_signatures_from_tokens(tok)
-    long = minhash_band_table(sig)
-    x = long.select("band_idx", "band_val", F.col("doc_id").alias("doc_a"))
-    y = long.select("band_idx", "band_val", F.col("doc_id").alias("doc_b"))
-    cand = (
+def minhash_band_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_a < doc_b) distinct candidate pairs of one band table: the LSH
+    self-join — two docs are candidates iff they share a band value."""
+    x = bands.select("band_idx", "band_val", F.col("doc_id").alias("doc_a"))
+    y = bands.select("band_idx", "band_val", F.col("doc_id").alias("doc_b"))
+    return (
         x.join(y, ["band_idx", "band_val"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
 
-    # verify on candidate PAIRS only: join each side's shingle SET (one array
-    # row per doc, not the exploded (doc, shingle) table — the candidate x
-    # shingle intermediate is the thing that blows up at scale) and compute
-    # exact Jaccard via array_intersect.
-    # the shingle-set side is O(corpus) rows of ARRAYS: its in-memory hash
-    # relation is far larger than its compressed shuffle size, so an AQE
-    # broadcast "upgrade" of this join is always wrong (at 100 TB it cannot
-    # fit; in the 1 GB sf1 contract sweep it concretely failed with "Not
-    # enough memory to build and broadcast"). Pin both verify joins to
-    # sort-merge — spillable, and co-partitioned on the doc key.
-    sets = tok.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
+
+def minhash_estimate(a: str, b: str) -> Column:
+    """Estimated Jaccard of two signatures held in columns ``{a}0..`` and
+    ``{b}0..``: the fraction of the K minhash components that agree."""
+    agree = sum(
+        F.when(F.col(f"{a}{k}") == F.col(f"{b}{k}"), 1).otherwise(0)
+        for k in range(_MINHASH_K)
+    )
+    return (agree / F.lit(float(_MINHASH_K))).cast("double")
+
+
+def jaccard_verify(
+    cand: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard >= threshold) exact shingle Jaccard of the
+    (doc_a, doc_b) candidate pairs, from a (doc_id, ws) shingle-set frame.
+
+    Each side joins the shingle SET (one array row per doc, not the
+    exploded (doc, shingle) table — the candidate x shingle intermediate
+    is the thing that blows up at scale); the intersection size comes
+    from array_intersect. Join hints on ``sets`` carry into both joins."""
     inter = (
         cand.join(
             sets.select(
                 F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a")
-            ).hint("merge"),
+            ),
             "doc_a",
         )
         .join(
             sets.select(
                 F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b")
-            ).hint("merge"),
+            ),
             "doc_b",
         )
         .withColumn("n_common", F.size(F.array_intersect("ws_a", "ws_b")))
@@ -338,6 +340,28 @@ def minhash_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
         inter.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def minhash_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """(doc_a, doc_b, jaccard >= threshold) near-dup pairs — the MinHash-LSH
+    candidates-then-verify pipeline shared by q_dedup_minhash and the
+    cluster assignment operator."""
+    # shingle set is read twice (signatures, verify sets): persist instead of
+    # recomputing the explode. At cluster scale this is the stage you'd
+    # materialize to a shuffle-friendly layout (operators/dedup_index.py is
+    # exactly that materialization).
+    tok = shingles_distinct(docs).withColumnRenamed("g", "w").persist()
+    cand = minhash_band_pairs(
+        minhash_band_table(minhash_signatures_from_tokens(tok))
+    )
+    # the shingle-set side is O(corpus) rows of ARRAYS: its in-memory hash
+    # relation is far larger than its compressed shuffle size, so an AQE
+    # broadcast "upgrade" of this join is always wrong (at 100 TB it cannot
+    # fit; in the 1 GB sf1 contract sweep it concretely failed with "Not
+    # enough memory to build and broadcast"). Pin both verify joins to
+    # sort-merge — spillable, and co-partitioned on the doc key.
+    sets = tok.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
+    return jaccard_verify(cand, sets.hint("merge"), threshold)
 
 
 #: SimHash configuration: signature bits and band layout. 32 bits over

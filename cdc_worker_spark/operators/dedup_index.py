@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from cdc_worker_spark.operators.dedup import (
     _MINHASH_K,
     minhash_band_table,
+    minhash_estimate,
     minhash_signatures_from_tokens,
     shingles_distinct,
 )
@@ -187,10 +188,6 @@ def probe_dedup_index(
         .distinct()
     )
     idx_sigs = spark.read.parquet(*live_paths(path, "signatures"))
-    agree = sum(
-        F.when(F.col(f"h{k}") == F.col(f"bh{k}"), 1).otherwise(0)
-        for k in range(_MINHASH_K)
-    )
     b_sigs_r = b_sigs.select(
         F.col("doc_id").alias("b_id"),
         *[F.col(f"h{k}").alias(f"bh{k}") for k in range(_MINHASH_K)],
@@ -199,7 +196,7 @@ def probe_dedup_index(
         idx_sigs.withColumnRenamed("doc_id", "match_id")
         .join(F.broadcast(cand), "match_id")
         .join(F.broadcast(b_sigs_r), F.col("doc_id") == F.col("b_id"))
-        .withColumn("score", (agree / F.lit(float(_MINHASH_K))).cast("double"))
+        .withColumn("score", minhash_estimate("h", "bh"))
         .filter(F.col("score") >= est_threshold)
         .filter(F.col("doc_id") != F.col("match_id"))  # self: replay, not near
         .select("doc_id", "match_id", F.lit("near").alias("kind"), "score")

@@ -66,21 +66,16 @@ def _read_raw(root: str) -> dict:
 
 def read_pointer(root: str) -> dict:
     """table -> {"base": dir, "segments": [dirs]} ({} when no flip has
-    happened yet). v1 pointers (plain string values) are normalized; the
-    reserved META_KEY entry is excluded (use :func:`read_meta`)."""
-    return {
-        t: ({"base": v, "segments": []} if isinstance(v, str) else v)
-        for t, v in _read_raw(root).items()
-        if t != META_KEY
-    }
+    happened yet). The reserved META_KEY entry is excluded (use
+    :func:`read_meta`)."""
+    return {t: v for t, v in _read_raw(root).items() if t != META_KEY}
 
 
 def read_meta(root: str) -> dict:
     """The pointer's layout-metadata entry ({} when absent). Reading it
     and the table entries from the same file is what makes a layout
     migration atomic for readers: one ``os.replace`` flips both."""
-    v = _read_raw(root).get(META_KEY, {})
-    return dict(v) if isinstance(v, dict) else {}
+    return dict(_read_raw(root).get(META_KEY, {}))
 
 
 def _write_pointer(root: str, cur: dict) -> None:
@@ -154,9 +149,6 @@ def publish_segment(root: str, table: str, token: str) -> None:
     """Atomically register a fully-written segment (one pointer PUT)."""
     cur = _read_raw(root)  # raw: preserve META_KEY and untouched entries
     e = cur.get(table, {"base": table, "segments": []})
-    if isinstance(e, str):  # v1 entry being appended to: normalize it
-        e = {"base": e, "segments": []}
-    e = {"base": e["base"], "segments": list(e["segments"])}
     name = segment_name(table, token)
     if name not in e["segments"]:
         e["segments"].append(name)
@@ -193,8 +185,7 @@ def publish_generations(
     for table, gen_name in gens.items():
         cur[table] = {"base": gen_name, "segments": []}
     if meta:
-        m = cur.get(META_KEY, {})
-        m = dict(m) if isinstance(m, dict) else {}
+        m = dict(cur.get(META_KEY, {}))
         for k, v in meta.items():
             if v is None:
                 m.pop(k, None)

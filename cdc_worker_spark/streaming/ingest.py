@@ -16,18 +16,47 @@ which is the standard idempotence recipe for append-only corpus sinks).
 
 from __future__ import annotations
 
-import json
 import os
+import re
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cdc_worker_spark.operators.cluster_incr import (
+    delta_near_pairs,
+    extend_dedup_cluster_parts,
+    relabel,
+)
+from cdc_worker_spark.operators.dedup import (
+    _MINHASH_K,
+    minhash_band_pairs,
+    minhash_band_table,
+    minhash_estimate,
+    minhash_signatures_from_tokens,
+    shingles_distinct,
+)
 from cdc_worker_spark.operators.dedup_index import (
     _digest,
     build_dedup_index,
+    compact_dedup_index,
     extend_dedup_index,
     probe_dedup_index,
+)
+from cdc_worker_spark.operators.index_layout import (
+    begin_segment,
+    drop_table,
+    gc_generations,
+    live_paths,
+    next_generation,
+    publish_generations,
+    publish_segment,
+    read_meta,
+    read_pointer,
+    resolve_table,
+    segment_registered,
+    table_exists,
 )
 from cdc_worker_spark.streaming.pipeline import read_json_stream, start_batches
 
@@ -45,20 +74,18 @@ LABELS_TABLE = "cluster_labels"
 #: with the same exactly-once token protocol as the index extend
 PENDING_TABLE = "label_pending"
 
-#: LEGACY layout-metadata file for the PARTITIONED label snapshot (r10).
-#: Since r12 the bucket count lives IN the manifest pointer (reserved
-#: META_KEY entry, key ``labels_buckets``) so a re-bucket migration flips
-#: layout + bucket generations in ONE atomic pointer write — the r10/r11
-#: two-file commit (generations in the pointer, bucket count in this
-#: side file) left a window where a concurrent reader saw new buckets
-#: under the old count: duplicates on shrink, missing rows on grow
-#: (ADVICE r11). The side file is still READ as a fallback so
-#: pre-existing on-disk indexes keep working; the first snapshot write
-#: migrates the count into the pointer and deletes it.
-LABELS_META = "_labels_layout.json"
-
-#: pointer-meta key carrying the label snapshot's bucket count
+#: pointer-meta key carrying the label snapshot's bucket count (absent =
+#: monolithic). It lives IN the manifest pointer so a re-bucket migration
+#: flips layout + bucket generations in ONE atomic pointer write: a
+#: concurrent reader never sees new buckets under the old count
+#: (duplicates on shrink, missing rows on grow — ADVICE r11)
 LABELS_META_KEY = "labels_buckets"
+
+#: every table name the label snapshot can occupy: the monolithic table
+#: and the ``_bNNN`` buckets of the partitioned layout
+_LABEL_TABLE_RE = re.compile(re.escape(LABELS_TABLE) + r"(_b\d+)?$")
+
+LABELS_SCHEMA = "doc_id long, cluster_id long"
 
 #: pointer-meta key carrying each ingest stream's committed-batch
 #: high-water mark, ``{<absolute checkpoint dir>: <last committed
@@ -66,25 +93,11 @@ LABELS_META_KEY = "labels_buckets"
 #: over an existing index starts from nothing
 INGEST_MARK_KEY = "ingest_committed"
 
-#: LEGACY per-checkpoint ledger (one appended line per committed batch,
-#: never trimmed); read once at start as its max, then replaced by the mark
-INGEST_LEDGER = "_ingest_committed"
-
 
 def _labels_buckets(index_dir: str) -> int | None:
-    """Bucket count of the partitioned label layout (None = monolithic).
-    The manifest pointer's meta entry is authoritative; the legacy side
-    file is a read-only fallback for pre-r12 indexes."""
-    from cdc_worker_spark.operators.index_layout import read_meta
-
-    v = read_meta(index_dir).get(LABELS_META_KEY)
-    if v is not None:
-        return int(v)
-    try:
-        with open(os.path.join(index_dir, LABELS_META)) as fh:
-            return int(json.load(fh)["buckets"])
-    except (FileNotFoundError, KeyError, ValueError):
-        return None
+    """Bucket count of the partitioned label layout as committed in the
+    manifest pointer (None = monolithic)."""
+    return read_meta(index_dir).get(LABELS_META_KEY)
 
 
 def _bucket_table(i: int) -> str:
@@ -182,31 +195,35 @@ class LabelLayoutPolicy:
         return max(want, current) >= 4 * min(want, current)
 
 
+def _read_label_tables(
+    spark: SparkSession, index_dir: str, tables: list[str]
+) -> DataFrame:
+    """Union of the published generations of ``tables`` (an empty
+    (doc_id, cluster_id) frame when none exists yet)."""
+    paths = [
+        resolve_table(index_dir, t)
+        for t in tables
+        if table_exists(index_dir, t)
+    ]
+    if not paths:
+        return spark.createDataFrame([], LABELS_SCHEMA)
+    return spark.read.parquet(*paths)
+
+
 def read_cluster_labels(spark: SparkSession, index_dir: str) -> DataFrame:
     """Current (doc_id, cluster_id) label snapshot — empty before the first
-    near pair is observed. Readers resolve the manifest pointer, so a
+    near pair is observed. The layout (monolithic or B buckets) is read
+    from the manifest pointer, and readers resolve that same pointer, so a
     mid-flip reader sees the previous complete generation, never a partial
     write (partitioned layouts flip ALL touched buckets in one pointer
     write — index_layout.publish_generations — so the union below is
     always an all-old or all-new view)."""
-    from cdc_worker_spark.operators.index_layout import (
-        resolve_table,
-        table_exists,
-    )
-
     buckets = _labels_buckets(index_dir)
-    if buckets is not None:
-        paths = [
-            resolve_table(index_dir, _bucket_table(i))
-            for i in range(buckets)
-            if table_exists(index_dir, _bucket_table(i))
-        ]
-        if not paths:
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
-        return spark.read.parquet(*paths)
-    if not table_exists(index_dir, LABELS_TABLE):
-        return spark.createDataFrame([], "doc_id long, cluster_id long")
-    return spark.read.parquet(resolve_table(index_dir, LABELS_TABLE))
+    tables = (
+        [_bucket_table(i) for i in range(buckets)] if buckets
+        else [LABELS_TABLE]
+    )
+    return _read_label_tables(spark, index_dir, tables)
 
 
 def _write_bucket_generations(
@@ -231,10 +248,6 @@ def _write_bucket_generations(
     (0-row, schema-bearing) generation so readers never hit a missing
     directory. Returns {table: generation_dir}; the caller publishes all
     of them in one pointer flip."""
-    import shutil
-
-    from cdc_worker_spark.operators.index_layout import next_generation
-
     scratch = os.path.join(index_dir, "_labels_split_tmp")
     shutil.rmtree(scratch, ignore_errors=True)
     (
@@ -257,7 +270,7 @@ def _write_bucket_generations(
         .parquet(scratch)
     )
     gens: dict[str, str] = {}
-    empty = spark.createDataFrame([], "doc_id long, cluster_id long")
+    empty = spark.createDataFrame([], LABELS_SCHEMA)
     for i in bucket_ids:
         t = _bucket_table(i)
         gen = next_generation(index_dir, t)
@@ -278,104 +291,55 @@ def write_label_snapshot(
     labels: DataFrame,
     buckets: int | None = None,
 ) -> None:
-    """FULL snapshot write honoring the layout: bootstrap, migration, and
-    the monolithic fold all land here. Passing ``buckets`` declares (or
-    re-declares) the partitioned layout and commits the bucket count in
-    the pointer meta; all bucket pointers + the count flip in ONE
-    pointer write. ``buckets=0`` is the explicit bucketed->monolithic
-    migration (r12, for the auto layout policy): the monolithic table
-    and the meta-key removal commit in the same flip, then the stale
-    bucket tables are dropped. The partitioned split is ONE partitionBy
-    job (r11), not a job per bucket — migration cost is one shuffle of
-    the corpus, independent of the bucket count."""
-    from cdc_worker_spark.operators.index_layout import (
-        gc_generations,
-        next_generation,
-        publish_generation,
-        publish_generations,
-    )
+    """FULL snapshot write in the layout the manifest pointer commits:
+    bootstrap, migration, and the monolithic fold all land here. The
+    layout is read from the pointer unless ``buckets`` is passed, which
+    declares (or re-declares) it: ``buckets=B`` partitions the snapshot
+    by cluster_id % B, ``buckets=0`` migrates back to monolithic. This is
+    the one place a caller chooses the layout; the ingest loop folds into
+    whatever the pointer says (or lets a LabelLayoutPolicy migrate it).
 
+    The table generations and the bucket count commit in ONE pointer
+    write, so a concurrent reader resolves either the old layout with
+    its generations or the new one with its generations — never a mixed
+    view (ADVICE r11). A crash before it leaves readers on the previous
+    complete layout with the new generations as unreferenced debris a
+    re-run overwrites. The partitioned split is ONE partitionBy job
+    (r11), not a job per bucket — migration cost is one shuffle of the
+    corpus, independent of the bucket count."""
     os.makedirs(index_dir, exist_ok=True)
-    explicit_monolithic = buckets == 0
     if buckets is None:
         buckets = _labels_buckets(index_dir)
-    if buckets is None or explicit_monolithic:
+    if buckets:
+        gens = _write_bucket_generations(
+            spark,
+            index_dir,
+            labels.withColumn(
+                "_b", F.pmod(F.col("cluster_id"), F.lit(buckets))
+            ),
+            list(range(buckets)),
+        )
+    else:
         gen = next_generation(index_dir, LABELS_TABLE)
         # same doc_id-sorted row groups as the bucketed writer, for the
         # same delta-endpoint lookup pruning
         labels.sortWithinPartitions("doc_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(index_dir, gen))
-        if explicit_monolithic:
-            # one atomic flip: readers see (bucketed meta, buckets) or
-            # (no meta, monolithic table), never a mixed view
-            publish_generations(
-                index_dir,
-                {LABELS_TABLE: gen},
-                meta={LABELS_META_KEY: None},
-            )
-            try:
-                os.remove(os.path.join(index_dir, LABELS_META))
-            except FileNotFoundError:
-                pass
-            from cdc_worker_spark.operators.index_layout import (
-                drop_table,
-                read_pointer,
-            )
-
-            import re as _re
-
-            bucket_re = _re.compile(
-                _re.escape(LABELS_TABLE) + r"_b(\d+)$"
-            )
-            for t in list(read_pointer(index_dir)):
-                if bucket_re.match(t):
-                    drop_table(index_dir, t)
-        else:
-            publish_generation(index_dir, LABELS_TABLE, gen)
-        gc_generations(index_dir, LABELS_TABLE)
-        return
-    gens = _write_bucket_generations(
-        spark,
-        index_dir,
-        labels.withColumn("_b", F.pmod(F.col("cluster_id"), F.lit(buckets))),
-        list(range(buckets)),
+        gens = {LABELS_TABLE: gen}
+    publish_generations(
+        index_dir, gens, meta={LABELS_META_KEY: buckets or None}
     )
-    # ONE atomic pointer write commits the bucket generations AND the
-    # bucket count (pointer meta): declare, grow, and shrink migrations
-    # all flip in a single os.replace, so a concurrent reader resolves
-    # either (old count, old generations) or (new count, new
-    # generations) — never a mixed layout/pointer view (ADVICE r11). A
-    # crash before it leaves readers on the previous complete layout
-    # with the new generations as unreferenced debris a re-run
-    # overwrites.
-    publish_generations(index_dir, gens, meta={LABELS_META_KEY: buckets})
-    # the pre-r12 side file is superseded by the pointer meta — remove
-    # it so it can never contradict the pointer (readers prefer the
-    # pointer either way; this is hygiene, after the commit point)
-    try:
-        os.remove(os.path.join(index_dir, LABELS_META))
-    except FileNotFoundError:
-        pass
     for t in gens:
         gc_generations(index_dir, t)
-    # migration hygiene (ADVICE r10): once the meta commits B buckets,
-    # the monolithic table and any bucket table numbered >= B are
-    # unreachable by readers but still referenced in the pointer — drop
-    # them so a shrink/migration never strands stale data. Runs AFTER
-    # the commit point; a crash in between just leaves the same debris
-    # the next snapshot write cleans.
-    import re as _re
-
-    from cdc_worker_spark.operators.index_layout import (
-        drop_table,
-        read_pointer,
-    )
-
-    bucket_re = _re.compile(_re.escape(LABELS_TABLE) + r"_b(\d+)$")
-    for t in list(read_pointer(index_dir)):
-        m = bucket_re.match(t)
-        if t == LABELS_TABLE or (m and int(m.group(1)) >= buckets):
+    # migration hygiene (ADVICE r10): once the pointer commits a layout,
+    # every other label table — the monolithic one after a split, the
+    # buckets after a merge, buckets numbered >= B after a shrink — is
+    # unreachable by readers but still referenced in the pointer. Drop
+    # them AFTER the commit point; a crash in between just leaves the
+    # same debris for the next snapshot write to sweep.
+    for t in read_pointer(index_dir):
+        if t not in gens and _LABEL_TABLE_RE.match(t):
             drop_table(index_dir, t)
 
 
@@ -392,27 +356,19 @@ def apply_label_pairs(
     ``touched_clusters`` — the number of distinct clusters whose label
     rows this fold rewrites (remapped sources + brand-new clusters), the
     K of the measured K-vs-B layout crossover (SCALE.md §r11) — so the
-    auto layout policy observes the regime it is sizing for.
+    auto layout policy observes the regime it is sizing for. On the
+    monolithic layout that count costs two delta-sized jobs, so pass
+    ``stats`` only when something reads it.
 
     Monolithic layout: compose the full new table and flip one pointer.
-    Partitioned layout (bucket count in the pointer meta, or the legacy
-    LABELS_META side file): compute the delta-sized
-    (remap, new_rows) parts, derive the TOUCHED buckets — sources that
-    lose a remapped cluster, destinations that gain one, buckets of new
-    rows — rewrite only those, and flip them atomically in one pointer
-    write. Untouched buckets keep their generation directories bit-for-
-    bit (asserted in tests/test_streaming_ingest.py). Work per fold is
-    O(delta) + O(size of touched buckets), never O(corpus)."""
-    from cdc_worker_spark.operators.cluster_incr import (
-        extend_dedup_cluster_parts,
-    )
-    from cdc_worker_spark.operators.index_layout import (
-        gc_generations,
-        publish_generations,
-        resolve_table,
-        table_exists,
-    )
-
+    Partitioned layout (bucket count in the pointer meta): compute the
+    delta-sized (remap, new_rows) parts, derive the TOUCHED buckets —
+    sources that lose a remapped cluster, destinations that gain one,
+    buckets of new rows — rewrite only those, and flip them atomically
+    in one pointer write. Untouched buckets keep their generation
+    directories bit-for-bit (asserted in tests/test_streaming_ingest.py).
+    Work per fold is O(delta) + O(size of touched buckets), never
+    O(corpus)."""
     labels = read_cluster_labels(spark, index_dir)
     parts = extend_dedup_cluster_parts(labels, pairs)
     if parts is None:
@@ -421,18 +377,12 @@ def apply_label_pairs(
     buckets = _labels_buckets(index_dir)
     if buckets is None:
         if stats is not None:
-            # K for the layout policy: remap has one row per remapped
-            # source cluster; both jobs are delta-sized
+            # remap has one row per remapped source cluster
             stats["touched_clusters"] = remap.count() + (
                 new_rows.select("cluster_id").distinct().count()
             )
-        base_new = labels.join(
-            F.broadcast(remap), "cluster_id", "left"
-        ).select(
-            "doc_id", F.coalesce("_new", "cluster_id").alias("cluster_id")
-        )
         write_label_snapshot(
-            spark, index_dir, base_new.unionByName(new_rows)
+            spark, index_dir, relabel(labels, remap).unionByName(new_rows)
         )
         return True
 
@@ -453,35 +403,20 @@ def apply_label_pairs(
     # ONE read of every touched bucket + ONE partitionBy write of the new
     # contents (r11): the r10 per-bucket job loop paid ~0.5-0.7 s of job
     # overhead per touched bucket, which the crossover probe measured as
-    # the dominant fold cost — and a first one-job version still read the
-    # touched bytes twice (moved rows and kept rows as separate scans).
-    # This is the monolithic fold's own transformation — left-join the
-    # broadcast remap, coalesce the new label — restricted to the touched
-    # buckets: one scan, one shuffle of exactly the rewrite bytes.
+    # the dominant fold cost. This is the monolithic fold's own relabel
+    # restricted to the touched buckets: one scan, one shuffle of exactly
+    # the rewrite bytes.
     # Correctness of the restriction: a remapped cluster's rows live
     # wholly in its own (src, touched) bucket; every remap destination
     # and new-row cluster lands in a dst (touched) bucket by
     # construction of `touched`; untouched buckets are disjoint from
     # both and keep their generation directories bit-for-bit.
-    touched_paths = [
-        resolve_table(index_dir, _bucket_table(b))
-        for b in touched
-        if table_exists(index_dir, _bucket_table(b))
-    ]
-    if touched_paths:
-        relabeled = (
-            spark.read.parquet(*touched_paths)
-            .join(F.broadcast(remap), "cluster_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("_new", "cluster_id").alias("cluster_id"),
-            )
-        )
-    else:
-        relabeled = spark.createDataFrame([], "doc_id long, cluster_id long")
-    content = relabeled.unionByName(
-        new_rows.select("doc_id", "cluster_id")
-    ).withColumn("_b", F.pmod(F.col("cluster_id"), F.lit(buckets)))
+    touched_labels = _read_label_tables(
+        spark, index_dir, [_bucket_table(b) for b in touched]
+    )
+    content = relabel(touched_labels, remap).unionByName(new_rows).withColumn(
+        "_b", F.pmod(F.col("cluster_id"), F.lit(buckets))
+    )
     gens = _write_bucket_generations(spark, index_dir, content, touched)
     publish_generations(index_dir, gens)
     for t in gens:
@@ -492,8 +427,6 @@ def apply_label_pairs(
 def _pending_paths(index_dir: str) -> list[str]:
     """Existing directories of the label-pending spool (base generation,
     if one has been published, plus every registered segment)."""
-    from cdc_worker_spark.operators.index_layout import live_paths
-
     return [p for p in live_paths(index_dir, PENDING_TABLE) if os.path.isdir(p)]
 
 
@@ -501,8 +434,6 @@ def _pending_segment_count(index_dir: str) -> int:
     """Registered-but-unfolded spool segments = batches since the last
     fold (the cadence counter; the empty base generation a fold publishes
     does not count)."""
-    from cdc_worker_spark.operators.index_layout import read_pointer
-
     e = read_pointer(index_dir).get(PENDING_TABLE)
     return len(e["segments"]) if e else 0
 
@@ -532,19 +463,13 @@ def fold_pending_labels(
     batches while per-batch work stays O(delta) (one tiny doc_id segment
     append). Measured at sf10 in scripts/bench_streaming_labels.py
     (SCALE.md §r10)."""
-    from cdc_worker_spark.operators.cluster_incr import delta_near_pairs
-    from cdc_worker_spark.operators.index_layout import (
-        gc_generations,
-        next_generation,
-        publish_generation,
-    )
 
     def _clear_spool() -> None:
         pgen = next_generation(index_dir, PENDING_TABLE)
         spark.createDataFrame([], "doc_id long").write.mode(
             "overwrite"
         ).parquet(os.path.join(index_dir, pgen))
-        publish_generation(index_dir, PENDING_TABLE, pgen)
+        publish_generations(index_dir, {PENDING_TABLE: pgen})
         gc_generations(index_dir, PENDING_TABLE)
 
     paths = _pending_paths(index_dir)
@@ -606,13 +531,6 @@ def dedup_batch_against_index(
     the doc is already in the corpus, and it is not a duplicate of anything.
 
     ``rejected`` carries the match evidence (match_id, kind, score)."""
-    from cdc_worker_spark.operators.dedup import (
-        _MINHASH_K,
-        minhash_band_table,
-        minhash_signatures_from_tokens,
-        shingles_distinct,
-    )
-
     dedupable = batch.filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
@@ -654,22 +572,6 @@ def dedup_batch_against_index(
             [], "doc_id long, match_id long, score double"
         )
     else:
-        x = b_bands.select(
-            "band_idx", "band_val", F.col("doc_id").alias("doc_a")
-        )
-        y = b_bands.select(
-            "band_idx", "band_val", F.col("doc_id").alias("doc_b")
-        )
-        pairs = (
-            x.join(y, ["band_idx", "band_val"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        agree = sum(
-            F.when(F.col(f"ha{k}") == F.col(f"hb{k}"), 1).otherwise(0)
-            for k in range(_MINHASH_K)
-        )
         sa = b_sigs.select(
             F.col("doc_id").alias("doc_a"),
             *[F.col(f"h{k}").alias(f"ha{k}") for k in range(_MINHASH_K)],
@@ -679,10 +581,10 @@ def dedup_batch_against_index(
             *[F.col(f"h{k}").alias(f"hb{k}") for k in range(_MINHASH_K)],
         )
         near_pairs = (
-            pairs.join(sa, "doc_a").join(sb, "doc_b")
-            .withColumn(
-                "score", (agree / F.lit(float(_MINHASH_K))).cast("double")
-            )
+            minhash_band_pairs(b_bands)
+            .join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("score", minhash_estimate("ha", "hb"))
             .filter(F.col("score") >= 0.5)
         )
         near_best = (
@@ -768,7 +670,6 @@ def run_dedup_ingest_pipeline(
     near_policy: str = "reject",
     batch_metrics: list | None = None,
     label_cadence: int = 1,
-    label_buckets: int | None = None,
     index_compact_cadence: int | None = None,
     label_layout: LabelLayoutPolicy | None = None,
 ):
@@ -808,26 +709,29 @@ def run_dedup_ingest_pipeline(
     cadence tests). End state is IDENTICAL to per-batch mode (the
     pairwise-predicate monoid argument in fold_pending_labels' docstring);
     the default cadence=1 keeps the exactness-first per-batch shape.
-    ``label_buckets=B`` (r10) additionally partitions the label snapshot
-    by cluster_id % B (``write_label_snapshot`` / ``apply_label_pairs``)
-    so each fold rewrites only the buckets its remap/new rows touch —
-    O(delta + touched buckets), never O(corpus) — with all touched
-    buckets flipped in one atomic pointer write; an existing monolithic
-    snapshot is migrated once at pipeline start. End state is identical
-    across {per-batch, cadence} × {monolithic, partitioned} and equals
-    the batch recompute (tests/test_streaming_ingest.py).
-    Measured overhead: SCALE.md §r9 (per-batch), §r10 (cadence +
-    partitioned).
 
-    ``label_layout=LabelLayoutPolicy(...)`` (r12) replaces the fixed
-    ``label_buckets`` with self-selection: each fold reports its
-    touched-cluster count K, the policy applies the measured K-vs-B
-    crossover rules (SCALE.md §r11), and the loop migrates the snapshot
-    (monolithic <-> B buckets, one corpus shuffle, atomic pointer
-    commit) when the regime changes — with hysteresis so noise never
-    flaps an O(corpus) migration. Equality with the batch recompute is
-    invariant under migrations (the fold semantics never depend on the
-    layout; tests/test_streaming_ingest.py::test_auto_layout...).
+    The label LAYOUT is whatever the index's manifest pointer commits:
+    monolithic, or partitioned by cluster_id % B, where each fold
+    rewrites only the buckets its remap/new rows touch — O(delta +
+    touched buckets), never O(corpus) — with all touched buckets flipped
+    in one atomic pointer write (``apply_label_pairs``). A caller
+    declares or migrates it once, before or between runs, with
+    ``write_label_snapshot(spark, index_dir, read_cluster_labels(spark,
+    index_dir), buckets=B)``; a restart folds into the committed layout.
+    End state is identical across {per-batch, cadence} × {monolithic,
+    partitioned} and equals the batch recompute
+    (tests/test_streaming_ingest.py). Measured overhead: SCALE.md §r9
+    (per-batch), §r10 (cadence + partitioned).
+
+    ``label_layout=LabelLayoutPolicy(...)`` (r12) lets the loop choose the
+    layout itself: each fold reports its touched-cluster count K, the
+    policy applies the measured K-vs-B crossover rules (SCALE.md §r11),
+    and the loop migrates the snapshot (monolithic <-> B buckets, one
+    corpus shuffle, atomic pointer commit) when the regime changes —
+    with hysteresis so noise never flaps an O(corpus) migration.
+    Equality with the batch recompute is invariant under migrations (the
+    fold semantics never depend on the layout;
+    tests/test_streaming_ingest.py::test_auto_layout...).
 
     ``index_compact_cadence=N`` (r10) runs compact_dedup_index every N
     committed batches — the "nightly" small-files hygiene the compaction
@@ -838,68 +742,13 @@ def run_dedup_ingest_pipeline(
     Exactly-once bookkeeping: the last committed batch id of this stream
     (keyed by its checkpoint dir) is a high-water mark in the index
     pointer's meta entry (:data:`INGEST_MARK_KEY`), read once per batch; a
-    batch id at or below it is a no-op. A legacy ``_ingest_committed``
-    ledger in the checkpoint dir is read once, as its max, and removed."""
-    from cdc_worker_spark.operators.index_layout import (
-        publish_generations,
-        read_meta,
-        table_exists,
-    )
-
-    if label_layout is not None and label_buckets is not None:
-        raise ValueError(
-            "label_layout (auto policy) and label_buckets (fixed count) "
-            "are mutually exclusive — the policy owns the layout"
-        )
+    batch id at or below it is a no-op."""
     if not table_exists(index_dir, "digests"):
         build_dedup_index(
             spark.createDataFrame([], DOC_SCHEMA), index_dir
         )
-    if label_buckets is not None:
-        meta_buckets = _labels_buckets(index_dir)
-        if meta_buckets is None:
-            # declare the partitioned label layout before the first
-            # batch; an existing monolithic snapshot is split once
-            # (migration price, O(corpus), paid exactly once — folds
-            # after this touch only the buckets their delta reaches)
-            write_label_snapshot(
-                spark,
-                index_dir,
-                read_cluster_labels(spark, index_dir),
-                buckets=label_buckets,
-            )
-        elif meta_buckets != label_buckets:
-            # never silently fold into a different layout than the
-            # caller asked for (ADVICE r10: an operator who thinks they
-            # run 64 buckets must not silently be on 16). Re-bucketing
-            # is an explicit O(corpus) migration the operator opts into
-            # via write_label_snapshot, not a side effect of a restart.
-            raise ValueError(
-                f"label layout mismatch: index at {index_dir!r} is "
-                f"partitioned into {meta_buckets} buckets but the "
-                f"pipeline was asked for label_buckets={label_buckets}. "
-                "Either restart with the existing count or migrate "
-                "explicitly: write_label_snapshot(spark, index_dir, "
-                "read_cluster_labels(spark, index_dir), "
-                f"buckets={label_buckets})"
-            )
     os.makedirs(checkpoint_dir, exist_ok=True)
     stream_key = os.path.abspath(checkpoint_dir)
-
-    def _publish_mark(marks: dict, batch_id: int) -> None:
-        # a meta-only pointer write: no table is repointed
-        publish_generations(
-            index_dir, {}, meta={INGEST_MARK_KEY: {**marks, stream_key: batch_id}}
-        )
-
-    ledger = os.path.join(checkpoint_dir, INGEST_LEDGER)
-    if os.path.isfile(ledger):
-        with open(ledger) as fh:
-            legacy = max((int(line) for line in fh if line.strip()), default=-1)
-        marks = read_meta(index_dir).get(INGEST_MARK_KEY, {})
-        if legacy > marks.get(stream_key, -1):
-            _publish_mark(marks, legacy)
-        os.remove(ledger)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: after a crash between the sink
@@ -931,7 +780,8 @@ def run_dedup_ingest_pipeline(
         layout_event = None
         if near_policy == "label":
             t_lbl = time.perf_counter()
-            fold_stats: dict = {}
+            # the fold counts touched clusters only for a policy to read
+            fold_stats = {} if label_layout is not None else None
             if label_cadence <= 1:
                 _extend_labels(batch_df, rejected, fold_stats)
             else:
@@ -940,9 +790,13 @@ def run_dedup_ingest_pipeline(
                     fold_pending_labels(
                         spark, index_dir, corpus_dir, stats=fold_stats
                     )
-            layout_event = _auto_layout(fold_stats)
+            if fold_stats:  # a policy is set and a fold ran
+                layout_event = _auto_layout(fold_stats)
             label_sec = round(time.perf_counter() - t_lbl, 3)
-        _publish_mark(marks, batch_id)
+        # a meta-only pointer write: no table is repointed
+        publish_generations(
+            index_dir, {}, meta={INGEST_MARK_KEY: {**marks, stream_key: batch_id}}
+        )
         if (
             index_compact_cadence is not None
             and (batch_id + 1) % index_compact_cadence == 0
@@ -954,10 +808,6 @@ def run_dedup_ingest_pipeline(
             # the manifest protocol, so replay interplay is a non-issue —
             # keyed to the mark, a replayed batch (a no-op below the
             # mark) never double-compacts.
-            from cdc_worker_spark.operators.dedup_index import (
-                compact_dedup_index,
-            )
-
             compact_dedup_index(spark, index_dir)
         if batch_metrics is not None:
             # per-batch cost split (SCALE.md §r10: the label-maintenance
@@ -991,12 +841,6 @@ def run_dedup_ingest_pipeline(
         crash-replay test), at the cost of one redundant fold over the
         replayed delta. If that redundancy ever matters at scale, retain
         consumed tokens in a folded-token ledger instead of clearing."""
-        from cdc_worker_spark.operators.index_layout import (
-            begin_segment,
-            publish_segment,
-            segment_registered,
-        )
-
         if segment_registered(index_dir, PENDING_TABLE, token):
             return
         delta_ids = batch_df.join(
@@ -1007,10 +851,8 @@ def run_dedup_ingest_pipeline(
         publish_segment(index_dir, PENDING_TABLE, token)
 
     def _extend_labels(
-        batch_df: DataFrame, rejected: DataFrame, stats: dict | None = None
+        batch_df: DataFrame, rejected: DataFrame, stats: dict | None
     ) -> None:
-        from cdc_worker_spark.operators.cluster_incr import delta_near_pairs
-
         # delta = batch minus rejected: accepted docs plus replay-detected
         # ones (already ingested by a crashed prior attempt whose pairs may
         # not have been folded yet). Null-text passthrough docs shingle to
@@ -1030,8 +872,6 @@ def run_dedup_ingest_pipeline(
         batch re-folds (idempotent) and re-decides. Returns the new
         bucket count (0 = monolithic) when a migration happened, else
         None."""
-        if label_layout is None or "touched_clusters" not in fold_stats:
-            return None
         n_labels = read_cluster_labels(spark, index_dir).count()
         label_layout.observe(fold_stats["touched_clusters"], n_labels)
         cur = _labels_buckets(index_dir)

@@ -199,7 +199,7 @@ def main() -> None:
         MONOLITHIC and hand the stream a LabelLayoutPolicy at its
         measured defaults — the loop must discover the K<<B regime from
         its own fold stats and migrate mid-stream; the layout gate then
-        asserts the policy's own sizing rule (pow2-floor of 4K, here
+        asserts the policy's own sizing rule (pow2-ceiling of 4K, here
         K=families-per-fold) rather than a caller-pinned count."""
         work = tempfile.mkdtemp(prefix=f"regime_b{'auto' if auto else (buckets or 0)}_")
         in_dir = f"{work}/in"
@@ -221,7 +221,8 @@ def main() -> None:
             label_cadence=args.label_cadence,
         ).awaitTermination()
         fold_pending_labels(spark, index_dir, corpus_dir)
-        # pre-seed: real ∪ filler, in the twin's layout
+        # pre-seed: real ∪ filler, in the twin's layout (this write
+        # declares the layout the stream folds into)
         real = read_cluster_labels(spark, index_dir)
         t0 = time.perf_counter()
         write_label_snapshot(
@@ -255,7 +256,6 @@ def main() -> None:
             max_files_per_trigger=1,
             near_policy="label",
             label_cadence=args.label_cadence,
-            label_buckets=None if auto else buckets,
             label_layout=policy,
             batch_metrics=metrics,
         ).awaitTermination()

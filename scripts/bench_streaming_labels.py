@@ -75,7 +75,8 @@ def main() -> None:
         in_dir = f"{workdir}/in"
 
         # bootstrap the steady state: index + corpus + published label
-        # snapshot over the 90% base (migration price, reported once)
+        # snapshot over the 90% base (migration price, reported once);
+        # this write declares the layout the stream then folds into
         t0 = time.perf_counter()
         build_dedup_index(base, index_dir)
         base.write.mode("overwrite").parquet(corpus_dir)
@@ -103,7 +104,6 @@ def main() -> None:
             near_policy="label",
             batch_metrics=metrics,
             label_cadence=label_cadence,
-            label_buckets=label_buckets,
         )
         query.awaitTermination()
         t_fin = time.perf_counter()

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 import pytest
@@ -16,9 +17,9 @@ from cdc_worker_spark.operators.index_layout import (
     read_meta,
 )
 from cdc_worker_spark.streaming.ingest import (
-    INGEST_LEDGER,
     INGEST_MARK_KEY,
     run_dedup_ingest_pipeline,
+    write_label_snapshot,
 )
 
 
@@ -96,9 +97,8 @@ def test_replayed_batches_do_not_double_append(spark, tmp_path):
     """Crash-replay semantics: if the engine re-delivers already-committed
     batch ids (fresh checkpoint, same inputs — the post-crash shape), the
     committed-batch mark turns the replays into no-ops: no probe, no
-    append, no pointer write. A legacy ledger is honored once, as its max,
-    and removed; a stream with another checkpoint has its own mark and
-    runs its batches."""
+    append, no pointer write. A stream with another checkpoint has its own
+    mark and runs its batches."""
     import shutil
 
     in_dir = str(tmp_path / "in")
@@ -141,14 +141,9 @@ def test_replayed_batches_do_not_double_append(spark, tmp_path):
     assert corpus() == [1, 2], f"replay double-appended: {corpus()}"
     assert (tmp_path / "idx" / "_CURRENT.json").read_text() == pointer
 
-    (tmp_path / "chk2").mkdir()
-    (tmp_path / "chk2" / INGEST_LEDGER).write_text("0\n1\n")
-    assert run("chk2") == []
-    assert mark("chk2") == 1
-    assert not (tmp_path / "chk2" / INGEST_LEDGER).exists()
-
     assert run("chk3") == [0, 1]  # replay-detected by the probe instead
     assert corpus() == [1, 2]
+    assert mark("chk3") == 1
 
 
 def test_intra_batch_near_dups_collapse(spark, tmp_path):
@@ -277,14 +272,11 @@ def test_label_mode_keeps_near_dups_and_maintains_cluster_labels(
     assert got == want and {c for _, c in got} == {1, 4}, f"{got} vs {want}"
 
 
-@pytest.mark.slow
 def test_label_mode_crash_replay_lands_on_same_labels(spark, tmp_path):
-    """Chaos window for label maintenance: Spark checkpoint AND ledger lost
+    """Chaos window for label maintenance: Spark checkpoint AND mark lost
     after a completed run — the full replay re-probes, detects its own docs
     as 'replay', re-folds the same pairs (idempotent), and the label
     snapshot still equals the batch recompute."""
-    import shutil
-
     base = "the quick brown fox jumps over the lazy dog tonight in the park"
     in_dir = str(tmp_path / "in")
     _write_batch(in_dir, "b0.jsonl", [
@@ -314,6 +306,41 @@ def test_label_mode_crash_replay_lands_on_same_labels(spark, tmp_path):
     again = _label_rows(spark, tmp_path / "idx")
     assert again == first
     assert again == _batch_recompute_labels(spark, tmp_path / "corpus")
+
+
+def test_label_fold_without_policy_skips_touched_cluster_count(
+    spark, tmp_path, monkeypatch
+):
+    """Only a LabelLayoutPolicy reads a fold's touched-cluster count, and
+    on the monolithic layout the count costs two extra Spark jobs per
+    fold: a label-mode stream without a policy must not ask for it."""
+    from cdc_worker_spark.streaming import ingest
+
+    seen: list = []
+    real = ingest.apply_label_pairs
+
+    def spy(spark, index_dir, pairs, stats=None):
+        seen.append(stats)
+        return real(spark, index_dir, pairs, stats=stats)
+
+    monkeypatch.setattr(ingest, "apply_label_pairs", spy)
+    base = "the quick brown fox jumps over the lazy dog tonight in the park"
+    in_dir = str(tmp_path / "in")
+    _write_batch(in_dir, "b0.jsonl", [
+        _doc(1, base),
+        _doc(2, base.replace("dog", "cat")),
+    ])
+    run_dedup_ingest_pipeline(
+        spark,
+        input_dir=in_dir,
+        index_dir=str(tmp_path / "idx"),
+        corpus_dir=str(tmp_path / "corpus"),
+        rejects_dir=str(tmp_path / "rejects"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        near_policy="label",
+    ).awaitTermination(120)
+    assert seen == [None]
+    assert _label_rows(spark, tmp_path / "idx") == [(1, 1), (2, 1)]
 
 
 def test_crash_before_ledger_write_is_absorbed_by_replay_detection(spark, tmp_path):
@@ -461,10 +488,11 @@ def test_label_cadence_crash_replay_lands_on_same_labels(spark, tmp_path):
 
 @pytest.mark.slow
 def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
-    """label_buckets=4: the bucket-partitioned snapshot must equal the
-    monolithic mode AND the batch recompute after the same stream, and a
-    fold must NOT rewrite buckets its delta never touches (the O(corpus)
-    rewrite is exactly what the layout exists to avoid)."""
+    """A layout declared once with write_label_snapshot(buckets=4): the
+    bucket-partitioned snapshot must equal the monolithic mode AND the
+    batch recompute after the same stream, and a fold must NOT rewrite
+    buckets its delta never touches (the O(corpus) rewrite is exactly
+    what the layout exists to avoid)."""
     from cdc_worker_spark.operators.index_layout import read_pointer
     from cdc_worker_spark.streaming.ingest import (
         _bucket_table,
@@ -481,7 +509,14 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
         [_doc(20, other.replace("ships", "boats")), _doc(21, base)],
     ]
 
-    def run(root, **extra):
+    def run(root, buckets=None, **extra):
+        if buckets:
+            write_label_snapshot(
+                spark,
+                str(root / "idx"),
+                spark.createDataFrame([], "doc_id long, cluster_id long"),
+                buckets=buckets,
+            )
         in_dir = str(root / "in")
         for k, rows in enumerate(batches):
             _write_batch(in_dir, f"b{k}.jsonl", rows)
@@ -499,7 +534,7 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
         return root / "idx"
 
     mono = run(tmp_path / "mono")
-    part = run(tmp_path / "part", label_buckets=4)
+    part = run(tmp_path / "part", buckets=4)
     assert _labels_buckets(str(part)) == 4
     got_m = _label_rows(spark, mono)
     got_p = _label_rows(spark, part)
@@ -509,6 +544,7 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
 
     # untouched-bucket stability: batch 4 pairs doc 30 with cluster 11
     # (bucket 11%4=3); cluster 1's buckets must keep their generations.
+    # The restart names no layout: it folds into the committed one.
     ptr_before = read_pointer(str(part))
     before = {
         b: ptr_before[_bucket_table(b)]["base"]
@@ -526,7 +562,6 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
         rejects_dir=str(tmp_path / "part" / "rejects"),
         checkpoint_dir=str(tmp_path / "part" / "chk"),
         near_policy="label",
-        label_buckets=4,
     )
     run_dedup_ingest_pipeline(spark, **kw).awaitTermination(120)
     got = _label_rows(spark, part)
@@ -542,9 +577,10 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
     }
     touched = {b for b in before if before[b] != after.get(b)}
     assert touched == {3}, (before, after)  # only cluster 11's bucket
+    assert _labels_buckets(str(part)) == 4
 
     # cadence mode over the partitioned layout composes too
-    cad = run(tmp_path / "cad", label_buckets=4, label_cadence=2)
+    cad = run(tmp_path / "cad", buckets=4, label_cadence=2)
     fold_pending_labels(
         spark, str(cad), str(tmp_path / "cad" / "corpus")
     )
@@ -552,12 +588,11 @@ def test_partitioned_labels_equal_monolithic_and_batch(spark, tmp_path):
 
 
 def test_partitioned_migration_splits_existing_monolithic(spark, tmp_path):
-    """Declaring label_buckets over an index with a MONOLITHIC snapshot
-    must migrate it once and keep every label."""
+    """Declaring buckets over an index with a MONOLITHIC snapshot must
+    migrate it once and keep every label."""
     from cdc_worker_spark.streaming.ingest import (
         _labels_buckets,
         read_cluster_labels,
-        write_label_snapshot,
     )
 
     idx = str(tmp_path / "idx")
@@ -593,7 +628,6 @@ def test_partitioned_migration_drops_stale_monolithic_and_buckets(
         _bucket_table,
         _labels_buckets,
         read_cluster_labels,
-        write_label_snapshot,
     )
 
     idx = str(tmp_path / "idx")
@@ -640,10 +674,7 @@ def test_bucket_files_keep_doc_id_sorted_row_groups(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from cdc_worker_spark.operators.index_layout import resolve_table
-    from cdc_worker_spark.streaming.ingest import (
-        _bucket_table,
-        write_label_snapshot,
-    )
+    from cdc_worker_spark.streaming.ingest import _bucket_table
 
     idx = str(tmp_path / "idx")
     # enough rows across enough partitions that an unsorted write would
@@ -669,67 +700,46 @@ def test_bucket_files_keep_doc_id_sorted_row_groups(spark, tmp_path):
 
 def test_bucket_count_commits_atomically_in_pointer(spark, tmp_path):
     """ADVICE r11: the bucket count must flip in the SAME pointer write
-    as the bucket generations — a separate side-file commit gives a
-    concurrent reader a mixed layout/pointer view on grow/shrink
-    (duplicates on shrink, missing rows on grow). The pointer meta is
-    authoritative; the legacy side file is a read-only fallback that the
-    next snapshot write migrates away."""
-    import json as _json
-
-    from cdc_worker_spark.operators.index_layout import read_meta
+    as the bucket generations — a separate commit gives a concurrent
+    reader a mixed layout/pointer view on grow/shrink (duplicates on
+    shrink, missing rows on grow). The pointer meta is the only record
+    of the layout."""
+    from cdc_worker_spark.operators.index_layout import read_pointer
     from cdc_worker_spark.streaming.ingest import (
-        LABELS_META,
         LABELS_META_KEY,
-        _labels_buckets,
+        LABELS_TABLE,
         read_cluster_labels,
-        write_label_snapshot,
     )
 
     idx = str(tmp_path / "idx")
     rows = [(i, i % 7) for i in range(50)]
     labels = spark.createDataFrame(rows, "doc_id long, cluster_id long")
     write_label_snapshot(spark, idx, labels, buckets=4)
-    # count lives in the pointer; no side file exists to drift from it
     assert read_meta(idx)[LABELS_META_KEY] == 4
-    assert not os.path.exists(os.path.join(idx, LABELS_META))
 
-    # grow 4 -> 8: pointer meta and generations flip together, and a
-    # stale legacy side file (planted here) cannot override the pointer
+    # grow 4 -> 8: pointer meta and generations flip together
     write_label_snapshot(
         spark, idx, read_cluster_labels(spark, idx), buckets=8
     )
-    with open(os.path.join(idx, LABELS_META), "w") as fh:
-        _json.dump({"buckets": 2}, fh)  # adversarial stale side file
-    assert _labels_buckets(idx) == 8  # pointer wins
+    assert read_meta(idx)[LABELS_META_KEY] == 8
     got = sorted(
         (r.doc_id, r.cluster_id)
         for r in read_cluster_labels(spark, idx).collect()
     )
     assert got == sorted(rows)
 
-    # legacy-only index (pre-r12 on-disk layout): side file still reads,
-    # and the next snapshot write migrates the count into the pointer
-    legacy = str(tmp_path / "legacy")
-    write_label_snapshot(spark, legacy, labels, buckets=4)
-    # simulate pre-r12: strip the pointer meta, restore the side file
-    from cdc_worker_spark.operators.index_layout import (
-        META_KEY,
-        _pointer_path,
-        _read_raw,
-    )
-
-    raw = _read_raw(legacy)
-    raw.pop(META_KEY, None)
-    with open(_pointer_path(legacy), "w") as fh:
-        _json.dump(raw, fh)
-    with open(os.path.join(legacy, LABELS_META), "w") as fh:
-        _json.dump({"buckets": 4}, fh)
-    assert _labels_buckets(legacy) == 4  # fallback path
+    # 8 -> monolithic: the meta key goes in the same flip, and the
+    # bucket tables the layout no longer reads leave the pointer
     write_label_snapshot(
-        spark, legacy, read_cluster_labels(spark, legacy)
+        spark, idx, read_cluster_labels(spark, idx), buckets=0
     )
-    assert read_meta(legacy)[LABELS_META_KEY] == 4  # migrated
-    assert not os.path.exists(os.path.join(legacy, LABELS_META))
+    assert LABELS_META_KEY not in read_meta(idx)
+    assert list(read_pointer(idx)) == [LABELS_TABLE]
+    got = sorted(
+        (r.doc_id, r.cluster_id)
+        for r in read_cluster_labels(spark, idx).collect()
+    )
+    assert got == sorted(rows)
 
 
 def test_label_layout_policy_matrix():
@@ -822,53 +832,6 @@ def test_auto_layout_selects_bucketed_under_low_k_regime(spark, tmp_path):
     got = _label_rows(spark, tmp_path / "idx")
     want = _batch_recompute_labels(spark, tmp_path / "corpus")
     assert got == want, f"{got} vs {want}"
-    # policy + fixed label_buckets together must refuse
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        run_dedup_ingest_pipeline(
-            spark,
-            input_dir=in_dir,
-            index_dir=str(tmp_path / "idx2"),
-            corpus_dir=str(tmp_path / "c2"),
-            rejects_dir=str(tmp_path / "r2"),
-            checkpoint_dir=str(tmp_path / "chk2"),
-            near_policy="label",
-            label_layout=LabelLayoutPolicy(),
-            label_buckets=4,
-        )
-
-
-def test_pipeline_raises_on_label_bucket_mismatch(spark, tmp_path):
-    """ADVICE r10: run_dedup_ingest_pipeline must refuse a label_buckets
-    that disagrees with the committed layout meta — an operator who asks
-    for 64 buckets must never silently run on 16."""
-    import pytest
-
-    from cdc_worker_spark.streaming.ingest import write_label_snapshot
-
-    idx = str(tmp_path / "idx")
-    write_label_snapshot(
-        spark,
-        idx,
-        spark.createDataFrame(
-            [(1, 1)], "doc_id long, cluster_id long"
-        ),
-        buckets=4,
-    )
-    in_dir = str(tmp_path / "in")
-    _write_batch(in_dir, "b0.jsonl", [_doc(1, "some document text here")])
-    with pytest.raises(ValueError, match="label layout mismatch"):
-        run_dedup_ingest_pipeline(
-            spark,
-            input_dir=in_dir,
-            index_dir=idx,
-            corpus_dir=str(tmp_path / "corpus"),
-            rejects_dir=str(tmp_path / "rejects"),
-            checkpoint_dir=str(tmp_path / "chk"),
-            near_policy="label",
-            label_buckets=8,
-        )
 
 
 @pytest.mark.slow
@@ -921,3 +884,25 @@ def test_index_compact_cadence_folds_segments_and_keeps_semantics(
     }
     assert corpus == [1, 2, 3, 4, 51], corpus
     assert rejects == {50: (1, "exact")}, rejects
+
+
+def test_label_layout_and_jaccard_verify_have_one_source():
+    """The manifest pointer is the only record of the label layout (no
+    pipeline parameter, side file or checkpoint ledger names it), and the
+    exact shingle-Jaccard verify lives in one module."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cdc_worker_spark")
+    retired = re.compile(r"label_buckets|\bLABELS_META\b|INGEST_LEDGER")
+    hits, verify = set(), set()
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as f:
+                    text = f.read()
+                if retired.search(text):
+                    hits.add(os.path.relpath(path, pkg))
+                if "array_intersect(" in text:
+                    verify.add(os.path.relpath(path, pkg))
+    assert hits == set(), sorted(hits)
+    assert verify == {"operators/dedup.py"}, sorted(verify)
